@@ -242,20 +242,16 @@ object WeakScale {
           buildSemIdx(cells, math.max(semOccMaxCell,
             math.ceil(4.0 * k * semOccN1 / cells).toInt))
         }
-      // PREBUILD for the sink-leg A/B pair: ONE materialized
+      // PREBUILD for the sink-leg row: ONE materialized
       // ArchiveIngestBatch carrier with a DELIBERATELY media-heavy
       // payload mix (512 objects × 512 KB = 256 MB of write IO on
       // the media leg vs a docs+bands+sets shuffle-and-write on the
-      // doc leg), so the serial-vs-overlap question is asked where
-      // it matters. Everything is pinned OUTSIDE the timed region —
-      // the rungs time ONLY the sink call (both appends, to
-      // independent corpus paths and index roots per variant).
-      val sinkABNeeded = selected("archive_sink_serial") ||
-        selected("archive_sink_overlap")
+      // doc leg), so the leg overlap is timed where it matters.
+      // Everything is pinned OUTSIDE the timed region — the rung
+      // times ONLY the sink call (both appends).
       val sinkFix: Option[(graft.pipelines.StreamingIngestPipeline.ArchiveIngestBatch,
-          graft.pipelines.StreamingIngestPipeline.ArchiveIngestBatch => Unit,
           graft.pipelines.StreamingIngestPipeline.ArchiveIngestBatch => Unit, Long)] =
-        if (!sinkABNeeded) None
+        if (!selected("archive_sink_overlap")) None
         else {
           import spark.implicits._
           import graft.pipelines.IngestSinks
@@ -287,23 +283,17 @@ object WeakScale {
           val emptyMedia = Seq.empty[(Long, String, Array[Byte])]
             .toDF("media_id", "kind", "payload")
             .as[graft.multimodal.Multimodal.Media]
-          def mkRoots(tag: String) = {
-            val r = java.nio.file.Files
-              .createTempDirectory(s"graft_sinkab_$tag").toString
-            IngestSinks.initTextIndex(spark, s"$r/tidx", emptyDocs,
-              "doc_id", "text")
-            IngestSinks.initMediaIndex(spark, s"$r/midx", emptyMedia)
-            r
-          }
-          val rs = mkRoots("serial"); val ro = mkRoots("overlap")
+          val r = java.nio.file.Files
+            .createTempDirectory("graft_sinkab_overlap").toString
+          IngestSinks.initTextIndex(spark, s"$r/tidx", emptyDocs,
+            "doc_id", "text")
+          IngestSinks.initMediaIndex(spark, s"$r/midx", emptyMedia)
           val fix = graft.pipelines.StreamingIngestPipeline
             .ArchiveIngestBatch(dFrame, tDelta, mFrame, mdFrame, 0L,
               dFrame, () => dFrame.limit(0))
           Some((fix,
-            IngestSinks.archiveSink(spark, s"$rs/dcorpus", s"$rs/mcorpus",
-              s"$rs/tidx", s"$rs/midx"),
-            IngestSinks.archiveSink(spark, s"$ro/dcorpus", s"$ro/mcorpus",
-              s"$ro/tidx", s"$ro/midx", overlapLegs = true),
+            IngestSinks.archiveSink(spark, s"$r/dcorpus", s"$r/mcorpus",
+              s"$r/tidx", s"$r/midx"),
             dFrame.count() + 512L))
         }
       // the archives ≫ cores fixture: 512 SMALL archives over
@@ -442,18 +432,12 @@ object WeakScale {
               out.mediaDelta.count()
           } finally { routed.unpersist(); () }
         }),
-        // the sink-leg A/B pair (verdict r16 item 3): SAME pinned
-        // batch, both appends per call — serial submission vs
-        // two-thread overlapped. Constant-size (the sink axis is the
-        // batch, not history) — compare the SEC columns of the two
-        // rows at any one rung.
-        ("archive_sink_serial", D, () => {
-          val (fix, serial, _, n) = sinkFix.get
-          serial(fix); n
-        }),
+        // the sink-leg row: the pinned batch, both appends per call
+        // with the legs overlapped. Constant-size (the sink axis is
+        // the batch, not history).
         ("archive_sink_overlap", D, () => {
-          val (fix, _, overlap, n) = sinkFix.get
-          overlap(fix); n
+          val (fix, sink, n) = sinkFix.get
+          sink(fix); n
         }),
         // the SHARED single-pass splitter: one inflate+parse feeds both
         // legs; sums force full strip/sniff + column materialization so

@@ -1,25 +1,23 @@
 package graft.io
 
 import graft.multimodal.{MediaIndex, Multimodal}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 
-/** Media-hash-index persistence — [[TextIndexArtifacts]]' twin for
-  * the incremental perceptual media family: the [[MediaIndex]] hash
+/** Media-hash-index persistence — the [[IndexStore]] for the
+  * incremental perceptual media family: the [[MediaIndex]] hash
   * relation IS parquet state between ingest runs, and the judge's
   * thresholds (per-kind max Hamming distances, the video overlap
   * floor, the census cap) must match across runs or verdicts drift
-  * silently between batches. One relation (`<path>/index`, the
-  * [[MediaIndex.mediaHashIndex]] rows) plus a one-row params sidecar
-  * (`<path>/params`). Appends go to the index (the
-  * [[MediaIndex.ingestStep]] delta); params are written once.
-  * Retraction mirrors [[TextIndexArtifacts]] (see its object doc for
-  * the takedown semantics): [[retract]] appends ids to an id-sized
-  * `<path>/tombstones` relation, [[load]] filters them out through a
-  * broadcast anti-join (the index keeps streaming map-side — the
-  * judges' plan contract is unchanged), [[compact]] applies them
-  * physically and drops the relation. */
-object MediaIndexArtifacts {
+  * silently between batches. One appended relation (`<path>/index`,
+  * the [[MediaIndex.mediaHashIndex]] rows, clustered by fingerprint so
+  * parquet row-group stats support runtime-filter skipping of the byte
+  * leg's probes at scale), the one-row `<path>/params`, and optionally
+  * `<path>/tombstones` ((media_id)). Appends go to the index (the
+  * [[MediaIndex.ingestStep]] delta). */
+object MediaIndexArtifacts extends IndexStore[DataFrame]("media_id",
+  Seq(IndexStore.Relation("index", Seq("fp"))), Seq("params")) {
+
+  type Index = PersistedMediaIndex
 
   /** A loaded index: the hash relation plus the judge thresholds it
     * was operated with. */
@@ -50,77 +48,30 @@ object MediaIndexArtifacts {
   }
 
   /** Index `corpus` and write the artifact. Consumers LOAD (the
-    * TextIndexArtifacts round-trip rule). The index relation is
-    * hash-sized (~50 bytes a row) — payload bytes never reach disk
-    * here. Sorted by fingerprint so parquet row-group stats support
-    * runtime-filter skipping of the byte leg's probes at scale. */
+    * [[TextIndexArtifacts.build]] round-trip rule). The index relation
+    * is hash-sized (~50 bytes a row) — payload bytes never reach disk
+    * here. */
   def build(path: String, corpus: Dataset[Multimodal.Media],
             imageMaxDist: Int = 6, audioMaxDist: Int = 3,
             videoMaxDist: Int = 3, videoMinOverlapBp: Int = 6000,
             maxBucket: Int = 1024): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    MediaIndex.mediaHashIndex(corpus.localCheckpoint(true))
-      .sortWithinPartitions(col("fp"))
-      .write.mode("overwrite").parquet(s"$path/index")
-    Seq((imageMaxDist, audioMaxDist, videoMaxDist, videoMinOverlapBp,
-        maxBucket))
-      .toDF("image_max_dist", "audio_max_dist", "video_max_dist",
-        "video_min_overlap_bp", "max_bucket")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+    writeRelations(path,
+      Seq(MediaIndex.mediaHashIndex(corpus.localCheckpoint(true))),
+      "overwrite")
+    writeOnceRelation(path, "params",
+      Seq((imageMaxDist, audioMaxDist, videoMaxDist, videoMinOverlapBp,
+          maxBucket))
+        .toDF("image_max_dist", "audio_max_dist", "video_max_dist",
+          "video_min_overlap_bp", "max_bucket"))
   }
 
-  /** Append an ingest delta ([[MediaIndex.ingestStep]]'s second
-    * result — replay-idempotent upstream). `media_id` is normalized
-    * to LONG (the TextIndexArtifacts build rule): a caller
-    * synthesizing int ids would otherwise leave mixed INT32/INT64
-    * files in one directory, and parquet schema inference reads one
-    * footer. */
-  def append(path: String, delta: DataFrame): Unit =
-    delta.withColumn("media_id", col("media_id").cast("long"))
-      .sortWithinPartitions(col("fp"))
-      .write.mode("append").parquet(s"$path/index")
+  protected def parts(delta: DataFrame): Seq[DataFrame] = Seq(delta)
 
-  /** RETRACT ids (takedowns — the [[TextIndexArtifacts.retract]]
-    * twin): appends the first column of `ids`, cast to long, to the
-    * tombstone relation. O(|ids|), no index rewrite. */
-  def retract(path: String, ids: DataFrame): Unit =
-    ids.select(col(ids.columns.head).cast("long").as("media_id"))
-      .distinct()
-      .coalesce(1).write.mode("append").parquet(s"$path/tombstones")
-
-  private def minusTombstones(spark: SparkSession, rel: DataFrame,
-      path: String): DataFrame =
-    if (!TextIndexArtifacts.dirExists(spark, s"$path/tombstones")) rel
-    else rel.join(
-      broadcast(spark.read.parquet(s"$path/tombstones")
-        .select(col("media_id")).distinct()),
-      Seq("media_id"), "left_anti")
-
-  def load(spark: SparkSession, path: String): PersistedMediaIndex = {
-    val p = spark.read.parquet(s"$path/params").collect()
-    require(p.length == 1, s"expected one params row at $path, got ${p.length}")
-    val r = p.head
-    PersistedMediaIndex(
-      minusTombstones(spark, TextIndexArtifacts.readIdNormalized(
-        spark, s"$path/index", "media_id"), path),
+  protected def open(r: Row, rel: String => DataFrame): PersistedMediaIndex =
+    PersistedMediaIndex(rel("index"),
       r.getAs[Int]("image_max_dist"), r.getAs[Int]("audio_max_dist"),
       r.getAs[Int]("video_max_dist"), r.getAs[Int]("video_min_overlap_bp"),
       r.getAs[Int]("max_bucket"))
-  }
-
-  /** Compaction of append piles (the TextIndexArtifacts compact
-    * discipline: write-to-side, caller swaps by rename) — layout plus
-    * the physical application of any tombstones; the compacted copy
-    * carries none. */
-  def compact(spark: SparkSession, fromPath: String, toPath: String,
-              files: Int = 32): Unit = {
-    minusTombstones(spark, TextIndexArtifacts.readIdNormalized(
-        spark, s"$fromPath/index", "media_id"), fromPath)
-      .repartition(files, col("fp"))
-      .sortWithinPartitions(col("fp"))
-      .write.mode("overwrite").parquet(s"$toPath/index")
-    spark.read.parquet(s"$fromPath/params")
-      .coalesce(1).write.mode("overwrite").parquet(s"$toPath/params")
-  }
 }

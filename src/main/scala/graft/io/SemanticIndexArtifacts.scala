@@ -1,31 +1,38 @@
 package graft.io
 
 import graft.operators.SemanticIndex
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Semantic-dedup-index persistence — the third member of the
-  * artifact family ([[TextIndexArtifacts]], [[MediaIndexArtifacts]]):
-  * the [[SemanticIndex]] relations ARE parquet state between ingest
-  * runs, and the judge's parameters (threshold, nProbe, maxCell) must
-  * match across runs or verdicts drift silently. The CENTROIDS ship
-  * inside the artifact — they are frozen model state (assignment must
-  * be identical across batches; the [[SemanticIndex]] frozen-cells
-  * rule), so a loaded index can only be judged against the cells it
-  * was built with.
+/** Semantic-dedup-index persistence — the [[IndexStore]] for the
+  * incremental embedding family: the [[SemanticIndex]] relations ARE
+  * parquet state between ingest runs, and the judge's parameters
+  * (threshold, nProbe, maxCell) must match across runs or verdicts
+  * drift silently. The CENTROIDS ship inside the artifact — they are
+  * frozen model state (assignment must be identical across batches;
+  * the [[SemanticIndex]] frozen-cells rule), so a loaded index can
+  * only be judged against the cells it was built with.
   *
-  * Layout: `<path>/centroids` ((cell, cvec) — cell-count sized),
-  * `<path>/assigned` ((id, cell, vec) — the admitted vectors, written
-  * cell-clustered so parquet row-group stats support cell skipping),
-  * `<path>/params` (one row), and optionally `<path>/tombstones`
-  * ((id) — retracted; the [[TextIndexArtifacts]] takedown semantics:
-  * a retracted keeper stops matching, former dups survive or re-elect
-  * the next smallest, and the content may re-enter under a new id).
-  * Appends go to `assigned` (the [[SemanticIndex.ingestStep]] delta);
-  * centroids and params are written once. Ids are normalized to LONG
-  * on disk and reads bridge legacy INT32 footers
-  * ([[TextIndexArtifacts.readIdNormalized]]). */
-object SemanticIndexArtifacts {
+  * Layout: `<path>/centroids` ((cell, cvec) — cell-count sized,
+  * write-once), `<path>/assigned` ((id, cell, vec) — the admitted
+  * vectors, cell-clustered so parquet row-group stats support cell
+  * skipping), `<path>/params` (one row), and optionally
+  * `<path>/tombstones` ((id)). Appends go to `assigned` (the
+  * [[SemanticIndex.ingestStep]] delta).
+  *
+  * Honest retraction boundary: a tombstone removes the vector from
+  * the ASSIGNED relation (it stops matching and stops winning
+  * elections), but the CENTROIDS are frozen model state — a centroid
+  * drawn from a later-retracted vector keeps defining its cell's
+  * geometry, exactly as a trained LM or tokenizer keeps statistics
+  * from retracted training text until retrained. A takedown policy
+  * that extends to derived model state requires an index REBUILD over
+  * the retained corpus ([[build]] or [[recell]]), not a tombstone. */
+object SemanticIndexArtifacts extends IndexStore[DataFrame]("id",
+  Seq(IndexStore.Relation("assigned", Seq("cell"))),
+  Seq("centroids", "params")) {
+
+  type Index = PersistedSemanticIndex
 
   /** A loaded index: relations plus the build/judge parameters. */
   final case class PersistedSemanticIndex(centroids: DataFrame,
@@ -82,11 +89,8 @@ object SemanticIndexArtifacts {
     import spark.implicits._
     val (centroids, assigned) = SemanticIndex.buildIndex(corpus, idCol,
       vecCol, nCells)
-    centroids.coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/centroids")
-    assigned.withColumn("id", col("id").cast("long"))
-      .sortWithinPartitions(col("cell"))
-      .write.mode("overwrite").parquet(s"$path/assigned")
+    writeOnceRelation(path, "centroids", centroids)
+    writeRelations(path, Seq(assigned), "overwrite")
     // auto guard reads the row count off the just-written footers
     // (metadata-cheap) — deriving it BEFORE the write would re-run
     // the assignment pass
@@ -94,52 +98,8 @@ object SemanticIndexArtifacts {
       if (maxCell > 0) maxCell
       else math.max(64, math.ceil(4.0 *
         spark.read.parquet(s"$path/assigned").count() / nCells).toInt)
-    Seq((threshold, nProbe, mc, nCells))
-      .toDF("threshold", "n_probe", "max_cell", "n_cells")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
-  }
-
-  /** Append an ingest delta ([[SemanticIndex.ingestStep]]'s second
-    * result — replay-idempotent upstream); ids normalized to LONG,
-    * cell-clustered writes (the build rule). */
-  def append(path: String, delta: DataFrame): Unit =
-    delta.withColumn("id", col("id").cast("long"))
-      .sortWithinPartitions(col("cell"))
-      .write.mode("append").parquet(s"$path/assigned")
-
-  /** RETRACT ids (takedowns — the [[TextIndexArtifacts.retract]]
-    * semantics): O(|ids|), no index rewrite; [[load]] filters,
-    * [[compact]] applies physically. Honest boundary: retraction
-    * removes the vector from the ASSIGNED relation (it stops
-    * matching and stops winning elections), but the CENTROIDS are
-    * frozen model state — a centroid drawn from a later-retracted
-    * vector keeps defining its cell's geometry, exactly as a trained
-    * LM or tokenizer keeps statistics from retracted training text
-    * until retrained. A takedown policy that extends to derived
-    * model state requires an index REBUILD over the retained corpus
-    * ([[build]]), not a tombstone. */
-  def retract(path: String, ids: DataFrame): Unit =
-    ids.select(col(ids.columns.head).cast("long").as("id")).distinct()
-      .coalesce(1).write.mode("append").parquet(s"$path/tombstones")
-
-  private def minusTombstones(spark: SparkSession, rel: DataFrame,
-      path: String): DataFrame =
-    if (!TextIndexArtifacts.dirExists(spark, s"$path/tombstones")) rel
-    else rel.join(
-      broadcast(spark.read.parquet(s"$path/tombstones")
-        .select(col("id")).distinct()),
-      Seq("id"), "left_anti")
-
-  def load(spark: SparkSession, path: String): PersistedSemanticIndex = {
-    val p = spark.read.parquet(s"$path/params").collect()
-    require(p.length == 1, s"expected one params row at $path, got ${p.length}")
-    val r = p.head
-    PersistedSemanticIndex(
-      spark.read.parquet(s"$path/centroids"),
-      minusTombstones(spark, TextIndexArtifacts.readIdNormalized(
-        spark, s"$path/assigned", "id"), path),
-      r.getAs[Double]("threshold"), r.getAs[Int]("n_probe"),
-      r.getAs[Int]("max_cell"))
+    writeOnceRelation(path, "params", Seq((threshold, nProbe, mc, nCells))
+      .toDF("threshold", "n_probe", "max_cell", "n_cells"))
   }
 
   /** RE-CELL rebuild — the occupancy alarm's consequence
@@ -157,10 +117,8 @@ object SemanticIndexArtifacts {
     * compaction cadence, never silently inside a batch. */
   def recell(spark: SparkSession, fromPath: String, toPath: String,
              nCells: Int = 0): Unit = {
-    val p = spark.read.parquet(s"$fromPath/params").collect().head
-    val vecs = minusTombstones(spark, TextIndexArtifacts.readIdNormalized(
-        spark, s"$fromPath/assigned", "id"), fromPath)
-      .select(col("id"), col("vec"))
+    val p = params(spark, fromPath)
+    val vecs = live(spark, fromPath)("assigned").select(col("id"), col("vec"))
     val n = vecs.count()
     val k =
       if (nCells > 0) nCells
@@ -178,19 +136,10 @@ object SemanticIndexArtifacts {
       p.getAs[Int]("n_probe"), newMax)
   }
 
-  /** Compaction (the TextIndexArtifacts discipline: write-to-side,
-    * caller swaps by rename): layout + physical tombstone
-    * application; the compacted copy carries no tombstone relation. */
-  def compact(spark: SparkSession, fromPath: String, toPath: String,
-              files: Int = 32): Unit = {
-    minusTombstones(spark, TextIndexArtifacts.readIdNormalized(
-        spark, s"$fromPath/assigned", "id"), fromPath)
-      .repartition(files, col("cell"))
-      .sortWithinPartitions(col("cell"))
-      .write.mode("overwrite").parquet(s"$toPath/assigned")
-    spark.read.parquet(s"$fromPath/centroids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$toPath/centroids")
-    spark.read.parquet(s"$fromPath/params")
-      .coalesce(1).write.mode("overwrite").parquet(s"$toPath/params")
-  }
+  protected def parts(delta: DataFrame): Seq[DataFrame] = Seq(delta)
+
+  protected def open(r: Row, rel: String => DataFrame): PersistedSemanticIndex =
+    PersistedSemanticIndex(rel("centroids"), rel("assigned"),
+      r.getAs[Double]("threshold"), r.getAs[Int]("n_probe"),
+      r.getAs[Int]("max_cell"))
 }

@@ -1,44 +1,29 @@
 package graft.io
 
 import graft.operators.TextIndex
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
 
-/** Text-dedup-index persistence — [[VectorIndexArtifacts]]' twin for
-  * the incremental text near-dup family: the [[TextIndex]] relations
-  * ARE parquet state between ingest runs, and the judge's parameters
+/** Text-dedup-index persistence — the [[IndexStore]] for the
+  * incremental text near-dup family: the [[TextIndex]] relations ARE
+  * parquet state between ingest runs, and the judge's parameters
   * (shingleN, numHashes, bands, seed, threshold, maxBucket) must match
   * the build's EXACTLY or verdicts silently change (different
   * signatures band differently; a different shingle width changes
   * every Jaccard). `Decontaminate.NearDupIndex` carries its parameters
   * on the case class for precisely that reason, but it is SESSION
-  * state — this artifact writes the parameters beside the relations as
-  * a one-row parquet sidecar, so a loaded index can only be judged
-  * with the parameters it was built with.
+  * state — this artifact writes them beside the relations.
   *
-  * Layout: `<path>/bands` ((doc, band, sig) — the probe relation),
-  * `<path>/sets` ((doc, shs) — the verification relation),
-  * `<path>/params` (one row), and optionally `<path>/tombstones`
-  * ((doc) — RETRACTED ids, see [[retract]]). Appends go to
-  * bands/sets (the [[TextIndex.ingestStep]] delta); params are
-  * written once.
-  *
-  * Retraction: a 100 TB pipeline eventually must REMOVE docs from the
-  * index (takedowns, license changes, quality recalls), and an
-  * append-only index keeps a removed doc winning keeper elections
-  * forever — smallest-id precedence makes stale early ids especially
-  * sticky. [[retract]] appends ids to an id-sized tombstone relation;
-  * [[load]] serves the index with tombstoned rows FILTERED (a
-  * broadcast anti-join on the history side — tombstones broadcast,
-  * history still streams map-side, so the judges' no-history-shuffle
-  * contract is untouched); [[compact]] applies them physically and
-  * drops the tombstone relation. Semantics after retracting id X: X
-  * stops matching (a former dup of X now survives, or re-elects the
-  * next-smallest matching keeper), and a RE-CRAWL of X's content
-  * re-enters the corpus and the index under its new id — retraction
-  * removes the INDEX ENTRY, not the content's right to exist; policy
-  * blocking is a different gate (URL blocklists, hash denylists). */
-object TextIndexArtifacts {
+  * Layout: `<path>/bands` ((doc, band, sig) — the probe relation,
+  * clustered by (band, sig)), `<path>/sets` ((doc, shs) — the
+  * verification relation, compacted by doc), `<path>/params` (one
+  * row), and optionally `<path>/tombstones` ((doc)). Appends go to
+  * bands/sets (the [[TextIndex.ingestStep]] delta). */
+object TextIndexArtifacts extends IndexStore[(DataFrame, DataFrame)]("doc",
+  Seq(IndexStore.Relation("bands", Seq("band", "sig")),
+    IndexStore.Relation("sets", Seq("doc"), sorted = false)),
+  Seq("params")) {
+
+  type Index = PersistedTextIndex
 
   /** A loaded index: the two relations plus the build parameters the
     * judge must reuse. The relations are plain parquet reads — no
@@ -98,131 +83,19 @@ object TextIndexArtifacts {
     // never clearCache() (it would evict the CALLER's cached state)
     val (b, s) = TextIndex.buildIndex(corpus, idCol, textCol, shingleN,
       numHashes, bands, seed, cache = false)
-    // sorted within partitions so parquet row-group min/max stats on
-    // (band, sig) support runtime-filter row-group skipping at scale
-    // (the TextIndex.buildIndex deployment note); correctness never
-    // depends on the layout. Ids normalized to LONG on disk (the
-    // append note below): the judge accepts int OR long batches, and
-    // without one stable on-disk type an int-id build followed by a
-    // long-id append (or vice versa) leaves mixed INT32/INT64 files
-    // in one directory — parquet schema inference then reads from
-    // one footer and can mis-read or fail on the others.
-    b.withColumn("doc", col("doc").cast("long"))
-      .sortWithinPartitions(col("band"), col("sig"))
-      .write.mode("overwrite").parquet(s"$path/bands")
-    s.withColumn("doc", col("doc").cast("long"))
-      .write.mode("overwrite").parquet(s"$path/sets")
-    Seq((shingleN, numHashes, bands, seed, threshold, maxBucket))
-      .toDF("shingle_n", "num_hashes", "bands", "seed", "threshold",
-        "max_bucket")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/params")
+    writeRelations(path, Seq(b, s), "overwrite")
+    writeOnceRelation(path, "params",
+      Seq((shingleN, numHashes, bands, seed, threshold, maxBucket))
+        .toDF("shingle_n", "num_hashes", "bands", "seed", "threshold",
+          "max_bucket"))
   }
 
-  /** Append an ingest delta ([[TextIndex.ingestStep]]'s second
-    * result) — replay-idempotent upstream, plain parquet appends
-    * here. Band-row appends keep the sorted-write discipline, and
-    * the id column is normalized to LONG (the build rule: one stable
-    * on-disk schema however the caller keys its batches). Appending
-    * beside a PRE-normalization INT32 build leaves a mixed-footer
-    * directory on purpose: every read goes through
-    * [[readIdNormalized]] (the legacy bridge — explicit widened
-    * schema), and the next [[compact]] rewrites the index at LONG
-    * throughout, retiring the bridge for that index. */
-  def append(path: String, delta: (DataFrame, DataFrame)): Unit = {
-    delta._1.withColumn("doc", col("doc").cast("long"))
-      .sortWithinPartitions(col("band"), col("sig"))
-      .write.mode("append").parquet(s"$path/bands")
-    delta._2.withColumn("doc", col("doc").cast("long"))
-      .write.mode("append").parquet(s"$path/sets")
-  }
+  protected def parts(delta: (DataFrame, DataFrame)): Seq[DataFrame] =
+    Seq(delta._1, delta._2)
 
-  /** RETRACT ids from the index (takedowns — object doc): appends the
-    * first column of `ids`, cast to long, to the tombstone relation.
-    * O(|ids|) — no index rewrite; [[load]] filters, [[compact]]
-    * applies physically. Retracting an id not in the index is a
-    * harmless no-op row. */
-  def retract(path: String, ids: DataFrame): Unit =
-    ids.select(col(ids.columns.head).cast("long").as("doc")).distinct()
-      .coalesce(1).write.mode("append").parquet(s"$path/tombstones")
-
-  private[io] def dirExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
-  /** Read a relation directory with `idCol` normalized to LONG —
-    * the legacy-footer bridge: an index BUILT before the LONG
-    * normalization has INT32 footers on disk, and an upgraded append
-    * beside them leaves a MIXED directory where plain schema
-    * inference reads ONE footer and mis-reads or fails on the other
-    * generation. Requesting an explicit schema with the id field
-    * widened reads BOTH generations (parquet int32 → int64 type
-    * widening — upcasts are safe, supported by the vectorized
-    * reader), so pre-normalization indexes keep loading, appending,
-    * and compacting without a manual migration; the next [[compact]]
-    * rewrites everything at LONG and retires the bridge for that
-    * index. */
-  private[io] def readIdNormalized(spark: SparkSession, dir: String,
-      idCol: String): DataFrame = {
-    val inferred = spark.read.parquet(dir)
-    if (inferred.schema(idCol).dataType ==
-        org.apache.spark.sql.types.LongType) inferred
-    else spark.read.schema(org.apache.spark.sql.types.StructType(
-        inferred.schema.map(f =>
-          if (f.name == idCol)
-            f.copy(dataType = org.apache.spark.sql.types.LongType)
-          else f)))
-      .parquet(dir)
-  }
-
-  /** The tombstone-filtered relation: `rel` anti-joined against the
-    * BROADCAST tombstone ids — tombstones are id-sized (takedown
-    * lists, not corpora), so the index keeps streaming map-side
-    * through the filter and the judges' plan contract is unchanged. */
-  private[io] def minusTombstones(spark: SparkSession, rel: DataFrame,
-      path: String, idCol: String): DataFrame =
-    if (!dirExists(spark, s"$path/tombstones")) rel
-    else rel.join(
-      broadcast(spark.read.parquet(s"$path/tombstones")
-        .select(col("doc").as(idCol)).distinct()),
-      Seq(idCol), "left_anti")
-
-  def load(spark: SparkSession, path: String): PersistedTextIndex = {
-    val p = spark.read.parquet(s"$path/params").collect()
-    require(p.length == 1, s"expected one params row at $path, got ${p.length}")
-    val r = p.head
-    PersistedTextIndex(
-      minusTombstones(spark,
-        readIdNormalized(spark, s"$path/bands", "doc"), path, "doc"),
-      minusTombstones(spark,
-        readIdNormalized(spark, s"$path/sets", "doc"), path, "doc"),
+  protected def open(r: Row, rel: String => DataFrame): PersistedTextIndex =
+    PersistedTextIndex(rel("bands"), rel("sets"),
       r.getAs[Int]("shingle_n"), r.getAs[Int]("num_hashes"),
       r.getAs[Int]("bands"), r.getAs[Long]("seed"),
       r.getAs[Double]("threshold"), r.getAs[Int]("max_bucket"))
-  }
-
-  /** COMPACTION: many ingest appends leave bands/sets as piles of
-    * small files with interleaved key ranges — rewrite both relations
-    * (one pass each: index rows are per-doc unique by construction,
-    * so beyond APPLYING TOMBSTONES PHYSICALLY — the anti-join
-    * [[load]] was paying per read — compaction is layout-only),
-    * restoring the sorted-band layout and bounded file counts. The
-    * compacted copy carries NO tombstone relation: the retractions
-    * are in the data now. Write-to-side + swap-by-rename is the
-    * caller's transactional discipline; this helper produces the
-    * compacted copy at `toPath`. */
-  def compact(spark: SparkSession, fromPath: String, toPath: String,
-              files: Int = 32): Unit = {
-    minusTombstones(spark,
-        readIdNormalized(spark, s"$fromPath/bands", "doc"), fromPath, "doc")
-      .repartition(files, col("band"), col("sig"))
-      .sortWithinPartitions(col("band"), col("sig"))
-      .write.mode("overwrite").parquet(s"$toPath/bands")
-    minusTombstones(spark,
-        readIdNormalized(spark, s"$fromPath/sets", "doc"), fromPath, "doc")
-      .repartition(files, col("doc"))
-      .write.mode("overwrite").parquet(s"$toPath/sets")
-    spark.read.parquet(s"$fromPath/params")
-      .coalesce(1).write.mode("overwrite").parquet(s"$toPath/params")
-  }
 }

@@ -1,6 +1,7 @@
 package graft.pipelines
 
-import graft.io.{MediaIndexArtifacts, SemanticIndexArtifacts, TextIndexArtifacts}
+import graft.io.{IndexStore, MediaIndexArtifacts, SemanticIndexArtifacts,
+  TextIndexArtifacts}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** WORKED production sinks for the streaming ingest pipelines — the
@@ -186,69 +187,93 @@ object IngestSinks {
     dropVersionsBelow(spark, indexRoot, curV + 2 - retainVersions)
   }
 
-  /** Initialize a versioned TEXT index root: build `v0` over `corpus`
-    * (possibly empty — a cold-start crawl) and point CURRENT at it. */
+  /** Initialize a versioned index root: `build` writes `v0` (over a
+    * possibly empty corpus — a cold-start crawl), then CURRENT points
+    * at it. */
+  def initIndex(spark: SparkSession, indexRoot: String)(
+      build: String => Unit): Unit = {
+    build(s"$indexRoot/v0")
+    setCurrent(spark, indexRoot, "v0")
+  }
+
+  /** [[initIndex]] with a TEXT index ([[TextIndexArtifacts.build]]). */
   def initTextIndex(spark: SparkSession, indexRoot: String,
                     corpus: DataFrame, idCol: String, textCol: String,
                     shingleN: Int = 3, numHashes: Int = 128,
                     bands: Int = 32, seed: Long = 42L,
-                    threshold: Double = 0.8, maxBucket: Int = 1000): Unit = {
-    TextIndexArtifacts.build(s"$indexRoot/v0", corpus, idCol, textCol,
-      shingleN, numHashes, bands, seed, threshold, maxBucket)
-    setCurrent(spark, indexRoot, "v0")
-  }
+                    threshold: Double = 0.8, maxBucket: Int = 1000): Unit =
+    initIndex(spark, indexRoot)(TextIndexArtifacts.build(_, corpus, idCol,
+      textCol, shingleN, numHashes, bands, seed, threshold, maxBucket))
 
-  /** Initialize a versioned MEDIA index root (the text twin). */
+  /** [[initIndex]] with a MEDIA index ([[MediaIndexArtifacts.build]]). */
   def initMediaIndex(spark: SparkSession, indexRoot: String,
                      corpus: org.apache.spark.sql.Dataset[graft.multimodal.Multimodal.Media],
                      imageMaxDist: Int = 6, audioMaxDist: Int = 3,
                      videoMaxDist: Int = 3, videoMinOverlapBp: Int = 6000,
-                     maxBucket: Int = 1024): Unit = {
-    MediaIndexArtifacts.build(s"$indexRoot/v0", corpus, imageMaxDist,
-      audioMaxDist, videoMaxDist, videoMinOverlapBp, maxBucket)
-    setCurrent(spark, indexRoot, "v0")
+                     maxBucket: Int = 1024): Unit =
+    initIndex(spark, indexRoot)(MediaIndexArtifacts.build(_, corpus,
+      imageMaxDist, audioMaxDist, videoMaxDist, videoMinOverlapBp, maxBucket))
+
+  /** The per-batch index reader — pass as a pipeline's index function.
+    * Goes through the store's `load`, so tombstones are filtered, and
+    * the version pointer is re-read every batch (appends AND
+    * compactions become visible). */
+  def indexReader(store: IndexStore[_], spark: SparkSession,
+                  indexRoot: String): () => store.Index =
+    () => store.load(spark, currentIndexPath(spark, indexRoot))
+
+  /** [[indexReader]] over a TEXT root, in the (bands, sets) shape the
+    * text-gated pipelines take. */
+  def textIndex(spark: SparkSession,
+                indexRoot: String): () => (DataFrame, DataFrame) = () => {
+    val idx = indexReader(TextIndexArtifacts, spark, indexRoot)()
+    (idx.bands, idx.sets)
   }
 
-  /** Initialize a versioned SEMANTIC index root (the text twin —
-    * centroids are frozen inside the artifact). */
-  def initSemanticIndex(spark: SparkSession, indexRoot: String,
-                        corpus: DataFrame, idCol: String, vecCol: String,
-                        nCells: Int, threshold: Double, nProbe: Int = 2,
-                        maxCell: Int = 4096): Unit = {
-    SemanticIndexArtifacts.build(s"$indexRoot/v0", corpus, idCol, vecCol,
-      nCells, threshold, nProbe, maxCell)
-    setCurrent(spark, indexRoot, "v0")
-  }
+  /** [[indexReader]] over a MEDIA root, in the hash-relation shape the
+    * media-gated pipelines take. */
+  def mediaIndex(spark: SparkSession, indexRoot: String): () => DataFrame =
+    () => indexReader(MediaIndexArtifacts, spark, indexRoot)().index
 
-  /** The per-batch SEMANTIC index reader (tombstones filtered,
-    * pointer re-read per batch — the [[textIndex]] rules). */
-  def semanticIndex(spark: SparkSession, indexRoot: String)
-      : () => SemanticIndexArtifacts.PersistedSemanticIndex =
-    () => SemanticIndexArtifacts.load(spark,
-      currentIndexPath(spark, indexRoot))
-
-  /** The SEMANTIC sink ([[StreamingIngestPipeline.runSemanticIngest]]'s
-    * shape; the [[textSink]] empty-batch, cadence, and versioning
-    * rules). */
-  def semanticSink(spark: SparkSession, corpusPath: String,
-                   indexRoot: String, compactEvery: Int = 0,
-                   retainVersions: Int = 2)
-      : (DataFrame, DataFrame, Long) => Unit = {
+  /** The documented index sink (the shape of
+    * [[StreamingIngestPipeline.runWithTextIndexGate]],
+    * [[StreamingIngestPipeline.runMediaIngestIndexed]] and
+    * [[StreamingIngestPipeline.runSemanticIngest]] with the matching
+    * store): idempotent corpus append, delta append to the current
+    * version, and — every `compactEvery` DATA batches (0 = never) —
+    * compaction to `v<N+1>` with the pointer swap and the
+    * delete-on-next-swap retention (object doc).
+    *
+    * Empty batches are SKIPPED outright: Structured Streaming fires
+    * NO-DATA batches to advance watermarks (the upstream pipeline has
+    * a watermarked dedup stage), and a sink keyed on raw batchId
+    * would litter the corpus with empty partitions and compact an
+    * unchanged index on idle ticks. An empty survivor frame implies
+    * an empty delta (survivors ⊆ batch), so skipping loses nothing.
+    * The compaction cadence therefore counts data batches in the
+    * sink closure — after a restart the count restarts too, shifting
+    * WHEN a compaction runs by at most `compactEvery` batches, which
+    * is harmless: compaction is layout + tombstone application and
+    * never changes verdicts. */
+  def indexSink[D](store: IndexStore[D], spark: SparkSession,
+                   corpusPath: String, indexRoot: String,
+                   compactEvery: Int = 0, retainVersions: Int = 2)
+      : (DataFrame, D, Long) => Unit = {
     val dataBatches = new java.util.concurrent.atomic.AtomicLong(0L)
     (batch, delta, id) =>
       if (!batch.isEmpty) {
         appendCorpusIdempotent(batch, corpusPath, id)
         val cur = currentIndexPath(spark, indexRoot)
-        SemanticIndexArtifacts.append(cur, delta)
+        store.append(cur, delta)
         if (compactEvery > 0 &&
             dataBatches.incrementAndGet() % compactEvery == 0)
           compactAndSwap(spark, indexRoot, cur, retainVersions)(
-            SemanticIndexArtifacts.compact(spark, cur, _))
+            store.compact(spark, cur, _))
       }
   }
 
-  /** [[semanticSink]] with the occupancy alarm WIRED INTO the sink
-    * cadence — the closed loop: every `recellCheckEvery` DATA
+  /** The SEMANTIC [[indexSink]] with the occupancy alarm WIRED INTO
+    * the sink cadence — the closed loop: every `recellCheckEvery` DATA
     * batches (0 = never), the sink runs
     * [[SemanticIndexArtifacts.PersistedSemanticIndex
     * .occupancyReport]] against the batch it just appended, and a
@@ -268,8 +293,8 @@ object IngestSinks {
       compactEvery: Int = 0, retainVersions: Int = 2,
       recellCheckEvery: Int = 8, alarmBp: Long = 2500)
       : (DataFrame, DataFrame, Long) => Unit = {
-    val inner = semanticSink(spark, corpusPath, indexRoot, compactEvery,
-      retainVersions)
+    val inner = indexSink(SemanticIndexArtifacts, spark, corpusPath,
+      indexRoot, compactEvery, retainVersions)
     val dataBatches = new java.util.concurrent.atomic.AtomicLong(0L)
     (batch, delta, id) =>
       if (!batch.isEmpty) {
@@ -301,158 +326,56 @@ object IngestSinks {
       SemanticIndexArtifacts.recell(spark, cur, _, nCells))
   }
 
-  /** The per-batch TEXT index reader — pass as the pipelines'
-    * `textIndex` function. Goes through [[TextIndexArtifacts.load]]
-    * so tombstones are filtered and the version pointer is re-read
-    * every batch (appends AND compactions become visible). */
-  def textIndex(spark: SparkSession,
-                indexRoot: String): () => (DataFrame, DataFrame) = () => {
-    val idx = TextIndexArtifacts.load(spark,
-      currentIndexPath(spark, indexRoot))
-    (idx.bands, idx.sets)
-  }
-
-  /** The per-batch MEDIA index reader (the text twin). */
-  def mediaIndex(spark: SparkSession, indexRoot: String): () => DataFrame =
-    () => MediaIndexArtifacts.load(spark,
-      currentIndexPath(spark, indexRoot)).index
-
-  /** The documented TEXT sink
-    * ([[StreamingIngestPipeline.runWithTextIndexGate]]'s shape):
-    * idempotent corpus append, delta append to the current version,
-    * and — every `compactEvery` DATA batches (0 = never) — compaction
-    * to `v<N+1>` with the pointer swap and the delete-on-next-swap
-    * retention (object doc).
-    *
-    * Empty batches are SKIPPED outright: Structured Streaming fires
-    * NO-DATA batches to advance watermarks (the upstream pipeline has
-    * a watermarked dedup stage), and a sink keyed on raw batchId
-    * would litter the corpus with empty partitions and compact an
-    * unchanged index on idle ticks. An empty survivor frame implies
-    * an empty delta (survivors ⊆ batch), so skipping loses nothing.
-    * The compaction cadence therefore counts data batches in the
-    * sink closure — after a restart the count restarts too, shifting
-    * WHEN a compaction runs by at most `compactEvery` batches, which
-    * is harmless: compaction is layout + tombstone application and
-    * never changes verdicts. */
-  def textSink(spark: SparkSession, corpusPath: String, indexRoot: String,
-               compactEvery: Int = 0, retainVersions: Int = 2)
-      : (DataFrame, (DataFrame, DataFrame), Long) => Unit = {
-    val dataBatches = new java.util.concurrent.atomic.AtomicLong(0L)
-    (batch, delta, id) =>
-      if (!batch.isEmpty) {
-        appendCorpusIdempotent(batch, corpusPath, id)
-        val cur = currentIndexPath(spark, indexRoot)
-        TextIndexArtifacts.append(cur, delta)
-        if (compactEvery > 0 &&
-            dataBatches.incrementAndGet() % compactEvery == 0)
-          compactAndSwap(spark, indexRoot, cur, retainVersions)(
-            TextIndexArtifacts.compact(spark, cur, _))
-      }
-  }
-
   /** The documented ARCHIVE sink
     * ([[StreamingIngestPipeline.runArchiveIngest]]'s shape): the
-    * [[textSink]] and [[mediaSink]] disciplines applied to the two
-    * legs of one routed batch — doc survivors + text-index delta to
-    * the text root, media survivors + media-index delta to the media
-    * root, each leg skipping when its side of the batch is empty.
-    * Wire the pipeline's index functions to the same roots
+    * [[indexSink]] discipline applied to the two legs of one routed
+    * batch — doc survivors + text-index delta to the text root, media
+    * survivors + media-index delta to the media root, each leg
+    * skipping when its side of the batch is empty. Wire the
+    * pipeline's index functions to the same roots
     * ([[textIndex]]/[[mediaIndex]]) and the continuous-crawl loop is
     * closed: archives in, both corpora and both indexes growing, all
-    * four appends redelivery-safe. */
+    * four appends redelivery-safe.
+    *
+    * The two legs OVERLAP: their appends touch disjoint paths and
+    * disjoint index roots — independent jobs submitted from one
+    * thread serialize for no reason. The doc leg runs on a thread of
+    * its own while the media leg runs on the calling thread, so the
+    * doc leg's shuffle stages overlap the media leg's write IO
+    * (Spark's scheduler interleaves jobs from multiple threads within
+    * one session). The gain is unmeasured: the SCALE.md r17 sink rung
+    * quoted for it ran the overlapped sink in both of its arms. The
+    * leg thread is created PER BATCH on the
+    * batch's own thread, so it inherits that batch's SparkContext
+    * local properties (job group, job description — a thread kept
+    * across batches would stamp every later batch's jobs with the
+    * first batch's), and it has ended before the sink returns: both
+    * legs are awaited — the foreachBatch checkpoint must not commit
+    * ahead of either append — and BOTH failures surface (the doc
+    * leg's first). */
   def archiveSink(spark: SparkSession, docCorpusPath: String,
                   mediaCorpusPath: String, textRoot: String,
                   mediaRoot: String, compactEvery: Int = 0,
-                  retainVersions: Int = 2,
-                  overlapLegs: Boolean = true)
+                  retainVersions: Int = 2)
       : StreamingIngestPipeline.ArchiveIngestBatch => Unit = {
-    val tSink = textSink(spark, docCorpusPath, textRoot, compactEvery,
-      retainVersions)
-    val mSink = mediaSink(spark, mediaCorpusPath, mediaRoot, compactEvery,
-      retainVersions)
-    if (!overlapLegs) { b =>
-      tSink(b.docs, b.textDelta, b.batchId)
-      mSink(b.media, b.mediaDelta, b.batchId)
-    } else {
-      // OVERLAPPED legs (the default): the two appends touch
-      // disjoint paths and disjoint index roots — independent jobs
-      // submitted from one thread serialize for no reason. Two
-      // submission threads let the doc leg's shuffle stages overlap
-      // the media leg's write IO (Spark's scheduler interleaves jobs
-      // from multiple threads within one session). Measured on the
-      // SCALE.md r17 media-heavy sink rung (256 MB media + a
-      // docs/bands/sets doc leg per batch): serial 1.35/1.32/1.71 s
-      // vs overlapped 0.95/0.83/0.93 s — a 30–45% batch-latency
-      // cut. Both legs are awaited before the sink returns — the
-      // foreachBatch checkpoint must not commit ahead of either
-      // append — and BOTH failures surface (the first exception
-      // wins, the second leg is still awaited so no job outlives
-      // its batch).
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2,
-        new java.util.concurrent.ThreadFactory {
-          private val n = new java.util.concurrent.atomic.AtomicLong(0)
-          def newThread(r: Runnable): Thread = {
-            val t = new Thread(r, s"archive-sink-leg-${n.getAndIncrement()}")
-            t.setDaemon(true); t
-          }
-        })
-      val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      b => {
-        val fDoc = scala.concurrent.Future(
-          tSink(b.docs, b.textDelta, b.batchId))(ec)
-        val fMed = scala.concurrent.Future(
-          mSink(b.media, b.mediaDelta, b.batchId))(ec)
-        val inf = scala.concurrent.duration.Duration.Inf
-        val rDoc = scala.util.Try(scala.concurrent.Await.result(fDoc, inf))
-        val rMed = scala.util.Try(scala.concurrent.Await.result(fMed, inf))
-        rDoc.get; rMed.get
-        ()
-      }
+    val tSink = indexSink(TextIndexArtifacts, spark, docCorpusPath,
+      textRoot, compactEvery, retainVersions)
+    val mSink = indexSink(MediaIndexArtifacts, spark, mediaCorpusPath,
+      mediaRoot, compactEvery, retainVersions)
+    b => {
+      var rDoc: scala.util.Try[Unit] = scala.util.Failure(
+        new IllegalStateException(s"archive sink doc leg of batch ${b.batchId} died"))
+      val leg = new Thread(() =>
+        rDoc = scala.util.Try(tSink(b.docs, b.textDelta, b.batchId)),
+        s"archive-sink-leg-${b.batchId}")
+      leg.setDaemon(true)
+      leg.start()
+      val rMed = scala.util.Try(mSink(b.media, b.mediaDelta, b.batchId))
+      leg.join()
+      rDoc.get; rMed.get
     }
   }
 
-  /** The documented MEDIA sink
-    * ([[StreamingIngestPipeline.runMediaIngestIndexed]]'s shape; the
-    * [[textSink]] empty-batch and cadence rules). */
-  def mediaSink(spark: SparkSession, corpusPath: String, indexRoot: String,
-                compactEvery: Int = 0, retainVersions: Int = 2)
-      : (DataFrame, DataFrame, Long) => Unit = {
-    val dataBatches = new java.util.concurrent.atomic.AtomicLong(0L)
-    (batch, delta, id) =>
-      if (!batch.isEmpty) {
-        appendCorpusIdempotent(batch, corpusPath, id)
-        val cur = currentIndexPath(spark, indexRoot)
-        MediaIndexArtifacts.append(cur, delta)
-        if (compactEvery > 0 &&
-            dataBatches.incrementAndGet() % compactEvery == 0)
-          compactAndSwap(spark, indexRoot, cur, retainVersions)(
-            MediaIndexArtifacts.compact(spark, cur, _))
-      }
-  }
-
-  /** CORPUS-side retraction — the takedown story's second half: index
-    * tombstones ([[TextIndexArtifacts.retract]]) stop a doc from
-    * winning keeper elections, but the corpus parquet written by
-    * [[appendCorpusIdempotent]] still carries its text/payload. This
-    * sweep REMOVES the retracted rows physically, touching ONLY the
-    * `batch_id=<id>` partitions that actually contain a retracted id
-    * (the partition layout makes the rewrite targeted — at 100 TB a
-    * takedown list of a few thousand ids rewrites a few partitions,
-    * never the corpus).
-    *
-    * Crash discipline per partition: rewrite to a side directory
-    * (`<corpus>/.retract_tmp/batch_id=<id>`), then delete the
-    * original and rename the side copy in. A crash between delete and
-    * rename leaves the side copy intact — the RECOVERY PREAMBLE here
-    * completes any such orphaned rename on the next invocation, so
-    * re-running the sweep (same or superset id list) always converges;
-    * the sweep is idempotent. Run it at compaction cadence, outside
-    * the streaming query (same single-writer discipline as the index
-    * compaction).
-    *
-    * `ids` is the retraction list (first column, cast to long —
-    * id-sized, broadcast); `idCol` names the corpus id column. */
   /** The binaryFile source schema (Spark requires it explicitly on
     * STREAMING reads — unlike the batch reader, readStream refuses to
     * infer it). */
@@ -553,6 +476,28 @@ object IngestSinks {
         "media_survivors", "text_delta_docs", "media_delta_rows")
   }
 
+  /** CORPUS-side retraction — the takedown story's second half: index
+    * tombstones ([[TextIndexArtifacts.retract]]) stop a doc from
+    * winning keeper elections, but the corpus parquet written by
+    * [[appendCorpusIdempotent]] still carries its text/payload. This
+    * sweep REMOVES the retracted rows physically, touching ONLY the
+    * `batch_id=<id>` partitions that actually contain a retracted id
+    * (the partition layout makes the rewrite targeted — at 100 TB a
+    * takedown list of a few thousand ids rewrites a few partitions,
+    * never the corpus).
+    *
+    * Crash discipline per partition: rewrite to a side directory
+    * (`<corpus>/.retract_tmp/batch_id=<id>`), then delete the
+    * original and rename the side copy in. A crash between delete and
+    * rename leaves the side copy intact — the RECOVERY PREAMBLE here
+    * completes any such orphaned rename on the next invocation, so
+    * re-running the sweep (same or superset id list) always converges;
+    * the sweep is idempotent. Run it at compaction cadence, outside
+    * the streaming query (same single-writer discipline as the index
+    * compaction).
+    *
+    * `ids` is the retraction list (first column, cast to long —
+    * id-sized, broadcast); `idCol` names the corpus id column. */
   def retractFromCorpus(spark: SparkSession, corpusPath: String,
                         ids: DataFrame, idCol: String): Unit = {
     import org.apache.spark.sql.functions.{broadcast, col}

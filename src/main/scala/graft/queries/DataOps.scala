@@ -2285,8 +2285,8 @@ object DataOps {
     * The IMAGE leg is pinned to exact dual-hash equality
     * (imageMaxDist = 0) and article originals draw from
     * [[FreshGids]] — the render family's gradient hashes are
-    * LOW-ENTROPY (half-plane patterns; [[graft.tools.GidCheck]]
-    * measures 29 exact dual-hash collisions in 200 gids), so the
+    * LOW-ENTROPY (half-plane patterns; a one-off fixture check
+    * measured 29 exact dual-hash collisions in 200 gids), so the
     * fresh set is the empirically-verified subset of 30–80 whose
     * dual-hashes collide with nothing in the fixture — the
     * perceptual legs' own distance semantics are q203/q204's proven
@@ -2302,8 +2302,8 @@ object DataOps {
     * surface as an extra output row, not vanish). */
   /** The q212 article-original render gids: the first 48 gids ≥ 30
     * whose letterbox dual-hash (ahash, dhash) collides with no
-    * history gid (0–29) and no other member — verified by
-    * [[graft.tools.GidCheck]] (the render family's gradient hashes
+    * history gid (0–29) and no other member — verified once by a
+    * fixture check, since retired (the render family's gradient hashes
     * are low-entropy, so "distinct params" does NOT imply "distinct
     * hashes"; this list makes the q212 election decidable by
     * byte/render-parameter equality alone at imageMaxDist = 0). */

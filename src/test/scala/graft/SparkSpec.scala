@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -17,9 +18,24 @@ object SparkSpec {
   val sfDir = "/root/testdata/sf0.001"
 }
 
-trait SparkSpec extends AnyFunSuite with Matchers {
+trait SparkSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
   def sfDir: String = SparkSpec.sfDir
+
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A fresh temporary directory, deleted with its contents when the
+    * suite ends. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    finally super.afterAll()
 
   /** Collect a DataFrame to a deterministic seq of rows for assertion. */
   def rows(df: DataFrame): Seq[Row] = df.collect().toSeq

@@ -141,7 +141,7 @@ class MediaIndexSpec extends SparkSpec {
 
   test("MediaIndexArtifacts: build → load carries thresholds; ingest + append + compact preserve verdicts and replay-idempotency") {
     import graft.io.MediaIndexArtifacts
-    val dir = java.nio.file.Files.createTempDirectory("graft_mia").toString
+    val dir = tempDir("graft_mia").toString
     MediaIndexArtifacts.build(s"$dir/idx", Seq(
       Multimodal.Media(100L, "image", img(4, "png")),
       Multimodal.Media(101L, "audio", AudioWave.writeWav(wavSamples, 16000, 16)),
@@ -175,8 +175,7 @@ class MediaIndexSpec extends SparkSpec {
 
   test("retraction: a tombstoned media keeper stops matching — its former dup survives and re-enters; compaction applies physically") {
     import graft.io.MediaIndexArtifacts
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_mia_tomb").toString
+    val dir = tempDir("graft_mia_tomb").toString
     MediaIndexArtifacts.build(s"$dir/idx", Seq(
       Multimodal.Media(100L, "image", img(4, "png")),
       Multimodal.Media(101L, "image", img(9, "png"))).toDS(),
@@ -213,7 +212,7 @@ class MediaIndexSpec extends SparkSpec {
   test("scale contract: the history index is never shuffled — batch broadcasts, history streams") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val dir = java.nio.file.Files.createTempDirectory("graft_mediaidx")
+    val dir = tempDir("graft_mediaidx")
     val histPath = s"$dir/history_index"
     history.write.parquet(histPath)
     val histFromDisk = spark.read.parquet(histPath)
@@ -279,8 +278,7 @@ class MediaIndexSpec extends SparkSpec {
     MediaIndex.bandOccupancyReport(batchIdx, crowd, maxBucket = 1024)
       .collect().head.getAs[Boolean]("rebuild") shouldBe false
     // the artifact wrapper judges with the STORED cap
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_midx_occ").toString
+    val dir = tempDir("graft_midx_occ").toString
     val media = (200L to 219L)
       .map(i => Multimodal.Media(i, "image", img(4, "png"))).toDS()
     graft.io.MediaIndexArtifacts.build(s"$dir/idx", media,

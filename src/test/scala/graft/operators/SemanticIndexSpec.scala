@@ -57,7 +57,7 @@ class SemanticIndexSpec extends SparkSpec {
 
   test("artifacts: build → load carries parameters; append + compact preserve verdicts; retraction re-admits a retracted keeper's content; legacy reads bridge") {
     import graft.io.SemanticIndexArtifacts
-    val dir = java.nio.file.Files.createTempDirectory("sem_idx").toString
+    val dir = tempDir("sem_idx").toString
     SemanticIndexArtifacts.build(s"$dir/idx", history, "vec_id",
       "embedding", nCells = 2, threshold = 0.9, nProbe = 2,
       maxCell = Int.MaxValue)
@@ -100,7 +100,7 @@ class SemanticIndexSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import graft.io.SemanticIndexArtifacts
-    val dir = java.nio.file.Files.createTempDirectory("sem_plan").toString
+    val dir = tempDir("sem_plan").toString
     SemanticIndexArtifacts.build(s"$dir/sem_index", history, "vec_id",
       "embedding", nCells = 2, threshold = 0.9, nProbe = 2,
       maxCell = 1000)
@@ -147,19 +147,22 @@ class SemanticIndexSpec extends SparkSpec {
     implicit val ctx = spark.sqlContext
     import graft.pipelines.IngestSinks
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val root = java.nio.file.Files.createTempDirectory("sem_stream").toString
-    IngestSinks.initSemanticIndex(spark, s"$root/idx", history, "vec_id",
-      "embedding", nCells = 2, threshold = 0.9, nProbe = 2,
-      maxCell = Int.MaxValue)
+    val root = tempDir("sem_stream").toString
+    IngestSinks.initIndex(spark, s"$root/idx")(
+      graft.io.SemanticIndexArtifacts.build(_, history, "vec_id",
+        "embedding", nCells = 2, threshold = 0.9, nProbe = 2,
+        maxCell = Int.MaxValue))
     val in = MemoryStream[(Long, Seq[Double])]
     val vecs = in.toDF().toDF("vec_id", "embedding")
     val q = graft.pipelines.StreamingIngestPipeline.runSemanticIngest(
-        vecs, IngestSinks.semanticIndex(spark, s"$root/idx"),
+        vecs, IngestSinks.indexReader(graft.io.SemanticIndexArtifacts, spark,
+          s"$root/idx"),
         "vec_id", "embedding")(
-        IngestSinks.semanticSink(spark, s"$root/corpus", s"$root/idx",
+        IngestSinks.indexSink(graft.io.SemanticIndexArtifacts, spark,
+          s"$root/corpus", s"$root/idx",
           compactEvery = 1))
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("sem_ckpt").toString)
+        tempDir("sem_ckpt").toString)
       .start()
     try {
       in.addData((1L, v(1, 0, 0, 0.1)),      // history dup → drops
@@ -208,9 +211,10 @@ class SemanticIndexSpec extends SparkSpec {
       def ax(c: Int) = if (i % 3 == c) 1.0 else 0.0
       (i.toLong, Seq(ax(0), ax(1), ax(2), 0.001 * (i / 3)))
     }.toDF("vec_id", "embedding")
-    val root = java.nio.file.Files.createTempDirectory("sem_recell").toString
-    IngestSinks.initSemanticIndex(spark, s"$root/idx", hist, "vec_id",
-      "embedding", nCells = 1, threshold = 0.9, nProbe = 1, maxCell = 100)
+    val root = tempDir("sem_recell").toString
+    IngestSinks.initIndex(spark, s"$root/idx")(
+      graft.io.SemanticIndexArtifacts.build(_, hist, "vec_id",
+        "embedding", nCells = 1, threshold = 0.9, nProbe = 1, maxCell = 100))
     val idx0 = graft.io.SemanticIndexArtifacts.load(spark,
       IngestSinks.currentIndexPath(spark, s"$root/idx"))
     val batch = hist.select((col("vec_id") + 90000L).as("vec_id"),
@@ -259,19 +263,20 @@ class SemanticIndexSpec extends SparkSpec {
       def ax(c: Int) = if (i % 3 == c) 1.0 else 0.0
       (i.toLong, Seq(ax(0), ax(1), ax(2), 0.001 * (i / 3)))
     }.toDF("vec_id", "embedding")
-    val root = java.nio.file.Files
-      .createTempDirectory("sem_autorecell").toString
-    IngestSinks.initSemanticIndex(spark, s"$root/idx", hist, "vec_id",
-      "embedding", nCells = 1, threshold = 0.9, nProbe = 1, maxCell = 100)
+    val root = tempDir("sem_autorecell").toString
+    IngestSinks.initIndex(spark, s"$root/idx")(
+      graft.io.SemanticIndexArtifacts.build(_, hist, "vec_id",
+        "embedding", nCells = 1, threshold = 0.9, nProbe = 1, maxCell = 100))
     val in = MemoryStream[(Long, Seq[Double])]
     val q = StreamingIngestPipeline.runSemanticIngest(
         in.toDF().toDF("vec_id", "embedding"),
-        IngestSinks.semanticIndex(spark, s"$root/idx"),
+        IngestSinks.indexReader(graft.io.SemanticIndexArtifacts, spark,
+          s"$root/idx"),
         "vec_id", "embedding")(
         IngestSinks.semanticSinkAutoRecell(spark, s"$root/corpus",
           s"$root/idx", "vec_id", "embedding", recellCheckEvery = 1))
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("sem_ar_ck").toString)
+        tempDir("sem_ar_ck").toString)
       .start()
     try {
       in.addData((5000L, v(0.5, -0.5, 0.5, 0)),
@@ -295,8 +300,7 @@ class SemanticIndexSpec extends SparkSpec {
       def ax(c: Int) = if (i % 3 == c) 1.0 else 0.0
       (i.toLong, Seq(ax(0), ax(1), ax(2), 0.001 * (i / 3)))
     }.toDF("vec_id", "embedding")
-    val d = java.nio.file.Files
-      .createTempDirectory("sem_autoguard").toString
+    val d = tempDir("sem_autoguard").toString
     graft.io.SemanticIndexArtifacts.build(s"$d/a", hist, "vec_id",
       "embedding", nCells = 2, threshold = 0.9, nProbe = 1, maxCell = 0)
     graft.io.SemanticIndexArtifacts.load(spark, s"$d/a")
@@ -312,24 +316,26 @@ class SemanticIndexSpec extends SparkSpec {
     implicit val ctx = spark.sqlContext
     import graft.pipelines.{IngestSinks, StreamingIngestPipeline}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val root = java.nio.file.Files.createTempDirectory("sem_funnel").toString
-    IngestSinks.initSemanticIndex(spark, s"$root/idx", history, "vec_id",
-      "embedding", nCells = 2, threshold = 0.9, nProbe = 2,
-      maxCell = Int.MaxValue)
-    val sink = IngestSinks.semanticSink(spark, s"$root/corpus",
-      s"$root/idx")
+    val root = tempDir("sem_funnel").toString
+    IngestSinks.initIndex(spark, s"$root/idx")(
+      graft.io.SemanticIndexArtifacts.build(_, history, "vec_id",
+        "embedding", nCells = 2, threshold = 0.9, nProbe = 2,
+        maxCell = Int.MaxValue))
+    val sink = IngestSinks.indexSink(graft.io.SemanticIndexArtifacts, spark,
+      s"$root/corpus", s"$root/idx")
     val funnels = scala.collection.mutable.ListBuffer[
       org.apache.spark.sql.Row]()
     val in = MemoryStream[(Long, Seq[Double])]
     val q = StreamingIngestPipeline.runSemanticIngestAudited(
         in.toDF().toDF("vec_id", "embedding"),
-        IngestSinks.semanticIndex(spark, s"$root/idx"),
+        IngestSinks.indexReader(graft.io.SemanticIndexArtifacts, spark,
+          s"$root/idx"),
         "vec_id", "embedding") { b =>
         funnels += b.funnel().collect().head
         sink(b.survivors, b.delta, b.batchId)
       }
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("sem_funnel_ck").toString)
+        tempDir("sem_funnel_ck").toString)
       .start()
     try {
       // batch 1: cross dup (1), intra dup (2, keeper 1), fresh (3),

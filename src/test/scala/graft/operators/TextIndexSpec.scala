@@ -56,7 +56,7 @@ class TextIndexSpec extends SparkSpec {
   test("scale contract through a parquet round-trip: history rows (doc, shs) never enter an exchange") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val dir = java.nio.file.Files.createTempDirectory("graft_textidx")
+    val dir = tempDir("graft_textidx")
     val (hBands, hSets) = TextIndex.buildIndex(history, "doc_id", "text")
     hBands.write.parquet(s"$dir/text_index_bands")
     hSets.write.parquet(s"$dir/text_index_sets")
@@ -179,8 +179,7 @@ class TextIndexSpec extends SparkSpec {
     (self.getAs[Long]("n_probes"), self.getAs[Long]("batch_capped_rows"),
       self.getAs[Boolean]("rebuild")) shouldBe ((0L, 320L, false))
     // the artifact wrapper judges with the STORED parameters
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tidx_occ").toString
+    val dir = tempDir("graft_tidx_occ").toString
     graft.io.TextIndexArtifacts.build(dir, crowd, "doc_id", "text",
       maxBucket = 8)
     graft.io.TextIndexArtifacts.load(spark, dir)
@@ -236,7 +235,7 @@ class TextIndexSpec extends SparkSpec {
 
   test("TextIndexArtifacts: build → load carries the parameters; append + compact preserve verdicts exactly") {
     import graft.io.TextIndexArtifacts
-    val dir = java.nio.file.Files.createTempDirectory("graft_tia").toString
+    val dir = tempDir("graft_tia").toString
     TextIndexArtifacts.build(s"$dir/idx", history, "doc_id", "text",
       maxBucket = 500)
     val idx = TextIndexArtifacts.load(spark, s"$dir/idx")
@@ -281,8 +280,7 @@ class TextIndexSpec extends SparkSpec {
 
   test("retraction: a tombstoned keeper stops matching — former dups survive or re-elect the next smallest; compaction applies physically; replay idempotency preserved") {
     import graft.io.TextIndexArtifacts
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tia_tomb").toString
+    val dir = tempDir("graft_tia_tomb").toString
     // a 4-doc identical crowd (its own text, matching nothing in
     // `history`) so retraction can demonstrate BOTH outcomes: losing
     // the only match (doc 1) and re-electing the next-smallest
@@ -336,42 +334,100 @@ class TextIndexSpec extends SparkSpec {
   }
 
   test("legacy INT32 footers: an index built pre-normalization accepts LONG appends — the mixed directory loads, judges, and compacts to pure LONG") {
-    import graft.io.TextIndexArtifacts
-    val dir = java.nio.file.Files.createTempDirectory("tidx_legacy").toString
-    // a PRE-normalization build: bands/sets written with INT ids, the
-    // exact on-disk state an upgraded deployment inherits
-    val (b0, s0) = TextIndex.buildIndex(
-      history.withColumn("doc_id", col("doc_id").cast("int")),
-      "doc_id", "text")
-    b0.write.mode("overwrite").parquet(s"$dir/idx/bands")
-    s0.write.mode("overwrite").parquet(s"$dir/idx/sets")
-    Seq((3, 128, 32, 42L, 0.8, 1000))
-      .toDF("shingle_n", "num_hashes", "bands", "seed", "threshold",
-        "max_bucket")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/idx/params")
-    spark.read.parquet(s"$dir/idx/sets").schema("doc").dataType shouldBe
-      org.apache.spark.sql.types.IntegerType
-    // upgraded append: LONG rows land beside the INT32 footers
-    val (_, delta) = TextIndexArtifacts.load(spark, s"$dir/idx")
-      .ingest(Seq((1000L, "a brand new report on deep sea exploration " +
-        "vessels mapping volcanic ridges under the southern ocean"))
-        .toDF("doc_id", "text"), "doc_id", "text", cacheSets = false)
-    TextIndexArtifacts.append(s"$dir/idx", delta)
-    // the mixed directory loads through the widened-schema bridge:
-    // both generations visible, verdicts correct across them
-    val idx = TextIndexArtifacts.load(spark, s"$dir/idx")
-    idx.sets.schema("doc").dataType shouldBe
-      org.apache.spark.sql.types.LongType
-    idx.sets.select("doc").as[Long].collect().sorted shouldBe
-      Array(100L, 101L, 102L, 1000L)
-    idx.dups(Seq((7L, base)).toDF("doc_id", "text"), "doc_id", "text",
-      cacheSets = false).select("keep_id").as[Long].collect() shouldBe
-      Array(100L)
-    // compaction retires the bridge: pure LONG footers afterwards
-    TextIndexArtifacts.compact(spark, s"$dir/idx", s"$dir/idx2")
-    spark.read.parquet(s"$dir/idx2/sets").schema("doc").dataType shouldBe
-      org.apache.spark.sql.types.LongType
-    TextIndexArtifacts.load(spark, s"$dir/idx2").sets.count() shouldBe 4L
+    import graft.io.{IndexStore, MediaIndexArtifacts, SemanticIndexArtifacts,
+      TextIndexArtifacts}
+    import graft.multimodal.{MediaIndex, Multimodal, PerceptualHash}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    def int(df: DataFrame, c: String) = df.withColumn(c, col(c).cast("int"))
+    def params(p: String, df: DataFrame) =
+      df.coalesce(1).write.mode("overwrite").parquet(s"$p/params")
+    def media(id: Long, gid: Long) = MediaIndex.mediaHashIndex(Seq(
+        Multimodal.Media(id, "image", PerceptualHash.renderGrayImage(16, 16,
+          gid * 7, gid % 5 + 1, gid % 11 + 1, gid % 3, 0, "png"))).toDS())
+      .localCheckpoint(true)
+    def vecs(rows: (Long, Seq[Double])*) = rows.toDF("vec_id", "embedding")
+    /** One family: the store, its id-keyed appended relation, a
+      * PRE-normalization build with INT ids (the exact on-disk state
+      * an upgraded deployment inherits), an upgraded append of one
+      * fresh entry (id 1000), and the keepers a copy of history entry
+      * 100 is judged against. */
+    final case class Family(store: IndexStore[_], rel: String,
+        idCol: String, ids: Seq[Long], writeLegacy: String => Unit,
+        appendFresh: String => Unit, keepers: String => Seq[Long]) {
+      def live(p: String): DataFrame = store.load(spark, p) match {
+        case i: TextIndexArtifacts.PersistedTextIndex => i.sets
+        case i: MediaIndexArtifacts.PersistedMediaIndex => i.index
+        case i: SemanticIndexArtifacts.PersistedSemanticIndex => i.assigned
+      }
+    }
+    val families = Seq(
+      Family(TextIndexArtifacts, "sets", "doc", Seq(100L, 101L, 102L, 1000L),
+        p => {
+          val (b0, s0) = TextIndex.buildIndex(int(history, "doc_id"),
+            "doc_id", "text")
+          b0.write.mode("overwrite").parquet(s"$p/bands")
+          s0.write.mode("overwrite").parquet(s"$p/sets")
+          params(p, Seq((3, 128, 32, 42L, 0.8, 1000)).toDF("shingle_n",
+            "num_hashes", "bands", "seed", "threshold", "max_bucket"))
+        },
+        p => TextIndexArtifacts.append(p, TextIndexArtifacts.load(spark, p)
+          .ingest(Seq((1000L, "a brand new report on deep sea exploration " +
+            "vessels mapping volcanic ridges under the southern ocean"))
+            .toDF("doc_id", "text"), "doc_id", "text", cacheSets = false)._2),
+        p => TextIndexArtifacts.load(spark, p).dups(
+            Seq((7L, base)).toDF("doc_id", "text"), "doc_id", "text",
+            cacheSets = false)
+          .select("keep_id").as[Long].collect().toSeq),
+      Family(MediaIndexArtifacts, "index", "media_id", Seq(100L, 101L, 1000L),
+        p => {
+          int(media(100L, 4).unionByName(media(101L, 9)), "media_id")
+            .write.mode("overwrite").parquet(s"$p/index")
+          params(p, Seq((6, 3, 3, 6000, 64)).toDF("image_max_dist",
+            "audio_max_dist", "video_max_dist", "video_min_overlap_bp",
+            "max_bucket"))
+        },
+        p => MediaIndexArtifacts.append(p,
+          MediaIndexArtifacts.load(spark, p).ingest(media(1000L, 21))._2),
+        p => MediaIndexArtifacts.load(spark, p).ingest(media(7L, 4))._1
+          .select("keep_id").as[Long].collect().toSeq),
+      Family(SemanticIndexArtifacts, "assigned", "id",
+        Seq(100L, 101L, 102L, 1000L),
+        p => {
+          val (c0, a0) = SemanticIndex.buildIndex(vecs(
+              (100L, Seq(1, 0, 0, 0.1)), (101L, Seq(0, 1, 0, 0.1)),
+              (102L, Seq(0, 0, 1, 0.1))), "vec_id", "embedding", nCells = 2)
+          c0.write.mode("overwrite").parquet(s"$p/centroids")
+          int(a0, "id").write.mode("overwrite").parquet(s"$p/assigned")
+          params(p, Seq((0.9, 2, Int.MaxValue, 2)).toDF("threshold",
+            "n_probe", "max_cell", "n_cells"))
+        },
+        p => SemanticIndexArtifacts.append(p,
+          SemanticIndexArtifacts.load(spark, p).ingest(
+            vecs((1000L, Seq(0.5, -0.5, 0.7, 0))), "vec_id", "embedding")._2),
+        p => SemanticIndexArtifacts.load(spark, p).dups(
+            vecs((7L, Seq(1, 0, 0, 0.1))), "vec_id", "embedding")
+          .select("keep_id").as[Long].collect().toSeq))
+    for (f <- families) withClue(s"${f.rel}: ") {
+      val dir = tempDir("idx_legacy").toString
+      f.writeLegacy(s"$dir/idx")
+      spark.read.parquet(s"$dir/idx/${f.rel}").schema(f.idCol).dataType shouldBe
+        IntegerType
+      // upgraded append: LONG rows land beside the INT32 footers
+      f.appendFresh(s"$dir/idx")
+      // the mixed directory loads through the widened-schema bridge:
+      // both generations visible, verdicts correct across them
+      val live = f.live(s"$dir/idx")
+      live.schema(f.idCol).dataType shouldBe LongType
+      live.select(f.idCol).as[Long].collect().sorted.toSeq shouldBe f.ids
+      f.keepers(s"$dir/idx") shouldBe Seq(100L)
+      // compaction retires the bridge: pure LONG footers afterwards
+      f.store.compact(spark, s"$dir/idx", s"$dir/idx2")
+      spark.read.parquet(s"$dir/idx2/${f.rel}").schema(f.idCol).dataType shouldBe
+        LongType
+      f.live(s"$dir/idx2").count() shouldBe f.ids.size.toLong
+      spark.catalog.clearCache()
+    }
   }
 
   test("string ids fail fast (the bounded-collect long contract)") {

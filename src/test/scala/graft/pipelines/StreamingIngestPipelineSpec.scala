@@ -1,6 +1,5 @@
 package graft.pipelines
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.SparkSpec
@@ -17,7 +16,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
     val decent = "the quick brown fox jumps over the lazy dog and keeps " +
       "running through the quiet forest toward the distant river bank"
     // historical index holds one known doc's fingerprint
-    val indexDir = Files.createTempDirectory("ingest_index").toString
+    val indexDir = tempDir("ingest_index").toString
     Seq(s"$decent already ingested")
       .toDF("text")
       .select(graft.functions.TextFns.fingerprint(col("text")).as("fp"))
@@ -233,7 +232,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
         s"Content-Length: ${p.length}\r\n\r\n").getBytes("ISO-8859-1") ++
         p ++ "\r\n\r\n".getBytes("ISO-8859-1")
     }
-    val dir = Files.createTempDirectory("warc_live")
+    val dir = tempDir("warc_live")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir.toString, "c.warc"),
       rec("https://live.example/1",
@@ -257,7 +256,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
       .writeStream.format("memory").queryName("warc_live_out")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("ckpt_warc_live").toString)
+        tempDir("ckpt_warc_live").toString)
       .start()
     try q.processAllAvailable() finally q.stop()
     val out = spark.table("warc_live_out")
@@ -301,7 +300,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
         AudioWave.writeWav(samples, 16000, 16))).toDS())
     // the live crawl delivers: a BMP re-encode of the known image, an
     // 8-bit re-master of the known track, and two fresh objects
-    val dir = Files.createTempDirectory("media_live")
+    val dir = tempDir("media_live")
     def put(name: String, bytes: Array[Byte]): Unit = {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(dir.toString, name), bytes); ()
@@ -334,7 +333,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
         ()
       }
       .option("checkpointLocation",
-        Files.createTempDirectory("ckpt_media_live").toString)
+        tempDir("ckpt_media_live").toString)
       .start()
     try q.processAllAvailable() finally q.stop()
     // the re-encode and the re-master drop against history; ONE of
@@ -359,7 +358,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
       "while morning light spreads across the silent valley floor"
     // history corpus: one already-kept doc; its TextIndex relations
     // live on DISK (parquet) — the production state shape
-    val dir = Files.createTempDirectory("graft_textgate")
+    val dir = tempDir("graft_textgate")
     val (hb0, hs0) = TextIndex.buildIndex(
       Seq((100L, base)).toDF("doc_id", "text"), "doc_id", "text")
     hb0.write.parquet(s"$dir/bands"); hs0.write.parquet(s"$dir/sets")
@@ -389,7 +388,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
         ()
       }
       .option("checkpointLocation",
-        Files.createTempDirectory("ckpt_textgate").toString)
+        tempDir("ckpt_textgate").toString)
       .start()
     try {
       // batch 1: a reworded re-crawl of the HISTORY doc drops; the
@@ -440,7 +439,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
     // archiveSink — idempotent corpus appends + delta appends + a
     // compaction after EVERY data batch, so cross-batch memory is
     // also proven to survive compaction
-    val dir = Files.createTempDirectory("graft_archingest")
+    val dir = tempDir("graft_archingest")
     IngestSinks.initTextIndex(spark, s"$dir/tidx",
       Seq((100L, base)).toDF("doc_id", "text"), "doc_id", "text")
     spark.catalog.clearCache()
@@ -449,7 +448,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
       maxBucket = 64)
     // the crawler's drop directory: archive 1 lands before the stream
     // starts, archive 2 mid-run
-    val drop = Files.createTempDirectory("graft_archdrop")
+    val drop = tempDir("graft_archdrop")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(drop.toString, "a1.warc"),
       rec("https://c.example/docA", s"$novel".getBytes("UTF-8")) ++
@@ -470,7 +469,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
         IngestSinks.archiveSink(spark, s"$dir/dcorpus", s"$dir/mcorpus",
           s"$dir/tidx", s"$dir/midx", compactEvery = 1))
       .option("checkpointLocation",
-        Files.createTempDirectory("ckpt_archingest").toString)
+        tempDir("ckpt_archingest").toString)
       .start()
     def docUrls() = spark.read.parquet(s"$dir/dcorpus")
       .select("url").as[String].collect().sorted.toSeq
@@ -511,6 +510,91 @@ class StreamingIngestPipelineSpec extends SparkSpec {
       .count() shouldBe 3L
   }
 
+  test("archiveSink legs: per-batch leg threads carry their own batch's job description and are gone when the stream stops") {
+    import graft.multimodal.{Multimodal, PerceptualHash}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    def img(gid: Long) = PerceptualHash.renderGrayImage(16, 16, gid * 7,
+      gid % 5 + 1, gid % 11 + 1, gid % 3, 0, "png")
+    def rec(uri: String, p: Array[Byte]): Array[Byte] =
+      (s"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: $uri\r\n" +
+        "WARC-Date: 2026-02-03T04:05:06Z\r\n" +
+        s"Content-Length: ${p.length}\r\n\r\n").getBytes("ISO-8859-1") ++
+        p ++ "\r\n\r\n".getBytes("ISO-8859-1")
+    val prose = Seq(
+      "a brand new report on deep sea exploration vessels mapping " +
+        "volcanic ridges under the southern ocean currents today",
+      "entirely different prose about mountain weather stations " +
+        "recording wind and snowfall across the high passes this year")
+    val dir = tempDir("graft_archlegs")
+    IngestSinks.initTextIndex(spark, s"$dir/tidx",
+      Seq((100L, "seed text about nothing in particular at all")).toDF(
+        "doc_id", "text"), "doc_id", "text")
+    IngestSinks.initMediaIndex(spark, s"$dir/midx",
+      Seq(Multimodal.Media(100L, "image", img(4))).toDS(), maxBucket = 64)
+    // two archives, one per micro-batch, each feeding BOTH sink legs
+    val drop = tempDir("graft_archlegs_drop")
+    prose.zipWithIndex.foreach { case (text, i) =>
+      val p = java.nio.file.Paths.get(drop.toString, s"a$i.warc")
+      java.nio.file.Files.write(p,
+        rec(s"https://c.example/doc$i", text.getBytes("UTF-8")) ++
+          rec(s"https://c.example/img$i", img(21L + 56 * i)))
+      p.toFile.setLastModified(1700000000000L + i * 1000L)
+    }
+    // each job's batch marker (set on the batch thread around the sink
+    // call, inherited by threads created there) and its description
+    val marker = "graft.spec.archiveSinkBatch"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(marker)))
+          .foreach(b => jobs.add(
+            (b, e.properties.getProperty("spark.job.description"))))
+    }
+    val sc = spark.sparkContext
+    val described = scala.collection.mutable.Map[String, String]()
+    val sink = IngestSinks.archiveSink(spark, s"$dir/dcorpus",
+      s"$dir/mcorpus", s"$dir/tidx", s"$dir/midx")
+    sc.addSparkListener(listener)
+    try {
+      val q = StreamingIngestPipeline.runArchiveIngest(
+          spark.readStream.format("binaryFile")
+            .schema(IngestSinks.BinaryFileSchema)
+            .option("maxFilesPerTrigger", "1").load(drop.toString),
+          IngestSinks.textIndex(spark, s"$dir/tidx"),
+          IngestSinks.mediaIndex(spark, s"$dir/midx"),
+          mediaMaxBucket = 64) { b =>
+          described(b.batchId.toString) =
+            sc.getLocalProperty("spark.job.description")
+          sc.setLocalProperty(marker, b.batchId.toString)
+          try sink(b) finally sc.setLocalProperty(marker, null)
+        }
+        .option("checkpointLocation", tempDir("ckpt_archlegs").toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      // a marked job after the stream: once the listener has seen it,
+      // it has seen every earlier job (the listener bus is FIFO)
+      sc.setLocalProperty(marker, "end")
+      try spark.range(1).count() finally sc.setLocalProperty(marker, null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!jobs.asScala.exists(_._1 == "end") &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+    } finally sc.removeSparkListener(listener)
+    spark.read.parquet(s"$dir/dcorpus").count() shouldBe 2L
+    spark.read.parquet(s"$dir/mcorpus").count() shouldBe 2L
+    val byBatch = jobs.asScala.toSeq.filter(_._1 != "end").groupBy(_._1)
+    described.keySet.size shouldBe 2
+    byBatch.keySet shouldBe described.keySet.toSet
+    described.foreach { case (b, desc) =>
+      desc should not be null
+      byBatch(b).map(_._2).distinct shouldBe Seq(desc)
+    }
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("archive-sink-leg-"))
+      .map(_.getName) shouldBe empty
+  }
+
   test("runArchiveIngest extractHtml: crawl HTML bodies become PROSE before fingerprint/gate/judge — a re-serialized re-crawl of indexed prose drops; survivors carry extracted text") {
     import graft.multimodal.Multimodal
     val base = "the quick brown fox jumps over the lazy dog and keeps " +
@@ -526,7 +610,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
         s"Content-Length: ${p.length}\r\n\r\n").getBytes("ISO-8859-1") ++
         p ++ "\r\n\r\n".getBytes("ISO-8859-1")
     }
-    val dir = Files.createTempDirectory("graft_archhtml")
+    val dir = tempDir("graft_archhtml")
     // the text index holds PROSE (the extracted form — the scaladoc
     // contract when extractHtml is on)
     IngestSinks.initTextIndex(spark, s"$dir/tidx",
@@ -534,7 +618,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
     spark.catalog.clearCache()
     IngestSinks.initMediaIndex(spark, s"$dir/midx",
       Seq.empty[Multimodal.Media].toDS(), maxBucket = 64)
-    val drop = Files.createTempDirectory("graft_archhtml_drop")
+    val drop = tempDir("graft_archhtml_drop")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(drop.toString, "a1.warc"),
       // a re-SERIALIZED re-crawl of the indexed prose: different tag
@@ -560,7 +644,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
         ()
       }
       .option("checkpointLocation",
-        Files.createTempDirectory("ckpt_archhtml").toString)
+        tempDir("ckpt_archhtml").toString)
       .start()
     try q.processAllAvailable() finally q.stop()
     kept.map(_._1).toSeq shouldBe Seq("https://h.example/fresh")
@@ -591,7 +675,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
       "stations recording wind and snowfall across the high passes " +
       "during the long winter season while valley roads stayed closed " +
       "to traffic for six straight days"
-    val dir = Files.createTempDirectory("graft_archurl")
+    val dir = tempDir("graft_archurl")
     IngestSinks.initTextIndex(spark, s"$dir/tidx",
       Seq((100L, "an unrelated seed document about river dredging " +
         "surveys measured along the harbor channel late last autumn"))
@@ -599,7 +683,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
     spark.catalog.clearCache()
     IngestSinks.initMediaIndex(spark, s"$dir/midx",
       Seq.empty[Multimodal.Media].toDS(), maxBucket = 64)
-    val drop = Files.createTempDirectory("graft_archurl_drop")
+    val drop = tempDir("graft_archurl_drop")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(drop.toString, "a1.warc"),
       rec("https://ok.example/a", novel.getBytes("UTF-8")) ++
@@ -630,7 +714,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
         ()
       }
       .option("checkpointLocation",
-        Files.createTempDirectory("ckpt_archurl").toString)
+        tempDir("ckpt_archurl").toString)
       .start()
     try q.processAllAvailable() finally q.stop()
     keptMedia.toSeq shouldBe Seq("https://ok.example/j.png")
@@ -659,7 +743,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
     val novel3 = "the harbor council approved a plan to dredge the old " +
       "shipping channel next autumn after surveys showed silt levels " +
       "rising faster than the port authority had projected last year"
-    val root = Files.createTempDirectory("graft_sinks").toString
+    val root = tempDir("graft_sinks").toString
     // the production wiring, END TO END from the helper: versioned
     // index root (v0 built from the seed corpus), per-batch reader,
     // documented sink with compaction every 2 batches
@@ -673,10 +757,11 @@ class StreamingIngestPipelineSpec extends SparkSpec {
     val q = StreamingIngestPipeline.runWithTextIndexGate(
         docs, emptyIndex, IngestSinks.textIndex(spark, s"$root/idx"),
         "ts", "doc_id", "text")(
-        IngestSinks.textSink(spark, s"$root/corpus", s"$root/idx",
+        IngestSinks.indexSink(graft.io.TextIndexArtifacts, spark,
+          s"$root/corpus", s"$root/idx",
           compactEvery = 2))
       .option("checkpointLocation",
-        Files.createTempDirectory("ckpt_sinks").toString)
+        tempDir("ckpt_sinks").toString)
       .start()
     try {
       in.addData((ts(0), 1L, novel1))                 // batch 0: survives
@@ -720,11 +805,11 @@ class StreamingIngestPipelineSpec extends SparkSpec {
     def img(gid: Long, fmt: String) =
       PerceptualHash.renderGrayImage(16, 16, gid * 7, gid % 5 + 1,
         gid % 11 + 1, gid % 3, 0, fmt)
-    val root = Files.createTempDirectory("graft_msinks").toString
+    val root = tempDir("graft_msinks").toString
     IngestSinks.initMediaIndex(spark, s"$root/idx", Seq(
       Multimodal.Media(100L, "image", img(4, "png"))).toDS(),
       maxBucket = 64)
-    val drop = Files.createTempDirectory("graft_msinks_drop")
+    val drop = tempDir("graft_msinks_drop")
     def put(name: String, bytes: Array[Byte]): Unit = {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(drop.toString, name), bytes); ()
@@ -736,10 +821,11 @@ class StreamingIngestPipelineSpec extends SparkSpec {
         spark.readStream.format("binaryFile").schema(binSchema)
           .load(drop.toString),
         IngestSinks.mediaIndex(spark, s"$root/idx"), maxBucket = 64)(
-        IngestSinks.mediaSink(spark, s"$root/corpus", s"$root/idx",
+        IngestSinks.indexSink(graft.io.MediaIndexArtifacts, spark,
+          s"$root/corpus", s"$root/idx",
           compactEvery = 1))
       .option("checkpointLocation",
-        Files.createTempDirectory("ckpt_msinks").toString)
+        tempDir("ckpt_msinks").toString)
       .start()
     try {
       q.processAllAvailable() // data batch 1 → compaction (every 1)
@@ -817,7 +903,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
       Multimodal.Media(100L, "image", img(4, "png")),
       Multimodal.Media(101L, "image", img(9, "png"))).toDS())
       .localCheckpoint(true)
-    val drop = Files.createTempDirectory("graft_gallery")
+    val drop = tempDir("graft_gallery")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(drop.toString, "a1.warc"),
       // the gallery page: BOTH referenced images are losing dups (a
@@ -877,7 +963,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
         ()
       }
       .option("checkpointLocation",
-        Files.createTempDirectory("ckpt_gallery").toString)
+        tempDir("ckpt_gallery").toString)
       .start()
     try q.processAllAvailable() finally q.stop()
     keptDocs.sorted.toSeq shouldBe Seq("https://g.example/article",
@@ -923,9 +1009,9 @@ class StreamingIngestPipelineSpec extends SparkSpec {
     val fresh3 = "a harbor council plan to dredge the old shipping " +
       "channel next autumn after surveys showed silt levels rising " +
       "faster than the port authority had projected last year"
-    val root = Files.createTempDirectory("graft_backfill").toString
-    val drop = Files.createTempDirectory("graft_backfill_drop").toString
-    val ckpt = Files.createTempDirectory("graft_backfill_ckpt").toString
+    val root = tempDir("graft_backfill").toString
+    val drop = tempDir("graft_backfill_drop").toString
+    val ckpt = tempDir("graft_backfill_ckpt").toString
     IngestSinks.initTextIndex(spark, s"$root/tidx",
       Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text")
     IngestSinks.initMediaIndex(spark, s"$root/midx",
@@ -982,11 +1068,11 @@ class StreamingIngestPipelineSpec extends SparkSpec {
     // derive v<N+1> from the pointer and converge.
     val base = "the quick brown fox jumps over the lazy dog and keeps " +
       "running through the quiet forest toward the distant river bank"
-    val root = Files.createTempDirectory("graft_redeliver").toString
+    val root = tempDir("graft_redeliver").toString
     IngestSinks.initTextIndex(spark, s"$root/idx",
       Seq((100L, base)).toDF("doc_id", "text"), "doc_id", "text")
-    val sink = IngestSinks.textSink(spark, s"$root/corpus", s"$root/idx",
-      compactEvery = 1)
+    val sink = IngestSinks.indexSink(graft.io.TextIndexArtifacts, spark,
+      s"$root/corpus", s"$root/idx", compactEvery = 1)
     val idx0 = IngestSinks.textIndex(spark, s"$root/idx")
     val batch = Seq((1L, base.replace("quick", "swift") + " plus fresh"))
       .toDF("doc_id", "text")
@@ -1018,14 +1104,14 @@ class StreamingIngestPipelineSpec extends SparkSpec {
   test("IngestSinks multi-reader: a reader holding v<N> finishes after the swap to v<N+1>; CURRENT recovery self-heals from the highest version") {
     val base = "the quick brown fox jumps over the lazy dog and keeps " +
       "running through the quiet forest toward the distant river bank"
-    val root = Files.createTempDirectory("graft_reader").toString
+    val root = tempDir("graft_reader").toString
     IngestSinks.initTextIndex(spark, s"$root/idx",
       Seq((100L, base)).toDF("doc_id", "text"), "doc_id", "text")
     // an EXTERNAL reader resolves the pointer and holds v0
     val held = graft.io.TextIndexArtifacts.load(spark,
       IngestSinks.currentIndexPath(spark, s"$root/idx"))
-    val sink = IngestSinks.textSink(spark, s"$root/corpus", s"$root/idx",
-      compactEvery = 1)
+    val sink = IngestSinks.indexSink(graft.io.TextIndexArtifacts, spark,
+      s"$root/corpus", s"$root/idx", compactEvery = 1)
     val idx = IngestSinks.textIndex(spark, s"$root/idx")
     val batch = Seq((1L, "completely novel prose about harbor dredging " +
       "surveys and silt levels rising faster than projected"))
@@ -1049,14 +1135,14 @@ class StreamingIngestPipelineSpec extends SparkSpec {
   test("IngestSinks retain-K: at retainVersions=3 a reader TWO swaps behind still reads a complete index; the third swap finally drops it") {
     val base = "the quick brown fox jumps over the lazy dog and keeps " +
       "running through the quiet forest toward the distant river bank"
-    val root = Files.createTempDirectory("graft_retaink").toString
+    val root = tempDir("graft_retaink").toString
     IngestSinks.initTextIndex(spark, s"$root/idx",
       Seq((100L, base)).toDF("doc_id", "text"), "doc_id", "text")
     // an EXTERNAL reader resolves and holds v0
     val held = graft.io.TextIndexArtifacts.load(spark,
       IngestSinks.currentIndexPath(spark, s"$root/idx"))
-    val sink = IngestSinks.textSink(spark, s"$root/corpus", s"$root/idx",
-      compactEvery = 1, retainVersions = 3)
+    val sink = IngestSinks.indexSink(graft.io.TextIndexArtifacts, spark,
+      s"$root/corpus", s"$root/idx", compactEvery = 1, retainVersions = 3)
     def ingest(id: Long, text: String): Unit = {
       val idx = IngestSinks.textIndex(spark, s"$root/idx")
       val batch = Seq((id, text)).toDF("doc_id", "text")
@@ -1086,7 +1172,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
   }
 
   test("IngestSinks.retractFromCorpus recovery: an UNCOMMITTED side copy (no _SUCCESS — crash mid-write) is discarded, never installed; a committed orphan completes its rename") {
-    val root = Files.createTempDirectory("graft_takedown_crash").toString
+    val root = tempDir("graft_takedown_crash").toString
     val corpus = s"$root/corpus"
     IngestSinks.appendCorpusIdempotent(
       Seq((1L, "keep one"), (2L, "take me down")).toDF("doc_id", "text"),
@@ -1123,7 +1209,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
   }
 
   test("IngestSinks.retractFromCorpus: takedown rows leave the corpus parquet; only affected partitions rewritten; idempotent") {
-    val root = Files.createTempDirectory("graft_takedown").toString
+    val root = tempDir("graft_takedown").toString
     val corpus = s"$root/corpus"
     IngestSinks.appendCorpusIdempotent(
       Seq((1L, "keep one"), (2L, "take me down")).toDF("doc_id", "text"),
@@ -1184,7 +1270,7 @@ class StreamingIngestPipelineSpec extends SparkSpec {
         ()
       }
       .option("checkpointLocation",
-        Files.createTempDirectory("ckpt_media_docs").toString)
+        tempDir("ckpt_media_docs").toString)
       .start()
     try {
       in.addData(
