@@ -70,20 +70,32 @@ object WeakScale {
     // frozen models for the q181/q182 ladders: trained ONCE on the
     // base corpus (training is sample-bounded and not what the ladder
     // measures — the frozen APPLY cost is)
-    lazy val opqModel = graft.operators.ProductQuant.trainOpq(baseVecs,
+    lazy val opqModel = graft.operators.ProductQuant.train(baseVecs,
       "vec_id", "embedding", dim = 64, m = 2, k = 4, iters = 2,
       opqIters = 2)
-    lazy val driftModel = graft.operators.ProductQuant.trainResidual(
+    lazy val driftModel = graft.operators.ProductQuant.train(
       baseVecs, "vec_id", "embedding", dim = 64, m = 2, k = 4, iters = 2,
-      nCells = 8)
+      nCells = 8, superProbe = 0)
     // PRODUCTION-arity composed model (m=8, k=256): the catalog's
     // queries run toy arity for oracle speed; this model proves the
     // broadcast-relation codebooks keep codegen/compile constants
     // bounded at real codebook size (the r9 q182 lesson: a dim² or
     // K-sized literal would explode exactly here)
     lazy val opqProdModel = graft.operators.ProductQuant
-      .trainOpqResidualTwoLevel(baseVecs, "vec_id", "embedding", dim = 64,
+      .train(baseVecs, "vec_id", "embedding", dim = 64,
         m = 8, k = 256, iters = 2, nCells = 4, opqIters = 2)
+
+    // the catalog's fused ANN shape (q143-q178): encode the corpus with
+    // a fresh index, spread it over the cores, top-3 of 20 queries
+    def annSearch(index: graft.operators.ProductQuant.Index,
+                  vecs: org.apache.spark.sql.DataFrame,
+                  cells: Option[org.apache.spark.sql.DataFrame] = None): Long =
+      graft.operators.ProductQuant.search(index,
+          graft.operators.ProductQuant.encode(index, vecs, "vec_id",
+            "embedding", 64).repartition(spark.sparkContext.defaultParallelism),
+          vecs.filter(col("vec_id") <= 20), "vec_id", "embedding", 64, k = 3,
+          cells = cells)
+        .count()
 
     // one warm-up at 1x per operator family compiles the plan shapes
     def measurements(k: Int, runs: Int): Seq[(String, Double, Long)] = {
@@ -977,10 +989,8 @@ object WeakScale {
         // in the repo) + PQ argmin encode — expect linear, zero
         // shuffle; model trained ONCE on the base corpus (frozen)
         ("opq_rotate_encode_q182", V, () => {
-          graft.operators.ProductQuant.encode(
-              graft.operators.ProductQuant.rotate(vecs, "vec_id",
-                "embedding", 64, opqModel.rotation),
-              "vec_id", "__rv", 64, opqModel.pq)
+          graft.operators.ProductQuant.encode(opqModel, vecs, "vec_id",
+              "embedding", 64)
             .agg(count(lit(1)), sum(element_at(col("codes"), 1))).collect()
           vecs.count()
         }),
@@ -994,8 +1004,8 @@ object WeakScale {
         // with a constant comparable to the toy arity (a K-sized or
         // dim² literal would instead re-pay janino compile per scale)
         ("opq_encode_m8k256", V, () => {
-          graft.operators.ProductQuant.encodeOpqResidualTwoLevel(vecs,
-              "vec_id", "embedding", 64, opqProdModel)
+          graft.operators.ProductQuant.encode(opqProdModel, vecs,
+              "vec_id", "embedding", 64)
             .agg(count(lit(1)), sum(element_at(col("codes"), 1))).collect()
           vecs.count()
         }),
@@ -1004,11 +1014,10 @@ object WeakScale {
         // at real codebook size
         ("opq_serve_m8k256", V, () => {
           val codes = graft.operators.ProductQuant
-            .encodeOpqResidualTwoLevel(vecs, "vec_id", "embedding", 64,
-              opqProdModel)
-          graft.operators.ProductQuant.opqResidualTopKTwoLevelOverCodes(
+            .encode(opqProdModel, vecs, "vec_id", "embedding", 64)
+          graft.operators.ProductQuant.search(opqProdModel,
               codes, baseVecs.filter(col("vec_id") <= 20), "vec_id",
-              "embedding", 64, opqProdModel, k = 3)
+              "embedding", 64, k = 3)
             .agg(count(lit(1)), sum(col("adc_dist"))).collect()
           vecs.count()
         }),
@@ -1018,7 +1027,7 @@ object WeakScale {
         // sample-bounded, so the ladder must be FLAT: train cost is
         // corpus-size-independent by construction
         ("opq_train_q184", V, () => {
-          graft.operators.ProductQuant.trainOpqResidualTwoLevel(vecs,
+          graft.operators.ProductQuant.train(vecs,
             "vec_id", "embedding", dim = 64, m = 2, k = 4, iters = 2,
             nCells = 4, opqIters = 2)
           vecs.count()
@@ -1028,7 +1037,7 @@ object WeakScale {
         // a tiny constant; the alarm must stay cheap enough to run on
         // every append batch
         ("index_drift_q181", V, () => {
-          graft.operators.ProductQuant.residualDriftReport(driftModel,
+          graft.operators.ProductQuant.driftReport(driftModel,
               vecs, vecs, "vec_id", "embedding", 64)
             .collect()
           vecs.count()
@@ -1260,12 +1269,11 @@ object WeakScale {
         // sizing rule) ⇒ per-query candidate mass constant; PQ train
         // sample-bounded; encode narrow ⇒ expect ~linear in n
         ("ivf_pq_q143", V, () => {
-          val model = graft.operators.ProductQuant.train(vecs, "vec_id",
+          val index = graft.operators.ProductQuant.train(vecs, "vec_id",
             "embedding", dim = 64, m = 2, k = 4, iters = 2)
-          graft.operators.ProductQuant.ivfAdcTopK(vecs,
-            vecs.filter(col("vec_id") <= 20), "vec_id", "embedding",
-            dim = 64, model, k = 3, nCells = 8 * k, nProbe = 2,
-            ivfIters = 2).count()
+          annSearch(index, vecs, cells = Some(
+            graft.operators.Similarity.ivfCellsTrained(vecs, "vec_id",
+              "embedding", nCells = 8 * k, nProbe = 2, iters = 2)))
         }),
         // IVFADC behind the two-level quantizer (q168): nCells ∝ √n
         // (the production sizing — at 10¹⁰ vectors √n ≈ 10⁵ cells,
@@ -1276,25 +1284,21 @@ object WeakScale {
         // expect ~n^1.5 in the fixed-query-count harness shape, with
         // the sample-bounded training a flat floor
         ("ivf_pq_two_level_q168", V, () => {
-          val model = graft.operators.ProductQuant.train(vecs, "vec_id",
+          val index = graft.operators.ProductQuant.train(vecs, "vec_id",
             "embedding", dim = 64, m = 2, k = 4, iters = 2)
-          graft.operators.ProductQuant.ivfAdcTopKTwoLevel(vecs,
-            vecs.filter(col("vec_id") <= 20), "vec_id", "embedding",
-            dim = 64, model, k = 3,
-            nCells = (8 * math.sqrt(k.toDouble)).toInt,
-            nProbe = 2, superProbe = 2, ivfIters = 2).count()
+          annSearch(index, vecs, cells = Some(
+            graft.operators.Similarity.ivfCellsTwoLevel(vecs, "vec_id",
+              "embedding", nCells = (8 * math.sqrt(k.toDouble)).toInt,
+              nProbe = 2, superProbe = 2, iters = 2).localCheckpoint()))
         }),
         // residual IVF-PQ (q177): same candidate shape as q143 with
         // nCells ∝ k; sample-bounded double training (cells + residual
         // codebooks), ONE fused corpus pass for cell+codes — expect
         // the q143 curve
         ("ivf_pq_residual_q177", V, () => {
-          val model = graft.operators.ProductQuant.trainResidual(vecs,
+          annSearch(graft.operators.ProductQuant.train(vecs,
             "vec_id", "embedding", dim = 64, m = 2, k = 4, iters = 2,
-            nCells = 8 * k, cellIters = 2)
-          graft.operators.ProductQuant.ivfAdcResidualTopK(vecs,
-            vecs.filter(col("vec_id") <= 20), "vec_id", "embedding",
-            dim = 64, model, k = 3, nProbe = 2).count()
+            nCells = 8 * k, cellIters = 2, superProbe = 0), vecs)
         }),
         // the balanced sizing for the flat residual form: nCells ∝ √k
         // puts the literal assignment at n·√k (∝ k^1.5) instead of the
@@ -1302,25 +1306,20 @@ object WeakScale {
         // semantic_dedup_sqrtcells; past the literal cap the scale
         // path is residual ∘ two-level (class doc)
         ("ivf_pq_residual_sqrtcells", V, () => {
-          val model = graft.operators.ProductQuant.trainResidual(vecs,
+          annSearch(graft.operators.ProductQuant.train(vecs,
             "vec_id", "embedding", dim = 64, m = 2, k = 4, iters = 2,
-            nCells = (8 * math.sqrt(k.toDouble)).toInt, cellIters = 2)
-          graft.operators.ProductQuant.ivfAdcResidualTopK(vecs,
-            vecs.filter(col("vec_id") <= 20), "vec_id", "embedding",
-            dim = 64, model, k = 3, nProbe = 2).count()
+            nCells = (8 * math.sqrt(k.toDouble)).toInt, cellIters = 2,
+            superProbe = 0), vecs)
         }),
         // residual ∘ two-level (q178): no K-sized literal — assignment
         // is superProbe·(√K literal + ~√K joined) dots + a broadcast
         // residual join; expect the near-flat q168 curve with the
         // residual join's small constant on top
         ("ivf_pq_residual_two_level_q178", V, () => {
-          val model = graft.operators.ProductQuant.trainResidualTwoLevel(
+          annSearch(graft.operators.ProductQuant.train(
             vecs, "vec_id", "embedding", dim = 64, m = 2, k = 4,
             iters = 2, nCells = (8 * math.sqrt(k.toDouble)).toInt,
-            cellIters = 2)
-          graft.operators.ProductQuant.ivfAdcResidualTopKTwoLevel(vecs,
-            vecs.filter(col("vec_id") <= 20), "vec_id", "embedding",
-            dim = 64, model, k = 3, nProbe = 2).count()
+            cellIters = 2), vecs)
         }))
       val out = ops.filter(o => selected(o._1)).map {
         case (name, input, body) =>

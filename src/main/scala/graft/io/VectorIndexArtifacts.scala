@@ -1,179 +1,112 @@
 package graft.io
 
-import graft.operators.{KMeans, ProductQuant}
+import graft.operators.{KMeans, ProductQuant, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Vector-index artifact persistence — [[TokenizerArtifacts]]' twin
   * for the ANN stack: a production vector index is built ONCE
-  * (codebooks + coarse quantizer trained offline) and then SERVES
-  * every later query batch frozen; these writers snapshot the trained
-  * models to parquet and the loaders hand back exactly the applier
-  * inputs (`ProductQuant.encode/adcTopK/ivfAdcTopK` take a `Model`;
-  * `KMeans`-model consumers take the centroid `Seq`), so index build
-  * and index serve are separate jobs with a durable artifact between
-  * them — the FAISS write_index/read_index lifecycle.
+  * (rotation, coarse quantizer and codebooks trained offline) and then
+  * SERVES every later query batch frozen; [[save]] snapshots a trained
+  * [[ProductQuant.Index]] to parquet and [[load]] hands back exactly
+  * that index, so index build and index serve are separate jobs with a
+  * durable artifact between them — the FAISS write_index/read_index
+  * lifecycle.
   *
-  * Layout:
-  *   k-means  — `<path>/centroids` (cid, cvec array<long> micro)
-  *   PQ       — `<path>/slices`    (subspace, start, len)
-  *              `<path>/books`     (subspace, cid, cvec)
+  * Layout: one artifact directory with optional stage parts —
+  *   `rotation`          (i, rvec array<long> micro), i = 1..dim
+  *   `cells/centroids`   (cid, cvec) — a flat coarse quantizer, or
+  *   `cells/super_model/centroids` (cid, cvec), `cells/sub`
+  *                       (super, sub, cvec), `cells/meta` (n_sub) —
+  *                       a two-level one
+  *   `pq/slices`         (subspace, start, len)
+  *   `pq/books`          (subspace, cid, cvec)
+  * [[load]] also reads the two older layouts: codebooks at the
+  * artifact root (`slices`, `books`), and the composed rotated index's
+  * cells and codebooks under `inner/`.
   *
-  * All artifacts are MODEL-sized (k·dim longs), coalesced to one
-  * file; loads are bounded driver collects of what the appliers
-  * broadcast as literals anyway. Byte-identical search results from
-  * saved vs in-memory models are spec-proven. */
+  * All parts are MODEL-sized (k·dim longs, dim² for the rotation),
+  * coalesced to one file; loads are bounded driver collects, except
+  * the two-level sub relation, which stays a relation. Loads validate
+  * what they read (contiguous ids, square rotation, a codebook per
+  * subspace) and fail loudly instead of serving a wrong index.
+  * Byte-identical search results from saved vs in-memory indexes are
+  * spec-proven. */
 object VectorIndexArtifacts {
 
-  /** Snapshot a [[KMeans.Model]] (1-based contiguous cids, micro-space
-    * centroid vectors). */
-  def saveKMeans(spark: SparkSession, path: String, model: KMeans.Model): Unit = {
+  /** Snapshot `index` to `path` (each present stage as its part). */
+  def save(spark: SparkSession, path: String, index: ProductQuant.Index): Unit = {
     import spark.implicits._
-    ParquetSink(s"$path/centroids", coalesceTo = Some(1))
-      .write(model.map { case (cid, v) => (cid, v) }.toDF("cid", "cvec"))
+    def one(part: String, df: DataFrame): Unit =
+      ParquetSink(s"$path/$part", coalesceTo = Some(1)).write(df)
+    def centroids(part: String, model: KMeans.Model): Unit =
+      one(s"$part/centroids", model.toDF("cid", "cvec"))
+    index.rotation.foreach(r => one("rotation",
+      r.zipWithIndex.map { case (row, i) => (i + 1, row) }.toDF("i", "rvec")))
+    index.cells.foreach {
+      case Left(flat) => centroids("cells", flat)
+      case Right(tl) =>
+        centroids("cells/super_model", tl.superModel)
+        one("cells/sub", tl.sub)
+        one("cells/meta", Seq(tl.nSub).toDF("n_sub"))
+    }
+    one("pq/slices", index.pq.slices.zipWithIndex
+      .map { case ((start, len), i) => (i, start, len) }
+      .toDF("subspace", "start", "len"))
+    one("pq/books", index.pq.books.zipWithIndex.flatMap { case (book, i) =>
+      book.map { case (cid, v) => (i, cid, v) }
+    }.toDF("subspace", "cid", "cvec"))
   }
 
-  def loadKMeans(spark: SparkSession, path: String): KMeans.Model = {
-    val model = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("cid"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1))).toSeq
-    require(model.map(_._1) == (1 to model.size),
-      s"loaded centroid cids must be contiguous 1..k, got ${model.map(_._1)}")
-    model
-  }
-
-  /** Snapshot a trained [[ProductQuant.Model]]: the per-subspace
-    * slices and codebooks. */
-  def savePq(spark: SparkSession, path: String, model: ProductQuant.Model): Unit = {
-    import spark.implicits._
-    ParquetSink(s"$path/slices", coalesceTo = Some(1)).write(
-      model.slices.zipWithIndex
-        .map { case ((start, len), i) => (i, start, len) }
-        .toDF("subspace", "start", "len"))
-    ParquetSink(s"$path/books", coalesceTo = Some(1)).write(
-      model.books.zipWithIndex.flatMap { case (book, i) =>
-        book.map { case (cid, v) => (i, cid, v) }
-      }.toDF("subspace", "cid", "cvec"))
-  }
-
-  /** Snapshot a [[graft.operators.Similarity.TwoLevelModel]]: the
-    * literal super model plus the (super, sub, cvec) sub-centroid
-    * RELATION — the artifact that lets the no-K-literal index family
-    * serve frozen too. Layout: `<path>/super` (cid, cvec),
-    * `<path>/sub` (super, sub, cvec), `<path>/meta` (n_sub). */
-  def saveTwoLevel(spark: SparkSession, path: String,
-                   model: graft.operators.Similarity.TwoLevelModel): Unit = {
-    import spark.implicits._
-    saveKMeans(spark, s"$path/super_model", model.superModel)
-    ParquetSink(s"$path/sub", coalesceTo = Some(1)).write(model.sub)
-    ParquetSink(s"$path/meta", coalesceTo = Some(1))
-      .write(Seq(model.nSub).toDF("n_sub"))
-  }
-
-  def loadTwoLevel(spark: SparkSession, path: String)
-      : graft.operators.Similarity.TwoLevelModel = {
-    val superModel = loadKMeans(spark, s"$path/super_model")
-    val sub = spark.read.parquet(s"$path/sub")
-      .select(col("super"), col("sub"), col("cvec"))
-    val nSub = spark.read.parquet(s"$path/meta")
-      .collect().head.getInt(0)
-    require(nSub >= 1, s"loaded n_sub must be >= 1, got $nSub")
-    graft.operators.Similarity.TwoLevelModel(superModel, sub, nSub)
-  }
-
-  /** Snapshot a residual IVF-PQ index (q177's
-    * [[ProductQuant.ResidualModel]]): flat cell model + residual
-    * codebooks. */
-  def saveResidual(spark: SparkSession, path: String,
-                   model: ProductQuant.ResidualModel): Unit = {
-    saveKMeans(spark, s"$path/cells", model.cells)
-    savePq(spark, s"$path/pq", model.pq)
-  }
-
-  def loadResidual(spark: SparkSession, path: String): ProductQuant.ResidualModel =
-    ProductQuant.ResidualModel(loadKMeans(spark, s"$path/cells"),
-      loadPq(spark, s"$path/pq"))
-
-  /** Snapshot a residual ∘ two-level index (q178's
-    * [[ProductQuant.ResidualTwoLevelModel]]): two-level cells +
-    * residual codebooks — the full no-K-literal serving artifact. */
-  def saveResidualTwoLevel(spark: SparkSession, path: String,
-                           model: ProductQuant.ResidualTwoLevelModel): Unit = {
-    saveTwoLevel(spark, s"$path/cells", model.cells)
-    savePq(spark, s"$path/pq", model.pq)
-  }
-
-  def loadResidualTwoLevel(spark: SparkSession, path: String)
-      : ProductQuant.ResidualTwoLevelModel =
-    ProductQuant.ResidualTwoLevelModel(loadTwoLevel(spark, s"$path/cells"),
-      loadPq(spark, s"$path/pq"))
-
-  /** Snapshot a micro rotation as a dense row relation
-    * `<path>/rotation` (i, rvec array<long>), i = 1-based row index —
-    * the same (key, vector) layout every other model artifact uses.
-    * dim² longs, model-sized by the documented ~10³-dim contract. */
-  def saveRotation(spark: SparkSession, path: String,
-                   rotation: Seq[Seq[Long]]): Unit = {
-    import spark.implicits._
-    ParquetSink(s"$path/rotation", coalesceTo = Some(1)).write(
-      rotation.zipWithIndex
-        .map { case (row, i) => (i + 1, row) }.toDF("i", "rvec"))
-  }
-
-  def loadRotation(spark: SparkSession, path: String): Seq[Seq[Long]] = {
-    val rows = spark.read.parquet(s"$path/rotation")
-      .orderBy(col("i"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1))).toSeq
-    require(rows.map(_._1) == (1 to rows.size),
-      s"loaded rotation rows must be contiguous 1..dim, got ${rows.map(_._1)}")
-    require(rows.forall(_._2.size == rows.size),
-      s"loaded rotation must be square ${rows.size}×${rows.size}")
-    rows.map(_._2)
-  }
-
-  /** Snapshot an OPQ index (q182's [[ProductQuant.OpqModel]]):
-    * rotation + rotated-domain PQ codebooks — the artifact that lets
-    * the rotated flat form serve frozen ([[ProductQuant.opqAdcTopK]]
-    * takes the loaded model unchanged). */
-  def saveOpq(spark: SparkSession, path: String,
-              model: ProductQuant.OpqModel): Unit = {
-    saveRotation(spark, path, model.rotation)
-    savePq(spark, s"$path/pq", model.pq)
-  }
-
-  def loadOpq(spark: SparkSession, path: String): ProductQuant.OpqModel =
-    ProductQuant.OpqModel(loadRotation(spark, path),
-      loadPq(spark, s"$path/pq"))
-
-  /** Snapshot the full composed production index
-    * ([[ProductQuant.OpqResidualTwoLevelModel]]): rotation + the
-    * residual ∘ two-level inner index — the best-recall form's
-    * complete frozen lifecycle (serve over stored codes, assign-only
-    * append, drift alarm — all in the rotated domain). */
-  def saveOpqResidualTwoLevel(spark: SparkSession, path: String,
-                              model: ProductQuant.OpqResidualTwoLevelModel): Unit = {
-    saveRotation(spark, path, model.rotation)
-    saveResidualTwoLevel(spark, s"$path/inner", model.inner)
-  }
-
-  def loadOpqResidualTwoLevel(spark: SparkSession, path: String)
-      : ProductQuant.OpqResidualTwoLevelModel =
-    ProductQuant.OpqResidualTwoLevelModel(loadRotation(spark, path),
-      loadResidualTwoLevel(spark, s"$path/inner"))
-
-  def loadPq(spark: SparkSession, path: String): ProductQuant.Model = {
-    val slices = spark.read.parquet(s"$path/slices")
+  /** Read the index saved at `path` (any layout in the class doc). */
+  def load(spark: SparkSession, path: String): ProductQuant.Index = {
+    def exists(p: String): Boolean = {
+      val hp = new org.apache.hadoop.fs.Path(p)
+      hp.getFileSystem(spark.sessionState.newHadoopConf()).exists(hp)
+    }
+    // the vectors of a (key, vector) part in key order; keys run 1..n
+    def keyed(p: String, what: String): Seq[Seq[Long]] = {
+      val rows = spark.read.parquet(p).collect()
+        .map(r => (r.getInt(0), r.getSeq[Long](1))).toSeq.sortBy(_._1)
+      require(rows.map(_._1) == (1 to rows.size),
+        s"loaded $what must be contiguous 1..${rows.size}, got ${rows.map(_._1)}")
+      rows.map(_._2)
+    }
+    def centroids(part: String): KMeans.Model =
+      keyed(s"$part/centroids", "centroid cids").zipWithIndex
+        .map { case (v, i) => (i + 1, v) }
+    val root = if (exists(s"$path/inner")) s"$path/inner" else path
+    val rotation = Option.when(exists(s"$path/rotation")) {
+      val rows = keyed(s"$path/rotation", "rotation rows")
+      require(rows.forall(_.size == rows.size),
+        s"loaded rotation must be square ${rows.size}×${rows.size}")
+      rows
+    }
+    val cells: Option[ProductQuant.Cells] =
+      if (exists(s"$root/cells/super_model")) {
+        val nSub = spark.read.parquet(s"$root/cells/meta")
+          .collect().head.getInt(0)
+        require(nSub >= 1, s"loaded n_sub must be >= 1, got $nSub")
+        Some(Right(Similarity.TwoLevelModel(
+          centroids(s"$root/cells/super_model"),
+          spark.read.parquet(s"$root/cells/sub")
+            .select(col("super"), col("sub"), col("cvec")),
+          nSub)))
+      } else Option.when(exists(s"$root/cells"))(Left(centroids(s"$root/cells")))
+    val pqDir = if (exists(s"$root/slices")) root else s"$root/pq"
+    val slices = spark.read.parquet(s"$pqDir/slices")
       .orderBy(col("subspace"))
       .collect().map(r => (r.getInt(0), (r.getInt(1), r.getInt(2)))).toSeq
     require(slices.map(_._1) == slices.indices,
       "loaded PQ slices must cover subspaces 0..m-1 exactly")
-    val books = spark.read.parquet(s"$path/books")
+    val books = spark.read.parquet(s"$pqDir/books")
       .orderBy(col("subspace"), col("cid"))
       .collect()
       .map(r => (r.getInt(0), (r.getInt(1), r.getSeq[Long](2))))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     require(books.keySet == slices.indices.toSet,
       "every PQ subspace needs a codebook")
-    ProductQuant.Model(slices.map(_._2), slices.indices.map(books))
+    ProductQuant.Index(rotation, cells,
+      ProductQuant.Model(slices.map(_._2), slices.indices.map(books)))
   }
 }

@@ -14,60 +14,50 @@ import org.apache.spark.sql.functions._
   * IVF family (q73/q139) cuts the CANDIDATE COUNT; PQ cuts the BYTES
   * PER CANDIDATE — production systems (IVF-PQ/FAISS) compose both.
   *
+  * ONE index model, [[Index]], composes the stages the way FAISS's
+  * index factory does ("OPQ,IVF,PQ"): an optional rotation (fixed, or
+  * learned by the OPQ alternation), then an optional coarse quantizer
+  * (flat literal or two-level) whose presence switches encoding to
+  * per-cell RESIDUALS, then the PQ codebooks. The lifecycle is the
+  * same for every form: [[train]] once, [[encode]] the corpus to the
+  * stored `(c_id, [cell,] codes)` relation (an append is the encode of
+  * the new batch unioned on — encode is a pure per-row function of the
+  * frozen index), [[search]] over that relation, [[driftReport]] to
+  * decide when to retrain, and [[graft.io.VectorIndexArtifacts]]
+  * save/load between build and serve. Which stages run is fixed by the
+  * trained value, not by the function called.
+  *
   * Scoring is asymmetric distance computation (ADC): a query builds
   * one lookup table of exact squared distances from each of its `m`
   * sub-vectors to that subspace's `k` codes (m·k integer entries,
-  * computed once per query), after which scoring a corpus vector is
-  * `m` array lookups and an integer sum — no per-pair float kernel,
-  * and the corpus side touches only the code relation, never the
-  * full vectors.
+  * computed once per query — per probed cell in the residual form),
+  * after which scoring a corpus vector is `m` array lookups and an
+  * integer sum — no per-pair float kernel, and the corpus side touches
+  * only the code relation, never the full vectors.
   *
   * Engine-exact by the [[KMeans]] recipe: micro-quantized integer
   * sub-vectors, exact integer squared distances, first-match argmin =
   * smallest-code-id tie-break, truncating-integer centroid means —
   * so a SQL engine replaying the same rounds reproduces codebooks,
-  * codes, and ADC rankings bit for bit (the q142 oracle does).
+  * codes, and ADC rankings bit for bit (the q142 oracle does; q177,
+  * q178, q182, q184 replay the residual and rotated forms).
   *
   * 100 TB design: training cost is bounded by the deterministic
   * md5-rank sample regardless of corpus size (the
-  * [[Similarity.ivfCellsTrained]] rule; one TakeOrdered, m bounded
-  * fits). Encoding is a pure narrow map against LITERAL codebooks
-  * (no join, no shuffle — k·dim longs per subspace in the plan).
-  * ADC top-k follows [[Similarity.bruteForceTopK]]'s shape — queries
-  * broadcast, corpus streamed — but the streamed side is the code
-  * relation (m ints/row), and the bounded-heap aggregate
-  * ([[TopKPairs]]) keeps the shuffle at queries × k rows with
-  * map-side partial heaps. Distances stay under 2⁵³ (micro elements
+  * [[Similarity.ivfCellsTrained]] rule), drawn ONCE per train — every
+  * fit reads a rank prefix of it. Encoding is a narrow map against
+  * codebooks captured in compiled kernels (no shuffle; the two-level
+  * cell election is the one id-keyed aggregate). Search streams the
+  * code relation against broadcast query lookup tables and reduces
+  * through the bounded-heap aggregate ([[TopKPairs]]), so the shuffle
+  * is queries × k rows. Distances stay under 2⁵³ (micro elements
   * ≤ ~10⁶ ⇒ per-dim term ≤ 10¹², dim ≤ 10³ ⇒ sums ≤ 10¹⁵ only for
   * pathological norms; at unit-norm embeddings ≈ 10¹³), so the
   * negated-double heap key loses nothing.
   */
 object ProductQuant {
 
-  /** A PER-TRAIN daemon pool for overlapping the independent
-    * per-subspace codebook fits in [[train]] (the
-    * [[graft.pipelines.IngestSinks.archiveSink]] leg-overlap idiom).
-    * Sized 4: production m is 2–8, and each fit is a chain of tiny
-    * jobs — more in flight than ~4 just fight for executor slots.
-    * Created per call, NOT a shared lazy pool: pool threads snapshot
-    * the creating thread's inheritable SparkContext local properties
-    * (job group, streaming run-id tags) at THREAD CREATION, so a
-    * shared pool would stamp every later caller's fit jobs with the
-    * first caller's job group — cancelling that group could kill an
-    * unrelated train's jobs (the r17 ADVICE finding). Callers shut
-    * the pool down (finally); futures never spawn futures, so the
-    * fixed pool cannot deadlock. */
-  private def newBookFitPool(): java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(4,
-      new java.util.concurrent.ThreadFactory {
-        private val n = new java.util.concurrent.atomic.AtomicLong(0)
-        def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, s"pq-book-fit-${n.getAndIncrement()}")
-          t.setDaemon(true); t
-        }
-      })
-
-  /** A trained PQ model: per subspace its 1-based slice (start, len)
+  /** Trained PQ codebooks: per subspace its 1-based slice (start, len)
     * into the vector and a [[KMeans.Model]] codebook of micro-space
     * sub-centroids (code ids 1..k, the KMeans cid contract). */
   case class Model(slices: Seq[(Int, Int)], books: Seq[KMeans.Model]) {
@@ -80,13 +70,33 @@ object ProductQuant {
     def m: Int = slices.size
   }
 
+  /** A coarse quantizer: a flat literal [[KMeans.Model]] (Left) — the
+    * right tool to the documented ~10³-10⁴-cell literal cap — or a
+    * [[Similarity.TwoLevelModel]] (Right), whose ⌈√K⌉ literal supers
+    * and broadcast sub RELATION put no K-sized literal in any plan. */
+  type Cells = Either[KMeans.Model, Similarity.TwoLevelModel]
+
+  /** The index: optional micro rotation (dim×dim, row-major,
+    * entries = round(R_ij·10⁶); the quantized matrix is DATA both
+    * engines apply, so orthogonality after rounding costs exactness
+    * nothing), optional coarse quantizer (present ⇒ the PQ codebooks
+    * are trained on and encode RESIDUALS, vector − nearest cell
+    * centroid: the tighter within-cell distribution is why FAISS
+    * defaults to it, Jégou et al. 2011 §IV.B), and the PQ codebooks,
+    * all in the rotated domain when a rotation is present. */
+  case class Index(rotation: Option[Seq[Seq[Long]]], cells: Option[Cells],
+                   pq: Model) {
+    rotation.foreach(r =>
+      require(r.nonEmpty && r.forall(_.size == r.size),
+        "rotation must be square dim×dim"))
+  }
+
   /** Rows with a complete `dim`-element vector (the ANN family's
     * contract: NULL vectors, NULL elements, and wrong-length vectors
     * are excluded, never scored against a fake value). Compiled
     * predicate — the `exists(x.isNull)` HOF form is CodegenFallback
     * (interpreted lambda per element), and this filter fronts every
-    * corpus-sized ANN pass, often 2-3× per encode; the kernel applies
-    * the identical condition per row. */
+    * corpus-sized ANN pass. */
   private def cleanVecs(df: DataFrame, vecCol: String, dim: Int): DataFrame = {
     val ok = udf((v: scala.collection.Seq[java.lang.Double]) => {
       // iterator, not apply(i): Seq UDF arguments arrive as
@@ -101,80 +111,61 @@ object ProductQuant {
     df.filter(ok(col(vecCol).cast("array<double>")))
   }
 
-  /** Train `m` subspace codebooks of `k` codes each with `iters`
-    * integer-Lloyd rounds per subspace, over a bounded deterministic
-    * md5-rank sample (`sampleN = 0` auto-sizes to
-    * clamp(64·k, 4096, 65536) — constant training cost at any corpus
-    * size; a sample larger than the corpus degrades to the full
-    * corpus, which is what makes small-corpus oracles exact). All m
-    * fits draw their seed codes from the same sample rows
+  /** The rank-top `n` clean rows (idCol, vecCol) by the portable md5
+    * rank, ties by id — the one sample draw of the family. A draw over
+    * a rank-ordered draw of at least `n` rows returns the same rows as
+    * the draw over the whole corpus (the rank is a pure function of
+    * the id), so [[train]] draws ONCE, caches it, and every fit below
+    * reads a prefix of it bit-identically: one corpus selection pass
+    * per train instead of one per fit (the r11 `opq_train_q184`
+    * weak-scale finding). A sample larger than the corpus degrades to
+    * the full corpus, which is what makes small-corpus oracles exact. */
+  private def rankSample(df: DataFrame, idCol: String, vecCol: String,
+                         dim: Int, n: Int): DataFrame =
+    cleanVecs(df, vecCol, dim)
+      .withColumn("__r", Similarity.portableCentroidRank(col(idCol)))
+      .orderBy(col("__r"), col(idCol)).limit(n)
+      .select(col(idCol), col(vecCol))
+
+  /** Fit `m` subspace codebooks of `k` codes, `iters` integer-Lloyd
+    * rounds each, over the rank-top `n` rows of `df`. The m fits are
+    * INDEPENDENT Lloyd chains over disjoint slices of one cached
+    * sample, each a string of tiny driver-orchestrated jobs, so they
+    * overlap ([[graft.JobOverlap]]; guide §2.6); each fit is
+    * deterministic, so the codebooks are bit-identical to fitting the
+    * slices one at a time. Seed codes come from the same sample rows
     * ([[KMeans.fit]]'s portable-rank draw), sliced per subspace. */
-  def train(df: DataFrame, idCol: String, vecCol: String, dim: Int,
-            m: Int, k: Int, iters: Int, sampleN: Int = 0): Model = {
+  private def fitBooks(df: DataFrame, idCol: String, vecCol: String,
+                       dim: Int, m: Int, k: Int, iters: Int,
+                       n: Int): Model = {
     require(m >= 1, s"m must be >= 1, got $m")
     require(dim >= m && dim % m == 0,
       s"dim must be a positive multiple of m; got dim=$dim, m=$m")
     val len = dim / m
-    val n = if (sampleN > 0) sampleN
-      else math.min(65536, math.max(4096, 64 * k))
-    val sample = cleanVecs(df, vecCol, dim)
-      .withColumn("__r", Similarity.portableCentroidRank(col(idCol)))
-      .orderBy(col("__r"), col(idCol)).limit(n)
-      .select(col(idCol), col(vecCol))
-      .cache()
+    val slices = (0 until m).map(s => (s * len + 1, len))
+    val sample = rankSample(df, idCol, vecCol, dim, n).cache()
     try {
-      val slices = (0 until m).map(s => (s * len + 1, len))
-      // the m per-subspace fits are INDEPENDENT Lloyd chains over
-      // disjoint slices of the same cached sample — each is a string
-      // of tiny driver-orchestrated jobs (init draw + iters
-      // assignment/update rounds) whose results never interact, so
-      // submitting them serially from one thread pays every job's
-      // scheduling tail m times (guide §2.6). Overlap them on the
-      // shared pool; order is preserved (futures awaited in slice
-      // order) and each fit is deterministic, so the model is
-      // bit-identical to the serial form. Measured on the q177 bench
-      // entry (in-query trainResidual, m=2, sf0.1 local[32] solo
-      // min-of-5): 4.05 s serial → 3.49/3.53 s overlapped.
-      val books = {
-        val pool = newBookFitPool()
-        try {
-          val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          val inf = scala.concurrent.duration.Duration.Inf
-          slices.map { case (start, sliceLen) =>
-            scala.concurrent.Future(KMeans.fit(
-              sample.select(col(idCol),
-                slice(col(vecCol), start, sliceLen).as("__sub")),
-              idCol, "__sub", k, iters))(ec)
-          }.map(f => scala.util.Try(scala.concurrent.Await.result(f, inf)))
-            .map(_.get)
-        } finally { pool.shutdown() }
-      }
-      Model(slices, books)
+      Model(slices, graft.JobOverlap.all("pq-book-fit")(
+        slices.map { case (start, sliceLen) => () =>
+          KMeans.fit(sample.select(col(idCol),
+              slice(col(vecCol), start, sliceLen).as("__sub")),
+            idCol, "__sub", k, iters)
+        }: _*))
     } finally { sample.unpersist(); () }
   }
 
-  /** Per-subspace distance array of a micro vector against a LITERAL
-    * codebook: k exact integer squared distances in code-id order. */
-  private def bookDists(micro: Column, start: Int, len: Int,
-                        book: KMeans.Model): Column =
-    transform(typedlit(book.sortBy(_._1).map(_._2)),
-      c => KMeans.sqDistMicro(slice(micro, start, len), c))
-
   /** Compiled PQ-code argmin kernel: micro vector in, the m 1-based
-    * nearest-code ids out, over the model's codebooks captured as
-    * primitive arrays. The expression form ([[bookDists]] +
-    * array_position/array_min — a `transform` over a `typedlit` book
-    * with an `aggregate(zip_with(...))` per code) is a higher-order
-    * function chain, which is CodegenFallback: INTERPRETED per row
-    * with boxed allocations per (row, code, dim). Invisible at toy
-    * arity (k=4), it measured ~20 ms/ROW at production arity
-    * (m=8, k=256, dim=64 — the r11 weak-scale ladder caught 41 s for
-    * 2 000 rows) where this kernel runs the same exact-integer
-    * arithmetic in microseconds. Query-side LUT construction keeps
-    * the expression form (query relations are model-sized); every
-    * CORPUS-sized encode goes through here. Semantics identical and
-    * oracle-pinned: id-sorted book, strict `<` keeps the FIRST
-    * minimum = smallest code id, exact integer micro distances. */
+    * nearest-code ids out, over the codebooks captured as primitive
+    * arrays. The expression form (a `transform` over a `typedlit` book
+    * with an `aggregate(zip_with(...))` per code) is CodegenFallback:
+    * INTERPRETED per row with boxed allocations per (row, code, dim) —
+    * ~20 ms/ROW at production arity (m=8, k=256, dim=64; the r11
+    * weak-scale ladder caught 41 s for 2 000 rows) where this kernel
+    * runs the same exact-integer arithmetic in microseconds. Every
+    * corpus-sized encode goes through here; query-side lookup tables
+    * keep the expression form (query relations are model-sized).
+    * Oracle-pinned semantics: id-sorted book, strict `<` keeps the
+    * FIRST minimum = smallest code id, exact integer micro distances. */
   private def codesKernel(model: Model)
       : org.apache.spark.sql.expressions.UserDefinedFunction = {
     val books: Array[Array[Array[Long]]] =
@@ -207,622 +198,38 @@ object ProductQuant {
     })
   }
 
-  /** Encode every vector to its `m` nearest-code ids — a pure narrow
-    * map against the frozen codebooks (no join, no shuffle; this is
-    * the pass that shrinks the corpus index 4·dim/m-fold), argmin via
-    * the compiled [[codesKernel]]. First minimum = smallest-code-id
-    * tie-break, the KMeans convention. Output:
-    * (idCol, codes array<int>, 1-based ids). */
-  def encode(df: DataFrame, idCol: String, vecCol: String, dim: Int,
-             model: Model): DataFrame =
-    cleanVecs(df, vecCol, dim)
-      .select(col(idCol),
-        codesKernel(model)(KMeans.microVec(col(vecCol))).as("codes"))
-
-  /** Query-side ADC lookup tables: (q_id, __lut0..__lut{m-1}), each
-    * lut the k exact integer squared distances from the query's
-    * sub-vector to that subspace's codes, in code-id order. Built once
-    * per query in the (broadcast) projection. */
-  private def queryLuts(queries: DataFrame, idCol: String, vecCol: String,
-                        dim: Int, model: Model): DataFrame = {
-    val micro = KMeans.microVec(col(vecCol))
-    val lutCols = model.slices.zip(model.books).zipWithIndex.map {
+  /** The query-side ADC lookup tables of a micro vector column:
+    * `__lut0..__lut{m-1}`, each the k exact integer squared distances
+    * from the sub-vector to that subspace's codes, in code-id order. */
+  private def lutCols(micro: Column, pq: Model): Seq[Column] =
+    pq.slices.zip(pq.books).zipWithIndex.map {
       case (((start, len), book), i) =>
-        bookDists(micro, start, len, book).as(s"__lut$i")
+        transform(typedlit(book.sortBy(_._1).map(_._2)),
+          c => KMeans.sqDistMicro(slice(micro, start, len), c)).as(s"__lut$i")
     }
-    cleanVecs(queries, vecCol, dim)
-      .select(col(idCol).as("q_id") +: lutCols: _*)
-  }
 
-  /** The ADC score of a `codes` row against the joined query's lookup
-    * tables: m `element_at`s and an integer sum. */
-  private def adcScore(model: Model): Column =
-    (0 until model.m).map(i =>
-      element_at(col(s"__lut$i"), element_at(col("codes"), i + 1)))
-      .reduce(_ + _)
-
-  /** Heap top-k over ADC-scored pairs → (q_id, rank, c_id, adc_dist),
-    * ranked adc asc / c_id asc ([[TopKPairs]]' negated-double key is
-    * exact over these integer magnitudes — class doc). */
-  private def adcRank(scored: DataFrame, k: Int): DataFrame =
-    scored
+  /** The shared search tail: score (q_id, c_id, codes, __lut*) pairs —
+    * m `element_at`s and an integer sum per pair — and keep each
+    * query's k best in the bounded-heap aggregate → (q_id, rank, c_id,
+    * adc_dist), ranked adc asc / c_id asc ([[TopKPairs]]' negated-double
+    * key is exact over these integer magnitudes — class doc). */
+  private def adcRank(pairs: DataFrame, pq: Model, k: Int): DataFrame =
+    pairs
+      .withColumn("__adc", (0 until pq.m).map(i =>
+        element_at(col(s"__lut$i"), element_at(col("codes"), i + 1)))
+        .reduce(_ + _))
       .groupBy(col("q_id"))
       .agg(TopKPairs.topK(k)(-col("__adc"), col("c_id")).as("nn"))
       .select(col("q_id"), posexplode(col("nn")).as(Seq("pos", "p")))
       .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
         col("p.id").as("c_id"), (-col("p.sim")).cast("long").as("adc_dist"))
 
-  /** ADC top-k: every `queries` vector against the PQ-encoded
-    * `corpus` (self-matches on id excluded). The corpus is scored
-    * from CODES ONLY — each query carries its m per-subspace lookup
-    * tables (m·k exact integer distances, built once in the broadcast
-    * projection) and a candidate costs m `element_at`s and an integer
-    * sum. Ranking: adc_dist asc, ties by c_id asc (the negated-double
-    * heap key is exact — class doc). Output:
-    * (q_id, rank, c_id, adc_dist). */
-  def adcTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              vecCol: String, dim: Int, model: Model, k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    // the bruteForceTopK fan-out rule: a small corpus arriving as one
-    // split would serialize the scoring loop onto a single task
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val codes = encode(corpus, idCol, vecCol, dim, model)
-      .select(col(idCol).as("c_id"), col("codes"))
-      .repartition(par)
-    val q = queryLuts(queries, idCol, vecCol, dim, model)
-    val scored = codes.crossJoin(broadcast(q))
-      .filter(col("c_id") =!= col("q_id"))
-      .withColumn("__adc", adcScore(model))
-    adcRank(scored, k)
-  }
+  // ---- Rotation (OPQ: Ge et al., "Optimized Product Quantization",
+  // CVPR 2013 — a pre-rotation decorrelates the fixed subspace slices
+  // so the same code budget quantizes better)
 
-  /** IVF-PQ search (Jégou et al. 2011 §V — the FAISS `IndexIVFPQ`
-    * shape, here with `by_residual=false`: codes are learned on the
-    * raw vectors, not per-cell residuals, which keeps every stage
-    * engine-replayable): a TRAINED coarse quantizer
-    * ([[Similarity.ivfCellsTrained]]) prunes CANDIDATES to vectors
-    * sharing one of the query's `nProbe` cells, then PQ codes score
-    * only those survivors by exact-integer ADC. This composes the two
-    * legs of the ANN family — IVF cuts the candidate COUNT
-    * (n → ≈ n·nProbe/nCells per query), PQ cuts the BYTES per
-    * candidate (4·dim → m small ints) — which is what a production
-    * vector index does: at 10¹⁰ vectors the per-query work is the
-    * inverted-list fraction, and the corpus-side state the scoring
-    * pass touches is the (id, cell) relation plus the m-int code
-    * relation; the full float vectors are never read after encoding.
-    *
-    * Plan shape: cell model + assignment are [[Similarity.ivfCellsTrained]]'s
-    * narrow literal peel (no join, no shuffle, constant-bounded
-    * training); the query side's probed cells (|Q|·nProbe rows) and
-    * LUTs broadcast; candidate generation is one broadcast equi-join
-    * on `cell` against the corpus assignment + DISTINCT — never a
-    * corpus×queries cross join (PlanAuditSpec pins this); scoring
-    * joins the candidate relation to the code relation on id
-    * (AQE-splittable shuffle) and reduces through the bounded-heap
-    * aggregate (shuffle = queries × k rows).
-    *
-    * Self-kNN form: `queries` must be drawn from `corpus` (share its
-    * id space) — the cell model trains once on the corpus and both
-    * sides read their probed cells from the same assignment
-    * (the q139 candidate semantics); self-matches excluded. With
-    * `nProbe >= nCells` every pair shares a cell and the result
-    * equals [[adcTopK]] exactly (spec-proven identity). Output:
-    * (q_id, rank, c_id, adc_dist), ranked adc asc / c_id asc. */
-  def ivfAdcTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                 vecCol: String, dim: Int, model: Model, k: Int,
-                 nCells: Int, nProbe: Int = 2,
-                 ivfIters: Int = 2): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val cells = Similarity.ivfCellsTrained(corpus, idCol, vecCol,
-      nCells, nProbe, ivfIters)
-    adcOverCells(cells, corpus, queries, idCol, vecCol, dim, model, k)
-  }
-
-  /** [[ivfAdcTopK]] behind the TWO-LEVEL coarse quantizer
-    * ([[Similarity.ivfCellsTwoLevel]]) — the IVFADC shape past the
-    * literal-centroid cap: at 10¹⁰ vectors the √n sizing rule wants
-    * ≈10⁵ cells, and a 10⁵·dim literal centroid array is a
-    * plan-killing expression tree. Here NO K-sized literal exists
-    * anywhere: the only literal model is the ⌈√K⌉ super-centroid
-    * array; the K sub-centroids live in a broadcast RELATION and the
-    * candidate/scoring tail is byte-identical to [[ivfAdcTopK]]
-    * (same cell equi-join, same code-only ADC, PlanAuditSpec pins
-    * both properties). Same self-kNN contract and output shape. */
-  def ivfAdcTopKTwoLevel(corpus: DataFrame, queries: DataFrame,
-                         idCol: String, vecCol: String, dim: Int,
-                         model: Model, k: Int, nCells: Int,
-                         nProbe: Int = 2, superProbe: Int = 2,
-                         ivfIters: Int = 2): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    // eager localCheckpoint: the cell relation feeds BOTH the query
-    // side and the corpus side of the candidate join (the round-7
-    // multi-consumer rule), and its lineage holds the grouped-Lloyd
-    // training rounds — n rows of two ints
-    val cells = Similarity.ivfCellsTwoLevel(corpus, idCol, vecCol,
-        nCells, nProbe, superProbe, ivfIters)
-      .localCheckpoint()
-    adcOverCells(cells, corpus, queries, idCol, vecCol, dim, model, k)
-  }
-
-  /** The shared IVFADC tail: candidates from the cell equi-join
-    * (never corpus×queries), ADC scoring from codes only, bounded-heap
-    * ranking. `cells` is any (id, cell) coarse assignment. */
-  private def adcOverCells(cells: DataFrame, corpus: DataFrame,
-                           queries: DataFrame, idCol: String,
-                           vecCol: String, dim: Int, model: Model,
-                           k: Int): DataFrame = {
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val codes = encode(corpus, idCol, vecCol, dim, model)
-      .select(col(idCol).as("c_id"), col("codes"))
-      .repartition(par)
-    val q = queryLuts(queries, idCol, vecCol, dim, model)
-    val qCells = cells
-      .join(broadcast(q.select(col("q_id").as("id"))), "id")
-      .select(col("id").as("q_id"), col("cell"))
-    val cands = broadcast(qCells)
-      .join(cells.select(col("id").as("c_id"), col("cell")), "cell")
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"))
-      .distinct()
-    val scored = cands
-      .join(codes, "c_id")
-      .join(broadcast(q), "q_id")
-      .withColumn("__adc", adcScore(model))
-    adcRank(scored, k)
-  }
-
-  /** Two-stage PQ search: ADC candidate generation (`candK` per
-    * query, from codes only) re-ranked by EXACT cosine over the
-    * candidates' full vectors — the [[Similarity.quantizedRerank]]
-    * shape with PQ in the cheap stage; only queries × candK full
-    * vectors are ever touched by the float kernel. Self-kNN form
-    * (queries = corpus). Output: (q_id, rank, c_id, sim). */
-  def adcRerank(df: DataFrame, idCol: String, vecCol: String, dim: Int,
-                model: Model, k: Int, candK: Int): DataFrame = {
-    require(candK >= k, s"candK ($candK) must be >= k ($k)")
-    val cands = adcTopK(df, df, idCol, vecCol, dim, model, candK)
-      .select(col("q_id"), col("c_id"))
-    val vecs = cleanVecs(df, vecCol, dim)
-      .select(col(idCol), col(vecCol))
-    val scored = cands
-      .join(vecs.select(col(idCol).as("q_id"), col(vecCol).as("__qv")), "q_id")
-      .join(vecs.select(col(idCol).cast("long").as("c_id"),
-        col(vecCol).as("__cv")), "c_id")
-      .select(col("q_id"), col("c_id"),
-        graft.functions.VectorFns.cosine(col("__qv"), col("__cv")).as("sim"))
-      .filter(col("sim").isNotNull)
-    scored
-      .groupBy(col("q_id"))
-      .agg(TopKPairs.topK(k)(col("sim"), col("c_id")).as("nn"))
-      .select(col("q_id"), posexplode(col("nn")).as(Seq("pos", "p")))
-      .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("p.id").as("c_id"), col("p.sim").as("sim"))
-  }
-
-  // ---- Residual encoding (by_residual = true, the FAISS default) -------
-
-  /** A residual IVF-PQ index: the coarse cell model plus PQ codebooks
-    * trained on RESIDUALS (vector − its nearest cell centroid). The
-    * residual distribution is tighter than the raw one — the same
-    * code budget spends its precision on the within-cell geometry
-    * that actually ranks candidates, which is why FAISS defaults to
-    * it (Jégou et al. 2011 §IV.B).
-    *
-    * The coarse model here is the FLAT literal form — the right tool
-    * to the documented ~10³-10⁴-cell literal cap (the q139/q143
-    * trade); past it, compose with the two-level quantizer by joining
-    * residuals from the broadcast sub-centroid RELATION instead of
-    * `element_at` on a literal (the q168 pattern — the residual
-    * arithmetic itself is join-shape-agnostic). */
-  case class ResidualModel(cells: KMeans.Model, pq: Model)
-
-  /** Micro-exact residual of a micro vector against its cell's
-    * centroid, re-expressed in the FLOAT domain the PQ machinery
-    * consumes: (micro − centroid)/10⁶ as doubles. The round-trip is
-    * EXACT — `microVec(round(k/10⁶·10⁶)) = k` for |k| < 2⁵¹ (double
-    * mul/div are correctly rounded) — so every downstream distance is
-    * the same integer an all-integer replay computes. */
-  private def residualExpr(micro: Column, cellCol: Column,
-                           cells: KMeans.Model): Column = {
-    val cents = typedlit(cells.sortBy(_._1).map(_._2))
-    transform(zip_with(micro, element_at(cents, cellCol.cast("int")),
-      (a, b) => a - b), x => (x.cast("double") / lit(1e6)))
-  }
-
-  /** Compiled nearest-cell + residual kernel: micro vector in,
-    * struct(cell 1-based int, rvec float residual) out, over the flat
-    * cell model captured as primitive arrays — the [[codesKernel]]
-    * move applied to the residual derivation, which runs CORPUS-sized
-    * in [[encodeResidual]] and sample-sized-but-repeated under every
-    * [[trainResidual]] book fit. The prior expression form (a
-    * `transform` of k sqDistMicro calls over a typedlit model +
-    * argmin + a zip_with subtraction) is a CodegenFallback HOF chain,
-    * interpreted per row with boxed allocations per (row, cell, dim)
-    * — profiled at ~0.66 ms/row on the q177 fixture (the 2.7 s
-    * single-task sample materializations under the book fits).
-    * Semantics identical and oracle-pinned: exact integer distances,
-    * strict `<` keeps the FIRST minimum = smallest 1-based position
-    * (the KMeans argmin rule), residual = (micro − centroid) in the
-    * exact long→double/10⁶ round-trip. */
-  private def residualKernel(cells: KMeans.Model)
-      : org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val cents: Array[Array[Long]] =
-      cells.sortBy(_._1).map(_._2.toArray).toArray
-    udf((mvs: scala.collection.Seq[Long]) => {
-      if (mvs == null) null
-      else {
-        val mv = mvs.toArray // Seq args arrive as List — O(i) apply
-        var best = 0
-        var bestD = Long.MaxValue
-        var c = 0
-        while (c < cents.length) {
-          val cent = cents(c)
-          var d = 0L
-          var i = 0
-          while (i < cent.length) {
-            val t = mv(i) - cent(i); d += t * t; i += 1
-          }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        val bc = cents(best)
-        val rv = new Array[Double](bc.length)
-        var i = 0
-        while (i < bc.length) {
-          rv(i) = (mv(i) - bc(i)).toDouble / 1e6; i += 1
-        }
-        (best + 1, rv)
-      }
-    })
-  }
-
-  /** (idCol, cell, rvec): nearest-cell assignment (dist asc, cid asc
-    * — the KMeans argmin rule) + the residual vector. Narrow: one
-    * compiled-kernel map ([[residualKernel]]), no join, no shuffle. */
-  private def residualVecs(df: DataFrame, idCol: String, vecCol: String,
-                           dim: Int, cells: KMeans.Model): DataFrame =
-    cleanVecs(df, vecCol, dim)
-      .withColumn("__a",
-        residualKernel(cells)(KMeans.microVec(col(vecCol))))
-      .select(col(idCol), col("__a._1").as("cell"),
-        col("__a._2").as("rvec"))
-
-  /** Train a residual IVF-PQ index: coarse cells on the raw vectors,
-    * PQ codebooks on the residuals — BOTH over the bounded
-    * deterministic md5-rank sample (clamp(64·nCells, 4096, 65536) for
-    * the cells; [[train]] applies its own identical rule to the
-    * residual relation), so training cost is constant in corpus size
-    * — the ivfCellsTrained/train convention. A sample larger than the
-    * corpus degrades to the full corpus, which keeps small-corpus
-    * oracles exact. */
-  def trainResidual(df: DataFrame, idCol: String, vecCol: String,
-                    dim: Int, m: Int, k: Int, iters: Int, nCells: Int,
-                    cellIters: Int = 2): ResidualModel = {
-    val nCell = math.min(65536, math.max(4096, 64 * nCells))
-    val nPq = math.min(65536, math.max(4096, 64 * k))
-    // ONE rank-sample draw covers both fits; the sub-draws below are
-    // prefixes of the same (rank, id) order, so each equals the draw
-    // the corresponding fit would have made against the full corpus
-    val sample = cleanVecs(df, vecCol, dim)
-      .withColumn("__r", Similarity.portableCentroidRank(col(idCol)))
-      .orderBy(col("__r"), col(idCol)).limit(math.max(nCell, nPq))
-      .select(col(idCol), col(vecCol), col("__r"))
-      .cache()
-    try {
-      val cells = KMeans.fit(
-        sample.orderBy(col("__r"), col(idCol)).limit(nCell)
-          .select(col(idCol), col(vecCol)),
-        idCol, vecCol, nCells, cellIters)
-      // sample-FIRST residuals: [[train]]'s own md5-rank draw over the
-      // residual relation would select exactly the rank-top nPq corpus
-      // rows (residuals are per-row pure and complete), so computing
-      // residuals over that prefix instead of the whole corpus changes
-      // nothing downstream — and removes the one full-corpus
-      // residual pass training used to pay
-      val resid = residualVecs(
-        sample.orderBy(col("__r"), col(idCol)).limit(nPq)
-          .select(col(idCol), col(vecCol)),
-        idCol, vecCol, dim, cells)
-      ResidualModel(cells,
-        train(resid, idCol, "rvec", dim, m, k, iters, sampleN = nPq))
-    } finally { sample.unpersist(); () }
-  }
-
-  /** The corpus-side INDEX relation of the FLAT residual form:
-    * (c_id, cell, codes array<int>) — nearest cell + residual PQ
-    * codes fused into ONE narrow pass (cell assignment, residual, and
-    * code argmins are all expressions over the same row — the corpus
-    * is scanned once). [[encodeResidualTwoLevel]]'s flat twin: this
-    * is the relation a frozen flat index STORES, serves from
-    * ([[ivfAdcResidualTopKOverCodes]]), and appends to (encode a
-    * fresh batch with the frozen model, union on — spec-proven
-    * ≡ batch rebuild). */
-  def encodeResidual(df: DataFrame, idCol: String, vecCol: String,
-                     dim: Int, model: ResidualModel): DataFrame = {
-    val rv = residualVecs(df, idCol, vecCol, dim, model.cells)
-    rv.select(col(idCol).as("c_id"), col("cell"),
-      codesKernel(model.pq)(KMeans.microVec(col("rvec"))).as("codes"))
-  }
-
-  /** Residual IVF-PQ search: candidates share one of the query's
-    * `nProbe` nearest cells (as [[ivfAdcTopK]]); scoring is ADC over
-    * RESIDUAL codes — the query's lookup tables are built PER PROBED
-    * CELL from the query's residual against that cell (FAISS's
-    * per-list LUT recomputation), |Q|·nProbe LUT rows, broadcast.
-    * Exact integer distances end to end; self-kNN form; output
-    * (q_id, rank, c_id, adc_dist) ranked adc asc / c_id asc. */
-  def ivfAdcResidualTopK(corpus: DataFrame, queries: DataFrame,
-                         idCol: String, vecCol: String, dim: Int,
-                         model: ResidualModel, k: Int,
-                         nProbe: Int = 2): DataFrame = {
-    // repartition for the scoring fan-out (the adcTopK rule: a small
-    // corpus arriving as one split would serialize the scoring loop)
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val codes = encodeResidual(corpus, idCol, vecCol, dim, model)
-      .repartition(par)
-    ivfAdcResidualTopKOverCodes(codes, queries, idCol, vecCol, dim,
-      model, k, nProbe)
-  }
-
-  /** Search over a PRECOMPUTED flat (c_id, cell, codes) relation —
-    * [[ivfAdcResidualTopKTwoLevelOverCodes]]' flat twin, closing the
-    * API asymmetry where only the two-level form could serve a
-    * LOADED index without re-encoding the corpus: `codes` is a stored
-    * [[encodeResidual]] relation (or stored ∪ appended batches);
-    * only the query side touches the model. The caller owns `codes`'
-    * partitioning (a loaded parquet relation is already split). */
-  def ivfAdcResidualTopKOverCodes(codes: DataFrame, queries: DataFrame,
-                                  idCol: String, vecCol: String, dim: Int,
-                                  model: ResidualModel, k: Int,
-                                  nProbe: Int = 2): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    // query side: nProbe nearest cells via a narrow sorted-struct
-    // slice over the literal model, then one LUT row per (q, cell)
-    // from the query's residual AGAINST THAT CELL
-    val ordered = model.cells.sortBy(_._1)
-    val probed = cleanVecs(queries, vecCol, dim)
-      .withColumn("__m", KMeans.microVec(col(vecCol)))
-      .withColumn("__dc", sort_array(zip_with(
-        transform(typedlit(ordered.map(_._2)),
-          c => KMeans.sqDistMicro(col("__m"), c)),
-        sequence(lit(1), lit(ordered.size)),
-        (d, i) => struct(d.as("d"), i.cast("int").as("cell")))))
-      .select(col(idCol).as("q_id"), col("__m"),
-        explode(slice(col("__dc"), 1, math.min(nProbe, ordered.size)))
-          .as("t"))
-      .select(col("q_id"), col("__m"), col("t.cell").as("cell"))
-    val lutCols = model.pq.slices.zip(model.pq.books).zipWithIndex.map {
-      case (((start, len), book), i) =>
-        transform(typedlit(book.sortBy(_._1).map(_._2)),
-          c => KMeans.sqDistMicro(
-            slice(KMeans.microVec(
-              residualExpr(col("__m"), col("cell"), model.cells)),
-              start, len), c)).as(s"__lut$i")
-    }
-    val luts = probed.select(
-      Seq(col("q_id"), col("cell")) ++ lutCols: _*)
-    // every corpus point lives in exactly ONE cell (nearest-only
-    // assignment), so each (q, c) pair meets at most once — no
-    // distinct/dedup stage needed (FAISS's scan-own-list property)
-    val scored = codes
-      .join(broadcast(luts), Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("__adc", adcScore(model.pq))
-    adcRank(scored, k)
-  }
-
-  // ---- Residual ∘ two-level: the no-K-literal residual index ----------
-
-  /** Residual IVF-PQ over the TWO-LEVEL coarse quantizer — the
-    * composition that removes the last literal-cap constraint from
-    * the highest-recall index form: cells come from
-    * [[Similarity.TwoLevelModel]] (⌈√K⌉ literal supers + a broadcast
-    * sub RELATION), and residuals subtract the cell centroid via a
-    * broadcast JOIN on the cell id instead of `element_at` on a
-    * K-sized literal. Everything else is the q177 shape. */
-  case class ResidualTwoLevelModel(cells: Similarity.TwoLevelModel,
-                                   pq: Model)
-
-  /** (cell, cvec): the sub relation keyed by the flat cell id. */
-  private def cellVecsOf(tl: Similarity.TwoLevelModel): DataFrame =
-    tl.sub.select(
-      ((col("super") - 1) * tl.nSub + col("sub")).cast("int").as("cell"),
-      col("cvec"))
-
-  /** (idCol, cell, rvec): nearest two-level cell (within the
-    * superProbe beam) + the join-shaped residual. */
-  /** Compiled residual-subtraction kernel: (micro, centroid) in, the
-    * float residual out — the zip_with/(÷10⁶) HOF pair compiled (it
-    * runs CORPUS-sized in the two-level encode; same exact long →
-    * double/10⁶ round-trip). A length mismatch yields NULL (the
-    * zip_with null-pad path's downstream effect: the row carries no
-    * usable residual and every consumer's cleanVecs drops it). */
-  private val residualFloat =
-    udf((as: scala.collection.Seq[Long], bs: scala.collection.Seq[Long]) => {
-      if (as == null || bs == null || as.length != bs.length) null
-      else {
-        val a = as.toArray // Seq args arrive as List — O(i) apply
-        val b = bs.toArray
-        val out = new Array[Double](a.length)
-        var i = 0
-        while (i < a.length) {
-          out(i) = (a(i) - b(i)).toDouble / 1e6; i += 1
-        }
-        out
-      }
-    })
-
-  private def residualVecsTwoLevel(df: DataFrame, idCol: String,
-                                   vecCol: String, dim: Int,
-                                   tl: Similarity.TwoLevelModel,
-                                   superProbe: Int): DataFrame =
-    // the with-vector assignment carries __v through its election
-    // aggregate, so the cell attaches WITHOUT the corpus self-join on
-    // id this used to pay (guide §2.4; Similarity
-    // .assignNearestTwoLevelWithVec's equality argument)
-    Similarity.assignNearestTwoLevelWithVec(
-        cleanVecs(df, vecCol, dim), idCol, vecCol, tl, superProbe)
-      .join(broadcast(cellVecsOf(tl)), "cell")
-      .select(col("id").as(idCol), col("cell"),
-        residualFloat(col("__v"), col("cvec")).as("rvec"))
-
-  /** The ONE corpus-linear pass of a composed train: the rank-top `n`
-    * clean rows, cached. Every k-means fit downstream draws its own
-    * md5-rank sample as a PREFIX of this relation — bit-identical to
-    * the draw it would have made against the full corpus, because the
-    * rank is a pure function of the row id (shared by every fit) and
-    * a rank-ordered TakeOrdered over a rank-ordered prefix returns
-    * that prefix. Before this, a composed build (OPQ alternation +
-    * super cells + sub cells + m residual books ≈ a dozen fits) paid
-    * a dozen corpus-linear TakeOrdered selections; now it pays one
-    * (the r11 `opq_train_q184` weak-scale finding). */
-  private def sharedTrainSample(df: DataFrame, idCol: String,
-                                vecCol: String, dim: Int,
-                                n: Int): DataFrame =
-    cleanVecs(df, vecCol, dim)
-      .withColumn("__r", Similarity.portableCentroidRank(col(idCol)))
-      .orderBy(col("__r"), col(idCol)).limit(n)
-      .select(col(idCol), col(vecCol))
-      .cache()
-
-  /** Train the composed index: two-level cells on the raw vectors,
-    * PQ codebooks on the join-shaped residuals (both sample-bounded;
-    * [[train]] applies its own rank-sample rule to the residual
-    * relation). All fits draw prefixes of ONE cached
-    * [[sharedTrainSample]] — one corpus selection pass total instead
-    * of one per fit; bit-identical by the prefix argument there.
-    * (The shared draw applies the ANN-family cleanVecs contract
-    * uniformly, so wrong-length vectors are excluded from cell
-    * training too — previously only NULL-element rows were.) */
-  def trainResidualTwoLevel(df: DataFrame, idCol: String, vecCol: String,
-                            dim: Int, m: Int, k: Int, iters: Int,
-                            nCells: Int, cellIters: Int = 2,
-                            superProbe: Int = 2): ResidualTwoLevelModel = {
-    // auto-cell sizing counts cleanVecs rows (NULL AND wrong-length
-    // excluded) — the same population sharedTrainSample trains on, and
-    // the same count trainOpqResidualTwoLevel resolves, so the two
-    // composed-train entry points pick identical nCells on any corpus
-    val kCells = if (nCells > 0) nCells
-      else Similarity.suggestCells(cleanVecs(df, vecCol, dim).count())
-    val nTl = math.min(262144, math.max(4096, 64 * kCells))
-    val nPq = math.min(65536, math.max(4096, 64 * k))
-    val shared = sharedTrainSample(df, idCol, vecCol, dim,
-      math.max(nTl, nPq))
-    try {
-      val tl = Similarity.trainTwoLevelCells(shared, idCol, vecCol,
-        kCells, cellIters, sampleN = nTl)
-      // sample-FIRST residuals (the trainResidual argument): [[train]]'s
-      // rank draw over the residual relation is the rank-top nPq corpus
-      // rows, so residuals are computed over that prefix only
-      val pqSample = shared
-        .withColumn("__r", Similarity.portableCentroidRank(col(idCol)))
-        .orderBy(col("__r"), col(idCol)).limit(nPq)
-        .select(col(idCol), col(vecCol))
-      val resid = residualVecsTwoLevel(pqSample, idCol, vecCol, dim, tl,
-        superProbe)
-      ResidualTwoLevelModel(tl,
-        train(resid, idCol, "rvec", dim, m, k, iters, sampleN = nPq))
-    } finally { shared.unpersist(); () }
-  }
-
-  /** The corpus-side INDEX relation of the residual two-level form:
-    * (c_id, cell, codes array<int>) — nearest two-level cell +
-    * residual PQ codes, one fused narrow pass (cell assignment,
-    * residual join, code argmins over the same row). This is the
-    * relation a frozen index STORES and serves from — and the
-    * assign-only APPEND path: encoding a fresh vector batch with a
-    * loaded frozen model (no retrain) and unioning it onto the stored
-    * relation is exactly what a batch rebuild over old ∪ new computes
-    * (encode is a pure per-row function of the frozen model —
-    * spec-proven append ≡ rebuild), so incremental ingest is a union,
-    * never a retrain. Pair with [[residualDriftReportTwoLevel]] to
-    * decide WHEN the frozen model has drifted enough to retrain. */
-  def encodeResidualTwoLevel(df: DataFrame, idCol: String, vecCol: String,
-                             dim: Int, model: ResidualTwoLevelModel,
-                             superProbe: Int = 2): DataFrame = {
-    val rv = residualVecsTwoLevel(df, idCol, vecCol, dim, model.cells,
-      superProbe)
-    rv.select(col(idCol).as("c_id"), col("cell"),
-      codesKernel(model.pq)(KMeans.microVec(col("rvec"))).as("codes"))
-  }
-
-  /** [[ivfAdcResidualTopK]] behind the two-level quantizer: same
-    * candidate semantics (one cell per corpus point, per-(q, cell)
-    * LUTs), NO K-sized literal anywhere — the super model is the only
-    * literal centroid array in the plan. Output
-    * (q_id, rank, c_id, adc_dist), adc asc / c_id asc. */
-  def ivfAdcResidualTopKTwoLevel(corpus: DataFrame, queries: DataFrame,
-                                 idCol: String, vecCol: String, dim: Int,
-                                 model: ResidualTwoLevelModel, k: Int,
-                                 nProbe: Int = 2,
-                                 superProbe: Int = 2): DataFrame = {
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    // the adcTopK fan-out rule: a small corpus arriving as one split
-    // would serialize the scoring loop onto a single task
-    val codes = encodeResidualTwoLevel(corpus, idCol, vecCol, dim, model,
-      superProbe).repartition(par)
-    ivfAdcResidualTopKTwoLevelOverCodes(codes, queries, idCol, vecCol,
-      dim, model, k, nProbe, superProbe)
-  }
-
-  /** Search over a PRECOMPUTED (c_id, cell, codes) relation — the
-    * serve-frozen / incremental-append form of
-    * [[ivfAdcResidualTopKTwoLevel]]: `codes` is a stored index
-    * relation (or stored ∪ [[encodeResidualTwoLevel]] of an appended
-    * batch), loaded as data; only the query side touches the model.
-    * The caller owns `codes`' partitioning (a loaded parquet relation
-    * is already split; repartition only if it arrives as one file). */
-  def ivfAdcResidualTopKTwoLevelOverCodes(codes: DataFrame,
-                                          queries: DataFrame,
-                                          idCol: String, vecCol: String,
-                                          dim: Int,
-                                          model: ResidualTwoLevelModel,
-                                          k: Int, nProbe: Int = 2,
-                                          superProbe: Int = 2): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val probed = Similarity.assignTwoLevelCells(queries, idCol, vecCol,
-        model.cells, nProbe, superProbe)
-      .select(col("id").as("q_id"), col("cell"))
-    val qr = cleanVecs(queries, vecCol, dim)
-      .select(col(idCol).as("q_id"), KMeans.microVec(col(vecCol)).as("__m"))
-      .join(probed, "q_id")
-      .join(broadcast(cellVecsOf(model.cells)), "cell")
-      .withColumn("__rm", zip_with(col("__m"), col("cvec"), (a, b) => a - b))
-    val lutCols = model.pq.slices.zip(model.pq.books).zipWithIndex.map {
-      case (((start, len), book), i) =>
-        bookDists(col("__rm"), start, len, book).as(s"__lut$i")
-    }
-    val luts = qr.select(Seq(col("q_id"), col("cell")) ++ lutCols: _*)
-    val scored = codes
-      .join(broadcast(luts), Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("__adc", adcScore(model.pq))
-    adcRank(scored, k)
-  }
-
-  // ---- OPQ: learned orthogonal rotation before PQ ----------------------
-  // (Ge et al., "Optimized Product Quantization", CVPR 2013 — the
-  // non-parametric alternation, the next rung on the FAISS ladder
-  // after residual encoding: a pre-rotation decorrelates the fixed
-  // subspace slices so the same code budget quantizes better.)
-
-  /** An OPQ model: the micro-quantized dim×dim rotation (row-major,
-    * entries = round(R_ij·10⁶) — the quantization is what makes the
-    * rotated domain ENGINE-REPLAYABLE: both engines apply the same
-    * integer matrix, so near-orthogonality after rounding costs
-    * recall nothing and exactness nothing) plus PQ codebooks trained
-    * in the rotated domain. The rotation is dim² longs — model-sized
-    * TASK data ([[rotateKernel]]'s closure, serialized once per task,
-    * never a dim² plan literal), so plan size stays O(1) in dim. */
-  case class OpqModel(rotation: Seq[Seq[Long]], pq: Model) {
-    require(rotation.nonEmpty && rotation.forall(_.size == rotation.size),
-      "rotation must be square dim×dim")
-    def dim: Int = rotation.size
-  }
-
-  /** The micro identity — [[trainOpq]]'s starting point and the
-    * no-op rotation for composing un-rotated paths uniformly. */
-  def identityRotation(dim: Int): Seq[Seq[Long]] =
+  /** The micro identity — the OPQ alternation's starting point. */
+  private[graft] def identityRotation(dim: Int): Seq[Seq[Long]] =
     Seq.tabulate(dim, dim)((i, j) => if (i == j) 1000000L else 0L)
 
   // floor((Rµ·vµ)/10⁶) with a positive-offset trick: Spark `div` and
@@ -834,22 +241,15 @@ object ProductQuant {
   private val RotOffsetOut = 1000000000L
 
   /** Compiled rotation kernel: micro vector in, the rotated FLOAT
-    * vector (the PQ machinery's input domain) out, over the rotation
-    * captured as primitive arrays. The prior expression form (a
-    * one-row broadcast relation crossJoined in, then a `transform`
-    * of dim `aggregate(zip_with(...))` dot products) kept the matrix
-    * out of the plan but ran the dim² multiply-adds as an INTERPRETED
-    * CodegenFallback chain with boxed allocations per (row, i, j) —
-    * the codesKernel class of cost, measured at ~0.3 ms/row at
-    * dim = 64 (a corpus rotate at sf0.1 was a 4.4 s single-task
-    * stage, the whole q193 bench entry). The closure captures the
-    * matrix as TASK data (dim² longs serialized once per task), so
-    * plan size stays O(1) in dim — the q182 no-dim²-literal pin holds
-    * — and the per-row work is the same exact integer arithmetic in
-    * a compiled loop. Semantics identical and oracle-pinned: exact
-    * integer dots, the same offset-floor division, the same loud
-    * out-of-range failure, the same lossless micro→float round-trip
-    * (the residualExpr argument). */
+    * vector (the PQ machinery's input domain) out. The matrix rides in
+    * the closure as TASK data (dim² longs serialized once per task),
+    * so plan size stays O(1) in dim — the q182 no-dim²-literal pin —
+    * and the dim² multiply-adds run compiled (the expression form was
+    * an interpreted CodegenFallback chain, ~0.3 ms/row at dim 64).
+    * Oracle-pinned semantics: exact integer dots, the offset-floor
+    * division, a loud out-of-range failure, and a lossless micro →
+    * float round-trip (`microVec(round(k/10⁶·10⁶)) = k` for |k| < 2⁵¹:
+    * double mul/div are correctly rounded). */
   private def rotateKernel(rotation: Seq[Seq[Long]], dim: Int)
       : org.apache.spark.sql.expressions.UserDefinedFunction = {
     val rot: Array[Array[Long]] = rotation.map(_.toArray).toArray
@@ -876,41 +276,31 @@ object ProductQuant {
     })
   }
 
-  /** Attach `__rv` (the rotated FLOAT vector the PQ machinery
-    * consumes) to any relation carrying a micro vector in `microCol`
-    * — one narrow compiled-kernel map ([[rotateKernel]]); the matrix
-    * rides in the task closure, never the plan. Micro round-trip is
-    * exact (the residualExpr argument). */
-  private def withRotated(df: DataFrame, microCol: String, dim: Int,
-                          rotation: Seq[Seq[Long]]): DataFrame =
-    df.withColumn("__rv", rotateKernel(rotation, dim)(col(microCol)))
-
-  /** (idCol, __rv): every vector rotated into the PQ domain, as the
-    * float relation the PQ machinery consumes (micro round-trip is
-    * exact — the residualExpr argument). This IS the opt-in OPQ
-    * pre-stage: feed `__rv` to [[train]]/[[trainResidual]]/their
-    * searches and the whole existing stack runs in the rotated
-    * domain unchanged. The matrix rides in [[rotateKernel]]'s task
-    * closure, never as a dim² plan literal. */
-  def rotate(df: DataFrame, idCol: String, vecCol: String, dim: Int,
-             rotation: Seq[Seq[Long]]): DataFrame = {
+  /** (idCol, __rv): every clean vector rotated into the PQ domain —
+    * one narrow compiled-kernel map ([[rotateKernel]]). */
+  private[graft] def rotate(df: DataFrame, idCol: String, vecCol: String,
+                            dim: Int, rotation: Seq[Seq[Long]]): DataFrame = {
     require(rotation.size == dim,
       s"rotation is ${rotation.size}×${rotation.size}, vectors dim $dim")
-    withRotated(
-      cleanVecs(df, vecCol, dim)
-        .select(col(idCol), KMeans.microVec(col(vecCol)).as("__xm")),
-      "__xm", dim, rotation)
-      .select(col(idCol), col("__rv"))
+    cleanVecs(df, vecCol, dim)
+      .select(col(idCol),
+        rotateKernel(rotation, dim)(KMeans.microVec(col(vecCol))).as("__rv"))
   }
 
-  /** Micro reconstruction of a `codes` row from literal codebooks:
-    * the per-subspace assigned centroids concatenated back to a full
-    * dim vector — the Y side of the Procrustes update. */
+  /** `df` in the index's input domain and the vector column to read
+    * there: rotated into `__rv` when there is a rotation. */
+  private def inDomain(rotation: Option[Seq[Seq[Long]]], df: DataFrame,
+                       idCol: String, vecCol: String,
+                       dim: Int): (DataFrame, String) =
+    rotation.fold((df, vecCol))(r => (rotate(df, idCol, vecCol, dim, r), "__rv"))
+
+  /** Micro reconstruction of a `codes` row from the codebooks: the
+    * per-subspace assigned centroids concatenated back to a full dim
+    * vector — the Y side of the Procrustes update. */
   private def decodeExpr(model: Model): Column =
-    concat(model.slices.zip(model.books).zipWithIndex.map {
-      case (((_, _), book), s) =>
-        element_at(typedlit(book.sortBy(_._1).map(_._2)),
-          element_at(col("codes"), s + 1))
+    concat(model.books.zipWithIndex.map { case (book, s) =>
+      element_at(typedlit(book.sortBy(_._1).map(_._2)),
+        element_at(col("codes"), s + 1))
     }: _*)
 
   /** Orthogonal-Procrustes update: R = argmax_{RᵀR=I} tr(R·A) with
@@ -926,50 +316,44 @@ object ProductQuant {
     Seq.tabulate(dim, dim)((i, j) => math.round(r(i, j) * 1e6))
   }
 
-  /** Train OPQ: `opqIters` alternations of (fit PQ codebooks in the
-    * current rotation) / (Procrustes-update the rotation toward the
-    * codebooks' reconstructions), then one final codebook fit in the
-    * final rotation. Everything is bounded by the deterministic
-    * md5-rank sample ([[train]]'s rule): per alternation one m-fit
-    * train, one encode, and ONE dim×dim cross-covariance aggregate —
-    * accumulated in EXACT longs per partition (order-independent ⇒
-    * partitioning-independent ⇒ bit-identical refits, the q183
-    * witness) and collected as O(partitions·dim²), never corpus rows.
-    * Training cost is constant in corpus size. */
-  def trainOpq(df: DataFrame, idCol: String, vecCol: String, dim: Int,
-               m: Int, k: Int, iters: Int, opqIters: Int = 3,
-               sampleN: Int = 0): OpqModel = {
-    require(opqIters >= 1, s"opqIters must be >= 1, got $opqIters")
-    val n = if (sampleN > 0) sampleN
-      else math.min(65536, math.max(4096, 64 * k))
+  /** The OPQ alternation over the rank-top `n` rows: `opqIters` rounds
+    * of (fit PQ codebooks in the current rotation) / (Procrustes-update
+    * the rotation toward the codebooks' reconstructions), from the
+    * identity. Per round one m-fit, one encode, and ONE dim×dim
+    * cross-covariance aggregate — accumulated in EXACT longs per
+    * partition (order-independent ⇒ partitioning-independent ⇒
+    * bit-identical refits, the q183 witness) and collected as
+    * O(partitions·dim²), never corpus rows. */
+  private def learnRotation(df: DataFrame, idCol: String, vecCol: String,
+                            dim: Int, m: Int, k: Int, iters: Int,
+                            opqIters: Int, n: Int): Seq[Seq[Long]] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val sample = cleanVecs(df, vecCol, dim)
-      .withColumn("__r", Similarity.portableCentroidRank(col(idCol)))
-      .orderBy(col("__r"), col(idCol)).limit(n)
+    val sample = rankSample(df, idCol, vecCol, dim, n)
       .select(col(idCol), KMeans.microVec(col(vecCol)).as("__xm"))
       .cache()
     try {
       var rot = identityRotation(dim)
-      def rotated = withRotated(sample, "__xm", dim, rot)
       for (_ <- 1 to opqIters) {
-        val pq = train(rotated, idCol, "__rv", dim, m, k, iters, sampleN = n)
-        val pairs = rotated
-          .join(encode(rotated, idCol, "__rv", dim, pq), idCol)
+        val rotated = sample.withColumn("__rv",
+          rotateKernel(rot, dim)(col("__xm")))
+        val pq = fitBooks(rotated, idCol, "__rv", dim, m, k, iters, n)
+        val partials = rotated
+          .withColumn("codes", codesKernel(pq)(KMeans.microVec(col("__rv"))))
           .select(col("__xm"), decodeExpr(pq).as("__ym"))
           .as[(Seq[Long], Seq[Long])]
-        val partials = pairs.mapPartitions { it =>
-          val acc = new Array[Long](dim * dim)
-          it.foreach { case (x, y) =>
-            var i = 0
-            while (i < dim) {
-              val xi = x(i); var j = 0
-              while (j < dim) { acc(i * dim + j) += xi * y(j); j += 1 }
-              i += 1
+          .mapPartitions { it =>
+            val acc = new Array[Long](dim * dim)
+            it.foreach { case (x, y) =>
+              var i = 0
+              while (i < dim) {
+                val xi = x(i); var j = 0
+                while (j < dim) { acc(i * dim + j) += xi * y(j); j += 1 }
+                i += 1
+              }
             }
-          }
-          Iterator(acc.toSeq)
-        }.collect()
+            Iterator(acc.toSeq)
+          }.collect()
         val a = new Array[Long](dim * dim)
         partials.foreach { p =>
           var t = 0
@@ -977,159 +361,279 @@ object ProductQuant {
         }
         rot = procrustes(a, dim)
       }
-      OpqModel(rot, train(rotated, idCol, "__rv", dim, m, k, iters,
-        sampleN = n))
+      rot
     } finally { sample.unpersist(); () }
   }
 
-  /** ADC top-k in the learned rotated domain: both sides rotate
-    * narrowly (literal matrix, no join, no shuffle), then the
-    * standard [[adcTopK]] runs unchanged. Compose with the IVF paths
-    * the same way — `rotate` the corpus once and feed any search in
-    * this file. */
-  def opqAdcTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                 vecCol: String, dim: Int, model: OpqModel,
-                 k: Int): DataFrame =
-    adcTopK(rotate(corpus, idCol, vecCol, dim, model.rotation),
-      rotate(queries, idCol, vecCol, dim, model.rotation),
-      idCol, "__rv", dim, model.pq, k)
+  // ---- Coarse quantizer: cell assignment and residuals ------------------
 
-  // ---- OPQ ∘ residual ∘ two-level: the full production lifecycle -------
-  // The best-recall composition (measured opq∘residual 0.850 vs
-  // residual 0.767, ProductQuantSpec) promoted from a spec-only
-  // demonstration to a first-class index form: trainable, persistable
-  // (io/VectorIndexArtifacts.saveOpqResidualTwoLevel), servable over a
-  // stored code relation, appendable per micro-batch
-  // (StreamOps.opqIndexAppendEachBatch), and drift-alarmed — every
-  // stage operating in the learned rotated domain.
+  /** (cell, cvec): the cell centroids as a relation keyed by the flat
+    * cell id — a local relation for the flat model, the sub relation
+    * for the two-level one (so no K-sized literal enters a plan). */
+  private def cellVecs(cells: Cells,
+                       spark: org.apache.spark.sql.SparkSession): DataFrame =
+    cells match {
+      case Left(flat) =>
+        spark.createDataFrame(flat).toDF("cell", "cvec")
+      case Right(tl) =>
+        tl.sub.select(
+          ((col("super") - 1) * tl.nSub + col("sub")).cast("int").as("cell"),
+          col("cvec"))
+    }
 
-  /** The composed index: a learned (or fixed) micro rotation in front
-    * of a residual ∘ two-level index trained in the rotated domain.
-    * No K-sized literal anywhere (the q178 property) and no dim²
-    * literal (the rotation rides in the compiled kernel's closure). */
-  case class OpqResidualTwoLevelModel(rotation: Seq[Seq[Long]],
-                                      inner: ResidualTwoLevelModel) {
-    require(rotation.nonEmpty && rotation.forall(_.size == rotation.size),
-      "rotation must be square dim×dim")
-    def dim: Int = rotation.size
+  /** (id, cell, __v): every clean row's `probes` nearest cells (exact
+    * integer distances, ties to the smallest cell — the KMeans argmin
+    * rule) with its micro vector. Flat: the narrow compiled peel over
+    * the literal model. Two-level: the superProbe beam over the literal
+    * supers, candidates from the broadcast sub relation; at one probe
+    * the election carries the vector, so no corpus self-join on id. */
+  private def assign(cells: Cells, df: DataFrame, idCol: String,
+                     vecCol: String, dim: Int, probes: Int,
+                     superProbe: Int): DataFrame = {
+    val clean = cleanVecs(df, vecCol, dim)
+    def micro = clean.select(col(idCol).as("id"),
+      KMeans.microVec(col(vecCol)).as("__v"))
+    cells match {
+      case Left(flat) =>
+        Similarity.peelNearestLiteral(micro, flat, probes, "cell")
+      case Right(tl) if probes == 1 =>
+        Similarity.assignNearestTwoLevelWithVec(clean, idCol, vecCol, tl,
+          superProbe)
+      case Right(tl) =>
+        Similarity.assignTwoLevelCells(clean, idCol, vecCol, tl, probes,
+          superProbe).join(micro, "id")
+    }
   }
 
-  /** Train the composed index: the rotation from [[trainOpq]]'s
-    * Procrustes alternation (the standard OPQ objective — flat-PQ
-    * reconstruction error), then the residual ∘ two-level index
-    * trained on the ROTATED vectors. Everything is sample-bounded;
-    * the alternation's flat codebooks are training scaffolding only
-    * (the served codebooks are the residual-domain ones). */
-  def trainOpqResidualTwoLevel(df: DataFrame, idCol: String, vecCol: String,
-                               dim: Int, m: Int, k: Int, iters: Int,
-                               nCells: Int, cellIters: Int = 2,
-                               superProbe: Int = 2, opqIters: Int = 3,
-                               sampleN: Int = 0): OpqResidualTwoLevelModel = {
-    // ONE corpus selection feeds the whole composition: the OPQ
-    // alternation, the two-level cells, and the residual books all
-    // draw rank prefixes of the same cached sample (bit-identical to
-    // their full-corpus draws — the sharedTrainSample argument; the
-    // rotation step commutes with the prefix because rotate is
-    // per-row and the rank is a pure function of the id)
-    val kCells = if (nCells > 0) nCells
-      else Similarity.suggestCells(cleanVecs(df, vecCol, dim).count())
-    val nOpq = if (sampleN > 0) sampleN
+  /** Compiled residual kernel: (micro, centroid) in, the FLOAT residual
+    * (micro − centroid)/10⁶ out — the domain the PQ machinery consumes;
+    * the long → double/10⁶ round-trip is exact (the rotateKernel
+    * argument), so every downstream distance is the integer an
+    * all-integer replay computes. A length mismatch yields NULL. */
+  private val residualFloat =
+    udf((as: scala.collection.Seq[Long], bs: scala.collection.Seq[Long]) => {
+      if (as == null || bs == null || as.length != bs.length) null
+      else {
+        val a = as.toArray // Seq args arrive as List — O(i) apply
+        val b = bs.toArray
+        val out = new Array[Double](a.length)
+        var i = 0
+        while (i < a.length) {
+          out(i) = (a(i) - b(i)).toDouble / 1e6; i += 1
+        }
+        out
+      }
+    })
+
+  /** (idCol, cell, rvec): nearest cell + the residual against it. */
+  private def residuals(cells: Cells, df: DataFrame, idCol: String,
+                        vecCol: String, dim: Int,
+                        superProbe: Int): DataFrame =
+    assign(cells, df, idCol, vecCol, dim, 1, superProbe)
+      .join(broadcast(cellVecs(cells, df.sparkSession)), "cell")
+      .select(col("id").as(idCol), col("cell"),
+        residualFloat(col("__v"), col("cvec")).as("rvec"))
+
+  // ---- The index lifecycle ------------------------------------------------
+
+  /** Train an index over a bounded deterministic md5-rank sample. The
+    * stages come from the arguments:
+    *  - rotation: `rotation` is a fixed micro matrix (q182/q184/q185's
+    *    `rot182`); `opqIters > 0` learns one by the OPQ alternation
+    *    (the standard objective, flat-PQ reconstruction error); neither
+    *    means no rotation.
+    *  - coarse quantizer: `nCells > 0` trains `nCells` cells with
+    *    `cellIters` Lloyd rounds on the (rotated) vectors — two-level
+    *    with a `superProbe` beam, or flat when `superProbe = 0` — and
+    *    the codebooks then train on residuals.
+    *  - PQ: `m` codebooks of `k` codes, `iters` Lloyd rounds each.
+    * Sample sizes: `sampleN` rows for the rotation and codebooks
+    * (0 = clamp(64·k, 4096, 65536)); clamp(64·nCells, 4096, 65536)
+    * for flat cells, clamp(64·nCells, 4096, 262144) for two-level
+    * cells. ONE draw of the largest covers them all ([[rankSample]]),
+    * so training cost is constant in corpus size; residuals are
+    * computed over the codebook prefix only (the full-corpus residual
+    * draw would select exactly those rows). */
+  def train(df: DataFrame, idCol: String, vecCol: String, dim: Int,
+            m: Int, k: Int, iters: Int, nCells: Int = 0, cellIters: Int = 2,
+            superProbe: Int = 2, opqIters: Int = 0,
+            rotation: Option[Seq[Seq[Long]]] = None,
+            sampleN: Int = 0): Index = {
+    require(rotation.isEmpty || opqIters == 0,
+      "pass a fixed rotation or opqIters to learn one, not both")
+    require(superProbe >= 0, s"superProbe must be >= 0, got $superProbe")
+    val nPq = if (sampleN > 0) sampleN
       else math.min(65536, math.max(4096, 64 * k))
-    val nTl = math.min(262144, math.max(4096, 64 * kCells))
-    val nPq = math.min(65536, math.max(4096, 64 * k))
-    val shared = sharedTrainSample(df, idCol, vecCol, dim,
-      math.max(nOpq, math.max(nTl, nPq)))
+    val nCell = if (nCells <= 0) 0
+      else math.min(if (superProbe > 0) 262144 else 65536,
+        math.max(4096, 64 * nCells))
+    val shared = rankSample(df, idCol, vecCol, dim, math.max(nPq, nCell))
+      .cache()
     try {
-      val rot = trainOpq(shared, idCol, vecCol, dim, m, k, iters, opqIters,
-        sampleN = nOpq).rotation
-      val rotated = rotate(shared, idCol, vecCol, dim, rot)
-      OpqResidualTwoLevelModel(rot,
-        trainResidualTwoLevel(rotated, idCol, "__rv", dim, m, k, iters,
-          kCells, cellIters, superProbe))
+      val rot = rotation.orElse(Option.when(opqIters > 0)(
+        learnRotation(shared, idCol, vecCol, dim, m, k, iters, opqIters, nPq)))
+      val (base, v) = inDomain(rot, shared, idCol, vecCol, dim)
+      val cells: Option[Cells] =
+        if (nCells <= 0) None
+        else if (superProbe > 0) Some(Right(Similarity.trainTwoLevelCells(
+          base, idCol, v, nCells, cellIters, sampleN = nCell)))
+        else Some(Left(KMeans.fit(rankSample(base, idCol, v, dim, nCell),
+          idCol, v, nCells, cellIters)))
+      val pq = cells match {
+        case None => fitBooks(base, idCol, v, dim, m, k, iters, nPq)
+        case Some(c) => fitBooks(
+          residuals(c, rankSample(base, idCol, v, dim, nPq), idCol, v, dim,
+            superProbe), idCol, "rvec", dim, m, k, iters, nPq)
+      }
+      Index(rot, cells, pq)
     } finally { shared.unpersist(); () }
   }
 
-  /** The stored code relation of the composed index: rotate, then
-    * [[encodeResidualTwoLevel]] — (c_id, cell, codes) in the rotated
-    * domain. Appends are frozen-model encodes unioned on (the
-    * assign-only rule; spec-proven ≡ batch rebuild). */
-  def encodeOpqResidualTwoLevel(df: DataFrame, idCol: String,
-                                vecCol: String, dim: Int,
-                                model: OpqResidualTwoLevelModel,
-                                superProbe: Int = 2): DataFrame =
-    encodeResidualTwoLevel(rotate(df, idCol, vecCol, dim, model.rotation),
-      idCol, "__rv", dim, model.inner, superProbe)
-
-  /** Serve-frozen search of the composed index over a precomputed
-    * (c_id, cell, codes) relation: queries rotate (one broadcast
-    * row), then [[ivfAdcResidualTopKTwoLevelOverCodes]] runs in the
-    * rotated domain. Output (q_id, rank, c_id, adc_dist). */
-  def opqResidualTopKTwoLevelOverCodes(codes: DataFrame, queries: DataFrame,
-                                       idCol: String, vecCol: String,
-                                       dim: Int,
-                                       model: OpqResidualTwoLevelModel,
-                                       k: Int, nProbe: Int = 2,
-                                       superProbe: Int = 2): DataFrame =
-    ivfAdcResidualTopKTwoLevelOverCodes(codes,
-      rotate(queries, idCol, vecCol, dim, model.rotation),
-      idCol, "__rv", dim, model.inner, k, nProbe, superProbe)
-
-  /** Fused build-and-search of the composed index (the self-kNN
-    * convenience form; production serving goes through
-    * [[encodeOpqResidualTwoLevel]] + [[opqResidualTopKTwoLevelOverCodes]]). */
-  def opqResidualTopKTwoLevel(corpus: DataFrame, queries: DataFrame,
-                              idCol: String, vecCol: String, dim: Int,
-                              model: OpqResidualTwoLevelModel, k: Int,
-                              nProbe: Int = 2,
-                              superProbe: Int = 2): DataFrame = {
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    opqResidualTopKTwoLevelOverCodes(
-      encodeOpqResidualTwoLevel(corpus, idCol, vecCol, dim, model,
-        superProbe).repartition(par),
-      queries, idCol, vecCol, dim, model, k, nProbe, superProbe)
+  /** The corpus-side INDEX relation: (c_id, codes array<int>) — with
+    * `cell` between them when the index has a coarse quantizer —
+    * rotation, nearest cell, residual and code argmins in one pass.
+    * This is the relation a frozen index STORES and [[search]]es, and
+    * the APPEND path: encode a fresh batch with the frozen index (no
+    * retrain) and union it on; encode is a pure per-row function of the
+    * index, so that is exactly what a rebuild over old ∪ new computes
+    * (spec-proven append ≡ rebuild). `superProbe` is the two-level
+    * assignment beam. */
+  def encode(index: Index, df: DataFrame, idCol: String, vecCol: String,
+             dim: Int, superProbe: Int = 2): DataFrame = {
+    val (in, v) = inDomain(index.rotation, df, idCol, vecCol, dim)
+    val codes = codesKernel(index.pq)
+    index.cells match {
+      case None => cleanVecs(in, v, dim)
+        .select(col(idCol).as("c_id"),
+          codes(KMeans.microVec(col(v))).as("codes"))
+      case Some(c) => residuals(c, in, idCol, v, dim, superProbe)
+        .select(col(idCol).as("c_id"), col("cell"),
+          codes(KMeans.microVec(col("rvec"))).as("codes"))
+    }
   }
 
-  /** [[residualDriftReportTwoLevel]] in the rotated domain — the
-    * composed index's retrain alarm: both sides rotate (broadcast
-    * row, narrow otherwise), then the norm passes and the exact
-    * basis-point report run unchanged against the inner model's
-    * cells. */
-  def opqResidualDriftReportTwoLevel(model: OpqResidualTwoLevelModel,
-                                     baseline: DataFrame,
-                                     appended: DataFrame, idCol: String,
-                                     vecCol: String, dim: Int,
-                                     superProbe: Int = 2,
-                                     alarmBp: Long = 12500): DataFrame =
-    residualDriftReportTwoLevel(model.inner,
-      rotate(baseline, idCol, vecCol, dim, model.rotation),
-      rotate(appended, idCol, vecCol, dim, model.rotation),
-      idCol, "__rv", dim, superProbe, alarmBp)
+  /** ADC top-k of every `queries` vector over an [[encode]]d `codes`
+    * relation (stored, or stored ∪ appended batches), self-matches on
+    * id excluded; only the query side touches the index. The caller
+    * owns `codes`' partitioning (repartition a freshly encoded small
+    * corpus — one split would serialize the scoring loop; a loaded
+    * parquet relation is already split). Candidates:
+    *  - index with a coarse quantizer: corpus points in one of the
+    *    query's `nProbe` nearest cells (`superProbe` beam for
+    *    two-level), each (q, cell) row carrying lookup tables built from
+    *    the query's residual AGAINST THAT CELL (FAISS's per-list LUT);
+    *    every point lives in one cell, so each pair meets once.
+    *  - otherwise, with search-time pruning `cells` — an (id, cell)
+    *    coarse assignment covering corpus AND query ids (queries drawn
+    *    from the corpus), e.g. [[Similarity.ivfCellsTrained]] (q143) or
+    *    [[Similarity.ivfCellsTwoLevel]] (q168) — the pairs sharing a
+    *    cell, from one broadcast equi-join + DISTINCT; with
+    *    nProbe >= nCells that is every pair (spec-proven identity).
+    *  - otherwise every pair: codes stream against the broadcast
+    *    lookup tables.
+    * Never a corpus×queries cross join when cells exist (PlanAuditSpec
+    * pins this). Output (q_id, rank, c_id, adc_dist), adc asc / c_id
+    * asc. */
+  def search(index: Index, codes: DataFrame, queries: DataFrame,
+             idCol: String, vecCol: String, dim: Int, k: Int,
+             nProbe: Int = 2, superProbe: Int = 2,
+             cells: Option[DataFrame] = None): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    require(index.cells.isEmpty || cells.isEmpty,
+      "search-time cells prune raw codes; this index has its own cells")
+    val (q, v) = inDomain(index.rotation, queries, idCol, vecCol, dim)
+    index.cells match {
+      case Some(c) =>
+        val luts = assign(c, q, idCol, v, dim, nProbe, superProbe)
+          .join(broadcast(cellVecs(c, q.sparkSession)), "cell")
+          .select(col("id").as("q_id") +: col("cell") +: lutCols(
+            zip_with(col("__v"), col("cvec"), (a, b) => a - b), index.pq): _*)
+        adcRank(codes.join(broadcast(luts), Seq("cell"))
+          .filter(col("q_id") =!= col("c_id")), index.pq, k)
+      case None =>
+        val luts = cleanVecs(q, v, dim).select(col(idCol).as("q_id") +:
+          lutCols(KMeans.microVec(col(v)), index.pq): _*)
+        val corpus = codes.select(col("c_id"), col("codes"))
+        val pairs = cells match {
+          case None => corpus.crossJoin(broadcast(luts))
+              .filter(col("c_id") =!= col("q_id"))
+          case Some(assigned) =>
+            val qCells = assigned
+              .join(broadcast(luts.select(col("q_id").as("id"))), "id")
+              .select(col("id").as("q_id"), col("cell"))
+            broadcast(qCells)
+              .join(assigned.select(col("id").as("c_id"), col("cell")), "cell")
+              .filter(col("q_id") =!= col("c_id"))
+              .select(col("q_id"), col("c_id"))
+              .distinct()
+              .join(corpus, "c_id")
+              .join(broadcast(luts), "q_id")
+        }
+        adcRank(pairs, index.pq, k)
+    }
+  }
 
-  // ---- Retrain alarm: residual-magnitude drift -------------------------
+  /** Two-stage search: ADC candidates (`candK` per query, from codes
+    * only) re-ranked by EXACT cosine over the candidates' full vectors
+    * — the [[Similarity.quantizedRerank]] shape with PQ in the cheap
+    * stage; only queries × candK full vectors meet the float kernel.
+    * Self-kNN form (queries = corpus). Output (q_id, rank, c_id, sim). */
+  def adcRerank(index: Index, df: DataFrame, idCol: String, vecCol: String,
+                dim: Int, k: Int, candK: Int): DataFrame = {
+    require(candK >= k, s"candK ($candK) must be >= k ($k)")
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    val cands = search(index,
+        encode(index, df, idCol, vecCol, dim).repartition(par), df, idCol,
+        vecCol, dim, candK)
+      .select(col("q_id"), col("c_id"))
+    val vecs = cleanVecs(df, vecCol, dim)
+      .select(col(idCol), col(vecCol))
+    val scored = cands
+      .join(vecs.select(col(idCol).as("q_id"), col(vecCol).as("__qv")), "q_id")
+      .join(vecs.select(col(idCol).cast("long").as("c_id"),
+        col(vecCol).as("__cv")), "c_id")
+      .select(col("q_id"), col("c_id"),
+        graft.functions.VectorFns.cosine(col("__qv"), col("__cv")).as("sim"))
+      .filter(col("sim").isNotNull)
+    scored
+      .groupBy(col("q_id"))
+      .agg(TopKPairs.topK(k)(col("sim"), col("c_id")).as("nn"))
+      .select(col("q_id"), posexplode(col("nn")).as(Seq("pos", "p")))
+      .select(col("q_id"), (col("pos") + 1).cast("int").as("rank"),
+        col("p.id").as("c_id"), col("p.sim").as("sim"))
+  }
 
-  /** Assemble the one-row drift report from two per-vector
-    * squared-residual-norm relations (each a single `__n2` BIGINT
-    * column). All integer: msr = Σ‖r‖²_micro² div n (floor),
-    * drift_bp = new_msr·10⁴ div base_msr. `retrain` trips when the
-    * appended batch's mean squared residual exceeds `alarmBp` basis
-    * points of the baseline's — the FAISS-folk retrain heuristic
-    * (residuals growing ⇒ the frozen centroids no longer sit where
-    * the data is ⇒ candidate lists degrade before recall visibly
-    * does). NULL msr/drift (empty side or zero baseline) = no
-    * evidence, retrain false — an empty probe must not page anyone. */
-  private def driftReport(base: DataFrame, appended: DataFrame,
-                          alarmBp: Long): DataFrame = {
-    // Σ‖r‖² accumulates in DECIMAL(38,0): per-row norms reach ~10¹⁵
-    // at micro magnitudes, so a BIGINT sum wraps past ~10⁴ rows —
-    // an alarm that silently wraps at production corpus size is worse
-    // than none. Decimal keeps the sum exact to ~10²³ rows; the
-    // floor-division back to BIGINT msr is unchanged (and DuckDB's
-    // HUGEINT sum replays it — the q181/q185 oracles).
-    val b = base.agg(count(lit(1)).as("n_base"),
-      sum(col("__n2").cast("decimal(38,0)")).as("__sb"))
-    val a = appended.agg(count(lit(1)).as("n_new"),
-      sum(col("__n2").cast("decimal(38,0)")).as("__sa"))
-    b.crossJoin(a)
+  /** The retrain alarm: residual-magnitude drift of an `appended`
+    * vector batch vs a `baseline` (normally the corpus the index was
+    * trained on) under the FROZEN coarse quantizer (rotated first when
+    * the index rotates) — the signal that assign-only appends have
+    * outlived the frozen centroids: residuals growing ⇒ the centroids
+    * no longer sit where the data is ⇒ candidate lists degrade before
+    * recall visibly does. One row: (n_base, n_new, base_msr, new_msr,
+    * drift_bp, retrain). All integer: per-vector norm = exact squared
+    * distance to the nearest cell, msr = Σ‖r‖² div n (floor),
+    * drift_bp = new_msr·10⁴ div base_msr; `retrain` trips past
+    * `alarmBp` basis points. NULL msr/drift (empty side or zero
+    * baseline) = no evidence, retrain false — an empty probe must not
+    * page anyone. Σ‖r‖² accumulates in DECIMAL(38,0): per-row norms
+    * reach ~10¹⁵ at micro magnitudes, so a BIGINT sum wraps past ~10⁴
+    * rows (spec-pinned past 2⁶³); decimal stays exact to ~10²³ rows
+    * per side, and DuckDB's HUGEINT sum replays it (q181/q185). */
+  def driftReport(index: Index, baseline: DataFrame, appended: DataFrame,
+                  idCol: String, vecCol: String, dim: Int,
+                  superProbe: Int = 2, alarmBp: Long = 12500): DataFrame = {
+    require(index.cells.nonEmpty,
+      "the drift report measures residuals: the index needs cells")
+    val c = index.cells.get
+    def side(df: DataFrame, n: String, s: String): DataFrame = {
+      val (in, v) = inDomain(index.rotation, df, idCol, vecCol, dim)
+      assign(c, in, idCol, v, dim, 1, superProbe)
+        .join(broadcast(cellVecs(c, df.sparkSession)), "cell")
+        .agg(count(lit(1)).as(n), sum(
+          KMeans.sqDistMicro(col("__v"), col("cvec")).cast("decimal(38,0)"))
+          .as(s))
+    }
+    side(baseline, "n_base", "__sb").crossJoin(side(appended, "n_new", "__sa"))
       .select(col("n_base"), col("n_new"),
         expr("__sb div n_base").as("base_msr"),
         expr("__sa div n_new").as("new_msr"),
@@ -1141,77 +645,5 @@ object ProductQuant {
           .as("drift_bp"))
       .withColumn("retrain",
         coalesce(col("drift_bp") > alarmBp, lit(false)))
-  }
-
-  /** Per-vector squared residual norm (micro² BIGINT) against the
-    * FLAT cell model: the min over centroids of the exact integer
-    * squared distance — assignment is argmin, so the min IS the
-    * assigned cell's residual. One narrow compiled-kernel pass (the
-    * codesKernel move — this map runs baseline + appended sized per
-    * drift probe; the transform-over-typedlit form was interpreted
-    * per (row, centroid, dim)). */
-  private def residualNorms2(df: DataFrame, vecCol: String, dim: Int,
-                             cells: KMeans.Model): DataFrame = {
-    val cents: Array[Array[Long]] =
-      cells.sortBy(_._1).map(_._2.toArray).toArray
-    val kernel = udf((mvs: scala.collection.Seq[Long]) => {
-      val mv = mvs.toArray // Seq args arrive as List — O(i) apply
-      var bd = Long.MaxValue
-      var c = 0
-      while (c < cents.length) {
-        val cent = cents(c)
-        var d = 0L
-        var i = 0
-        while (i < cent.length) { val t = mv(i) - cent(i); d += t * t; i += 1 }
-        if (d < bd) bd = d
-        c += 1
-      }
-      bd
-    })
-    cleanVecs(df, vecCol, dim)
-      .select(kernel(KMeans.microVec(col(vecCol))).as("__n2"))
-  }
-
-  /** Residual-magnitude drift of an appended vector batch vs a
-    * baseline (normally: the corpus the index was trained on) under a
-    * FROZEN flat residual index — the alarm that decides when
-    * assign-only appends ([[encodeResidualTwoLevel]]'s flat twin is
-    * [[ivfAdcResidualTopK]]'s internal encoding) have outlived the
-    * frozen centroids. One row: (n_base, n_new, base_msr, new_msr,
-    * drift_bp, retrain). Exact integers end to end (oracle-checked,
-    * q181): norms sum in DECIMAL(38,0) — exact to ~10²³ rows per
-    * side, no silent wrap at any corpus size (spec-pinned past 2⁶³)
-    * — with the msr floor-division back in BIGINT. Probing a bounded
-    * sample is still the right CALL at 100 TB (an alarm needs a
-    * consistent estimate, not a corpus pass), but it is a cost
-    * choice now, not a correctness requirement. */
-  def residualDriftReport(model: ResidualModel, baseline: DataFrame,
-                          appended: DataFrame, idCol: String,
-                          vecCol: String, dim: Int,
-                          alarmBp: Long = 12500): DataFrame =
-    driftReport(
-      residualNorms2(baseline, vecCol, dim, model.cells),
-      residualNorms2(appended, vecCol, dim, model.cells), alarmBp)
-
-  /** [[residualDriftReport]] for the two-level (no-K-literal) form:
-    * norms come from the beam assignment + a broadcast join against
-    * the sub-centroid relation — the q178 plan shape, integers end to
-    * end. */
-  def residualDriftReportTwoLevel(model: ResidualTwoLevelModel,
-                                  baseline: DataFrame, appended: DataFrame,
-                                  idCol: String, vecCol: String, dim: Int,
-                                  superProbe: Int = 2,
-                                  alarmBp: Long = 12500): DataFrame = {
-    def norms(df: DataFrame): DataFrame = {
-      val assign1 = Similarity.assignTwoLevelCells(df, idCol, vecCol,
-          model.cells, nProbe = 1, superProbe = superProbe)
-        .select(col("id").as(idCol), col("cell"))
-      cleanVecs(df, vecCol, dim)
-        .select(col(idCol), KMeans.microVec(col(vecCol)).as("__m"))
-        .join(assign1, idCol)
-        .join(broadcast(cellVecsOf(model.cells)), "cell")
-        .select(KMeans.sqDistMicro(col("__m"), col("cvec")).as("__n2"))
-    }
-    driftReport(norms(baseline), norms(appended), alarmBp)
   }
 }

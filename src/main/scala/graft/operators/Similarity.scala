@@ -519,7 +519,7 @@ object Similarity {
     * `outCol` (int, exploded — `probes` rows per input row). Assumes
     * model cids are 1..k (KMeans.fit's contract), so the peel index
     * IS the cid. */
-  private def peelNearestLiteral(df: DataFrame, model: KMeans.Model,
+  private[operators] def peelNearestLiteral(df: DataFrame, model: KMeans.Model,
                                  probes: Int, outCol: String): DataFrame = {
     require(probes >= 1, s"probes must be >= 1, got $probes")
     val ordered = model.sortBy(_._1)

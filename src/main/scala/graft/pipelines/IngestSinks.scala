@@ -339,20 +339,15 @@ object IngestSinks {
     *
     * The two legs OVERLAP: their appends touch disjoint paths and
     * disjoint index roots — independent jobs submitted from one
-    * thread serialize for no reason. The doc leg runs on a thread of
-    * its own while the media leg runs on the calling thread, so the
-    * doc leg's shuffle stages overlap the media leg's write IO
-    * (Spark's scheduler interleaves jobs from multiple threads within
-    * one session). The gain is unmeasured: the SCALE.md r17 sink rung
-    * quoted for it ran the overlapped sink in both of its arms. The
-    * leg thread is created PER BATCH on the
-    * batch's own thread, so it inherits that batch's SparkContext
-    * local properties (job group, job description — a thread kept
-    * across batches would stamp every later batch's jobs with the
-    * first batch's), and it has ended before the sink returns: both
-    * legs are awaited — the foreachBatch checkpoint must not commit
-    * ahead of either append — and BOTH failures surface (the doc
-    * leg's first). */
+    * thread serialize for no reason. Each leg runs on a thread created
+    * per batch on the batch's own thread ([[graft.JobOverlap]]), so
+    * the doc leg's shuffle stages overlap the media leg's write IO and
+    * both legs' jobs carry that batch's job group and description.
+    * The gain is unmeasured: the SCALE.md r17 sink rung quoted for it
+    * ran the overlapped sink in both of its arms. Both legs have ended
+    * before the sink returns — the foreachBatch checkpoint must not
+    * commit ahead of either append — and BOTH failures surface (the
+    * doc leg's first, the media leg's suppressed on it). */
   def archiveSink(spark: SparkSession, docCorpusPath: String,
                   mediaCorpusPath: String, textRoot: String,
                   mediaRoot: String, compactEvery: Int = 0,
@@ -363,16 +358,10 @@ object IngestSinks {
     val mSink = indexSink(MediaIndexArtifacts, spark, mediaCorpusPath,
       mediaRoot, compactEvery, retainVersions)
     b => {
-      var rDoc: scala.util.Try[Unit] = scala.util.Failure(
-        new IllegalStateException(s"archive sink doc leg of batch ${b.batchId} died"))
-      val leg = new Thread(() =>
-        rDoc = scala.util.Try(tSink(b.docs, b.textDelta, b.batchId)),
-        s"archive-sink-leg-${b.batchId}")
-      leg.setDaemon(true)
-      leg.start()
-      val rMed = scala.util.Try(mSink(b.media, b.mediaDelta, b.batchId))
-      leg.join()
-      rDoc.get; rMed.get
+      graft.JobOverlap.all(s"archive-sink-leg-${b.batchId}")(
+        () => tSink(b.docs, b.textDelta, b.batchId),
+        () => mSink(b.media, b.mediaDelta, b.batchId))
+      ()
     }
   }
 

@@ -33,33 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object StreamingIngestPipeline {
 
-  /** A PER-STEP daemon pool for overlapping a step's independent eager
-    * pins ([[graft.pipelines.IngestSinks.archiveSink]]'s leg-overlap
-    * idiom applied inside [[archiveIngestStep]]): four slots — the
-    * media hash/judge chain, the two ownership-evidence key pins, and
-    * the doc-leg hygiene pin.
-    * Created per call (the archiveSink pattern), NOT a shared lazy
-    * pool: pool threads snapshot the creating thread's inheritable
-    * SparkContext local properties (job group, streaming run-id tags)
-    * at THREAD CREATION, so a shared pool would stamp every later
-    * run's pin jobs with whichever batch touched the pool first —
-    * cancelling run 1 could then kill run 2's in-flight pins (the r17
-    * ADVICE finding). Per-call threads are created on the submitting
-    * thread and inherit ITS properties; cost is three short-lived
-    * daemon threads per batch, noise next to the jobs they submit.
-    * Callers MUST shut the pool down (finally) — the futures never
-    * spawn futures, so a 3-slot pool cannot deadlock. */
-  private def newStepPinPool(): java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(4,
-      new java.util.concurrent.ThreadFactory {
-        private val n = new java.util.concurrent.atomic.AtomicLong(0)
-        def newThread(r: Runnable): Thread = {
-          val t = new Thread(r,
-            s"archive-step-pin-${n.getAndIncrement()}")
-          t.setDaemon(true); t
-        }
-      })
-
   def run(docs: DataFrame, corpusIndex: DataFrame, tsCol: String,
           textCol: String, minQuality: Double = 0.3,
           lateness: String = "1 hour", fpCol: String = "fp"): DataFrame = {
@@ -648,17 +621,16 @@ object StreamingIngestPipeline {
           .localCheckpoint(true)
         // the media hash/judge chain, the two evidence-key pins, and
         // the doc-leg hygiene pin are mutually independent eager jobs
-        // — submit them from a per-step pin pool so they overlap (the
-        // archiveSink leg idiom); all four are awaited, the first
-        // failure surfaces after every job has come home (no job
-        // outlives its batch)
-        val pool = newStepPinPool()
-        val (md, refs, mediaKeys, exactPin, setsPin) = try {
-          val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          val fM = scala.concurrent.Future(mediaChain())(ec)
-          val fR = scala.concurrent.Future(refsPin())(ec)
-          val fK = scala.concurrent.Future(keysPin())(ec)
-          // the doc-leg hygiene pin, then — ON THE SAME SLOT, still
+        // — overlap them (graft.JobOverlap, the archiveSink leg idiom);
+        // all four are awaited, the first failure surfaces after every
+        // job has come home (no job outlives its batch)
+        var md: (DataFrame, DataFrame) = null
+        var refs, mediaKeys, exactPin, setsPin: DataFrame = null
+        graft.JobOverlap.all("archive-step-pin")(
+          () => md = mediaChain(),
+          () => refs = refsPin(),
+          () => mediaKeys = keysPin(),
+          // the doc-leg hygiene pin, then — ON THE SAME THREAD, still
           // inside the window — the text judge's one tokenization
           // pass: sets over the pre-gallery-gate superset are row-
           // filtered down to the judged population after the gate
@@ -666,18 +638,11 @@ object StreamingIngestPipeline {
           // tokenization never waits on the media verdicts and
           // back-fills the media chain's idle cores (guide §2.6)
           // instead of re-running lazily inside each judge job
-          val fE = scala.concurrent.Future {
-            val e = exactDeduped.localCheckpoint(true)
-            (e, graft.operators.TextIndex.batchSets(e, "doc_id", "text",
-              shingleN).localCheckpoint(true))
-          }(ec)
-          val inf = scala.concurrent.duration.Duration.Inf
-          val rM = scala.util.Try(scala.concurrent.Await.result(fM, inf))
-          val rR = scala.util.Try(scala.concurrent.Await.result(fR, inf))
-          val rK = scala.util.Try(scala.concurrent.Await.result(fK, inf))
-          val rE = scala.util.Try(scala.concurrent.Await.result(fE, inf))
-          (rM.get, rR.get, rK.get, rE.get._1, rE.get._2)
-        } finally { pool.shutdown() }
+          () => {
+            exactPin = exactDeduped.localCheckpoint(true)
+            setsPin = graft.operators.TextIndex.batchSets(exactPin,
+              "doc_id", "text", shingleN).localCheckpoint(true)
+          })
         val evid = refs.join(mediaKeys, Seq("murl"))
           .select(col("doc_id"), col("media_id"))
         val ownerDocs = evid

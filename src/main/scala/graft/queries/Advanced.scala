@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{ScalarFns, TextFns}
+import graft.operators.{ProductQuant, Similarity}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1007,6 +1008,16 @@ object Advanced {
           FROM dE_$t) WHERE rk = 1)"""
   }
 
+  /** The embeddings corpus encoded by a freshly trained catalog index,
+    * spread over the session's parallelism (a small corpus arriving
+    * as one split would serialize the scoring loop onto one task). */
+  private def corpusCodes(s: org.apache.spark.sql.SparkSession,
+                          index: ProductQuant.Index,
+                          emb: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    ProductQuant.encode(index, emb, "vec_id", "embedding", 64)
+      .repartition(s.sparkContext.defaultParallelism)
+
   /** q142: ORACLE-CHECKED product-quantization ANN
     * ([[graft.operators.ProductQuant]], Jégou et al. 2011) — m=2
     * subspace codebooks (k=4, 2 integer-Lloyd rounds each; the
@@ -1022,11 +1033,11 @@ object Advanced {
     "q142_ann_pq_adc",
     (s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val model = graft.operators.ProductQuant.train(emb, "vec_id",
-        "embedding", dim = 64, m = 2, k = 4, iters = 2)
-      graft.operators.ProductQuant.adcTopK(emb,
+      val index = ProductQuant.train(emb, "vec_id", "embedding", dim = 64,
+        m = 2, k = 4, iters = 2)
+      ProductQuant.search(index, corpusCodes(s, index, emb),
           emb.filter(col("vec_id") <= 20), "vec_id", "embedding",
-          dim = 64, model, k = 3)
+          dim = 64, k = 3)
         .orderBy(col("q_id"), col("rank"))
     },
     oracle = Some(s"""
@@ -1066,7 +1077,8 @@ object Advanced {
       ORDER BY q_id, rank"""))
 
   /** q143: ORACLE-CHECKED IVF-PQ ANN
-    * ([[graft.operators.ProductQuant.ivfAdcTopK]]) — the composition
+    * ([[graft.operators.ProductQuant.search]] with search-time
+    * [[graft.operators.Similarity.ivfCellsTrained]] cells) — the composition
     * of the ANN family's two trained legs on one index: q139's coarse
     * quantizer (nCells=8, 2 Lloyd rounds, nProbe=2) prunes candidates
     * to shared-cell pairs, q142's PQ codebooks (m=2, k=4) score the
@@ -1079,11 +1091,12 @@ object Advanced {
     "q143_ann_ivf_pq",
     (s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val model = graft.operators.ProductQuant.train(emb, "vec_id",
-        "embedding", dim = 64, m = 2, k = 4, iters = 2)
-      graft.operators.ProductQuant.ivfAdcTopK(emb,
+      val index = ProductQuant.train(emb, "vec_id", "embedding", dim = 64,
+        m = 2, k = 4, iters = 2)
+      ProductQuant.search(index, corpusCodes(s, index, emb),
           emb.filter(col("vec_id") <= 20), "vec_id", "embedding",
-          dim = 64, model, k = 3, nCells = 8, nProbe = 2, ivfIters = 2)
+          dim = 64, k = 3, cells = Some(Similarity.ivfCellsTrained(emb,
+            "vec_id", "embedding", nCells = 8, nProbe = 2, iters = 2)))
         .orderBy(col("q_id"), col("rank"))
     },
     oracle = Some(s"""
@@ -1135,7 +1148,7 @@ object Advanced {
       ORDER BY q_id, rank"""))
 
   /** q168: ORACLE-CHECKED two-level IVF-PQ
-    * ([[graft.operators.ProductQuant.ivfAdcTopKTwoLevel]]) — q143's
+    * (search-time [[graft.operators.Similarity.ivfCellsTwoLevel]] cells) — q143's
     * IVFADC with the coarse quantizer that survives past the
     * literal-centroid cap: nCells=4 splits into nSuper=2 LITERAL
     * super-centroids (the only literal model in the plan) and nSub=2
@@ -1236,12 +1249,16 @@ object Advanced {
     "q168_ann_ivf_pq_two_level",
     (s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val model = graft.operators.ProductQuant.train(emb, "vec_id",
-        "embedding", dim = 64, m = 2, k = 4, iters = 2)
-      graft.operators.ProductQuant.ivfAdcTopKTwoLevel(emb,
+      val index = ProductQuant.train(emb, "vec_id", "embedding", dim = 64,
+        m = 2, k = 4, iters = 2)
+      // eager localCheckpoint: the cell relation feeds both the query
+      // and the corpus side of the candidate join, and its lineage
+      // holds the grouped-Lloyd training rounds
+      val cells = Similarity.ivfCellsTwoLevel(emb, "vec_id", "embedding",
+        nCells = 4, nProbe = 2, superProbe = 2, iters = 2).localCheckpoint()
+      ProductQuant.search(index, corpusCodes(s, index, emb),
           emb.filter(col("vec_id") <= 20), "vec_id", "embedding",
-          dim = 64, model, k = 3, nCells = 4, nProbe = 2,
-          superProbe = 2, ivfIters = 2)
+          dim = 64, k = 3, cells = Some(cells))
         .orderBy(col("q_id"), col("rank"))
     },
     oracle = Some {
@@ -1284,7 +1301,7 @@ object Advanced {
     })
 
   /** q177: ORACLE-CHECKED residual IVF-PQ
-    * ([[graft.operators.ProductQuant.ivfAdcResidualTopK]], Jégou et
+    * (a flat-celled [[graft.operators.ProductQuant.Index]], Jégou et
     * al. 2011 §IV.B — `by_residual = true`, the FAISS `IndexIVFPQ`
     * default): codebooks learn on (vector − nearest-cell centroid)
     * RESIDUALS, and each query's ADC lookup tables are rebuilt per
@@ -1299,12 +1316,11 @@ object Advanced {
     "q177_ann_ivf_pq_residual",
     (s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val model = graft.operators.ProductQuant.trainResidual(emb, "vec_id",
-        "embedding", dim = 64, m = 2, k = 4, iters = 2, nCells = 8,
-        cellIters = 2)
-      graft.operators.ProductQuant.ivfAdcResidualTopK(emb,
+      val index = ProductQuant.train(emb, "vec_id", "embedding", dim = 64,
+        m = 2, k = 4, iters = 2, nCells = 8, cellIters = 2, superProbe = 0)
+      ProductQuant.search(index, corpusCodes(s, index, emb),
           emb.filter(col("vec_id") <= 20), "vec_id", "embedding",
-          dim = 64, model, k = 3, nProbe = 2)
+          dim = 64, k = 3, nProbe = 2)
         .orderBy(col("q_id"), col("rank"))
     },
     oracle = Some(s"""
@@ -1375,7 +1391,7 @@ object Advanced {
     bench = true)
 
   /** q178: ORACLE-CHECKED residual ∘ two-level IVF-PQ
-    * ([[graft.operators.ProductQuant.ivfAdcResidualTopKTwoLevel]]) —
+    * (a two-level-celled [[graft.operators.ProductQuant.Index]]) —
     * the two round-8 index advances COMPOSED: q177's residual
     * encoding (the FAISS-default recall form) behind q168's two-level
     * quantizer (no K-sized literal), residuals subtracted via a
@@ -1450,20 +1466,19 @@ object Advanced {
     "q178_ann_ivf_pq_residual_two_level",
     (s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val model = graft.operators.ProductQuant.trainResidualTwoLevel(emb,
-        "vec_id", "embedding", dim = 64, m = 2, k = 4, iters = 2,
-        nCells = 4, cellIters = 2, superProbe = 2)
-      graft.operators.ProductQuant.ivfAdcResidualTopKTwoLevel(emb,
+      val index = ProductQuant.train(emb, "vec_id", "embedding", dim = 64,
+        m = 2, k = 4, iters = 2, nCells = 4, cellIters = 2, superProbe = 2)
+      ProductQuant.search(index, corpusCodes(s, index, emb),
           emb.filter(col("vec_id") <= 20), "vec_id", "embedding",
-          dim = 64, model, k = 3, nProbe = 2, superProbe = 2)
+          dim = 64, k = 3, nProbe = 2, superProbe = 2)
         .orderBy(col("q_id"), col("rank"))
     },
     oracle = Some(twoLevelFrontSql + residualTwoLevelTailSql))
 
   /** q181: ORACLE-CHECKED residual-drift retrain alarm
-    * ([[graft.operators.ProductQuant.residualDriftReport]]) — the
+    * ([[graft.operators.ProductQuant.driftReport]]) — the
     * maintenance half of the frozen-index lifecycle: assign-only
-    * appends ([[graft.operators.ProductQuant.encodeResidualTwoLevel]])
+    * appends ([[graft.operators.ProductQuant.encode]])
     * keep a frozen index current, and THIS report decides when the
     * frozen centroids have outlived the data. Two scenarios share one
     * trained model (q177's cells): appending the training corpus
@@ -1479,14 +1494,13 @@ object Advanced {
     "q181_index_drift_alarm",
     (s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val model = graft.operators.ProductQuant.trainResidual(emb, "vec_id",
-        "embedding", dim = 64, m = 2, k = 4, iters = 2, nCells = 8,
-        cellIters = 2)
+      val index = ProductQuant.train(emb, "vec_id", "embedding", dim = 64,
+        m = 2, k = 4, iters = 2, nCells = 8, cellIters = 2, superProbe = 0)
       val shifted = emb.withColumn("embedding",
         transform(col("embedding"), x => x.cast("double") + lit(0.25)))
       def rep(appended: org.apache.spark.sql.DataFrame, name: String) =
-        graft.operators.ProductQuant.residualDriftReport(model, emb,
-            appended, "vec_id", "embedding", dim = 64)
+        ProductQuant.driftReport(index, emb, appended, "vec_id",
+            "embedding", dim = 64)
           .withColumn("scenario", lit(name))
       rep(emb, "same").unionByName(rep(shifted, "shifted"))
         .select(col("scenario"), col("n_base"), col("n_new"),
@@ -1573,7 +1587,7 @@ object Advanced {
 
   /** `out` = `src` (vec_id, v micro list) rotated by rot182 with the
     * exact (Σ + 10¹⁵) // 10⁶ − 10⁹ offset-floor arithmetic
-    * [[graft.operators.ProductQuant.rotate]] computes. */
+    * the index rotation ([[graft.operators.ProductQuant.Index]]) computes. */
   private def rotatedCteSql(src: String, out: String): String = s"""$out AS (
         SELECT vec_id, list(val ORDER BY i) AS v FROM (
           SELECT s.vec_id, rotr.i,
@@ -1594,12 +1608,21 @@ object Advanced {
       $rotrCteSql,
       ${rotatedCteSql("vm", "q")}"""
 
+  /** q184/q193's index: rot182 in front of a residual ∘ two-level
+    * index (4 cells, m=2 codebooks of k=4) — the composition a fixed
+    * rotation lets static oracle SQL replay. */
+  private def trainRot182ResidualTwoLevel(
+      emb: org.apache.spark.sql.DataFrame): ProductQuant.Index =
+    ProductQuant.train(emb, "vec_id", "embedding", dim = 64, m = 2, k = 4,
+      iters = 2, nCells = 4, cellIters = 2, superProbe = 2,
+      rotation = Some(rot182))
+
   /** q182: ORACLE-CHECKED PQ in a ROTATED domain — the
     * micro-exactness argument OPQ rests on, proven end to end with a
     * FIXED rotation (the q166 fixed-weights precedent: a trained
     * rotation cannot be embedded in static oracle SQL, so the
     * replayable query pins the rotated-domain MACHINERY —
-    * [[graft.operators.ProductQuant.rotate]]'s offset-floor integer
+    * the index rotation's offset-floor integer
     * matmul, codebook training on rotated vectors, rotated ADC —
     * and q183 witnesses the trained path). DuckDB applies the
     * identical micro matrix with the identical
@@ -1609,13 +1632,11 @@ object Advanced {
     "q182_ann_opq_rotated",
     (s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val rotated = graft.operators.ProductQuant.rotate(emb, "vec_id",
-        "embedding", 64, rot182)
-      val model = graft.operators.ProductQuant.train(rotated, "vec_id",
-        "__rv", dim = 64, m = 2, k = 4, iters = 2)
-      graft.operators.ProductQuant.adcTopK(rotated,
-          rotated.filter(col("vec_id") <= 20), "vec_id", "__rv",
-          dim = 64, model, k = 3)
+      val index = ProductQuant.train(emb, "vec_id", "embedding", dim = 64,
+        m = 2, k = 4, iters = 2, rotation = Some(rot182))
+      ProductQuant.search(index, corpusCodes(s, index, emb),
+          emb.filter(col("vec_id") <= 20), "vec_id", "embedding",
+          dim = 64, k = 3)
         .orderBy(col("q_id"), col("rank"))
     },
     oracle = Some(s"""
@@ -1652,7 +1673,7 @@ object Advanced {
 
   /** q183: OPQ training determinism, oracle-witnessed (the q92/q167
     * pattern for the trained-rotation path q182 cannot replay): two
-    * full [[graft.operators.ProductQuant.trainOpq]] runs — each
+    * full [[graft.operators.ProductQuant.train]] runs with opqIters — each
     * alternating sample-bounded codebook fits with exact-long
     * cross-covariance Procrustes updates — must produce the
     * bit-identical micro rotation AND bit-identical corpus codes;
@@ -1660,23 +1681,19 @@ object Advanced {
   private val q183 = QuerySpec(
     "q183_opq_determinism",
     (s, dir) => {
-      import graft.operators.ProductQuant
       val emb = Tables.embeddings(s, dir)
-      val m1 = ProductQuant.trainOpq(emb, "vec_id", "embedding", dim = 64,
+      val m1 = ProductQuant.train(emb, "vec_id", "embedding", dim = 64,
         m = 2, k = 4, iters = 2, opqIters = 2)
-      val m2 = ProductQuant.trainOpq(emb.repartition(7), "vec_id",
+      val m2 = ProductQuant.train(emb.repartition(7), "vec_id",
         "embedding", dim = 64, m = 2, k = 4, iters = 2, opqIters = 2)
-      val rotDiff = m1.rotation.zip(m2.rotation)
+      val rotDiff = m1.rotation.get.zip(m2.rotation.get)
         .map { case (a, b) => a.zip(b).count { case (x, y) => x != y } }
         .sum
-      val c1 = ProductQuant.encode(
-          ProductQuant.rotate(emb, "vec_id", "embedding", 64, m1.rotation),
-          "vec_id", "__rv", 64, m1.pq)
-        .select(col("vec_id"), col("codes").as("c1"))
-      val c2 = ProductQuant.encode(
-          ProductQuant.rotate(emb, "vec_id", "embedding", 64, m2.rotation),
-          "vec_id", "__rv", 64, m2.pq)
-        .select(col("vec_id"), col("codes").as("c2"))
+      def codes(index: ProductQuant.Index, name: String) =
+        ProductQuant.encode(index, emb, "vec_id", "embedding", 64)
+          .select(col("c_id").as("vec_id"), col("codes").as(name))
+      val c1 = codes(m1, "c1")
+      val c2 = codes(m2, "c2")
       c1.join(c2, "vec_id")
         .agg(count(lit(1)).as("n_vecs"),
           sum(when(col("c1") =!= col("c2"), 1L).otherwise(0L))
@@ -1695,8 +1712,8 @@ object Advanced {
                              [true])"""))
 
   /** q184: ORACLE-CHECKED composed OPQ ∘ residual ∘ two-level SERVING
-    * path ([[graft.operators.ProductQuant.encodeOpqResidualTwoLevel]]
-    * → [[graft.operators.ProductQuant.opqResidualTopKTwoLevelOverCodes]])
+    * path ([[graft.operators.ProductQuant.encode]] →
+    * [[graft.operators.ProductQuant.search]] over the codes)
     * — the full production index lifecycle's search leg, run exactly
     * as a frozen deployment runs it: the corpus encodes to a stored
     * (c_id, cell, codes) relation and the query side rotates +
@@ -1713,81 +1730,62 @@ object Advanced {
   private val q184 = QuerySpec(
     "q184_ann_opq_residual_two_level",
     (s, dir) => {
-      import graft.operators.ProductQuant
       val emb = Tables.embeddings(s, dir)
-      val rotated = ProductQuant.rotate(emb, "vec_id", "embedding", 64,
-        rot182)
-      val model = ProductQuant.OpqResidualTwoLevelModel(rot182,
-        ProductQuant.trainResidualTwoLevel(rotated, "vec_id", "__rv",
-          dim = 64, m = 2, k = 4, iters = 2, nCells = 4, cellIters = 2,
-          superProbe = 2))
-      // encode over the ALREADY-rotated relation (encodeOpqResidual-
-      // TwoLevel would rotate the corpus a second time — the encode
-      // is definitionally encodeResidualTwoLevel ∘ rotate)
-      val codes = ProductQuant.encodeResidualTwoLevel(rotated, "vec_id",
-          "__rv", 64, model.inner)
-        .repartition(s.sparkContext.defaultParallelism)
-      ProductQuant.opqResidualTopKTwoLevelOverCodes(codes,
+      val index = trainRot182ResidualTwoLevel(emb)
+      ProductQuant.search(index, corpusCodes(s, index, emb),
           emb.filter(col("vec_id") <= 20), "vec_id", "embedding",
-          dim = 64, model, k = 3, nProbe = 2, superProbe = 2)
+          dim = 64, k = 3, nProbe = 2, superProbe = 2)
         .orderBy(col("q_id"), col("rank"))
     },
     oracle = Some(
       twoLevelFrontSqlOver(rotatedQFrontSql) + residualTwoLevelTailSql))
 
-  /** Per-corpus frozen OPQ∘residual∘two-level model cache backing
-    * [[q193]]: production trains ONCE, persists the artifact
-    * ([[graft.io.VectorIndexArtifacts]]), and every serving run loads
-    * the frozen model — so the first call per corpus dir trains and
-    * round-trips through save/load (exercising the artifact path),
-    * and every later call is pure serving. Keyed by dir: sf0.001
-    * warm-up and sf0.1 timed runs never share a model. */
-  private val frozenOpqModels = new java.util.concurrent.ConcurrentHashMap[
-    String, graft.operators.ProductQuant.OpqResidualTwoLevelModel]()
+  /** Per-corpus frozen index cache backing [[q193]]: production trains
+    * ONCE, persists the artifact ([[graft.io.VectorIndexArtifacts]])
+    * together with the encoded corpus, and every serving run loads
+    * both — so the first call per corpus dir trains, encodes and
+    * round-trips through save/load (exercising the artifact path), and
+    * every later call is pure serving over the stored codes. Keyed by
+    * dir: sf0.001 warm-up and sf0.1 timed runs never share an index. */
+  private val frozenIndexes = new java.util.concurrent.ConcurrentHashMap[
+    String, (ProductQuant.Index, org.apache.spark.sql.DataFrame)]()
 
   /** q193: FROZEN-SERVE twin of q184 — the BENCH entry for the
     * composed index (the q153 frozen-bench precedent). q184 times the
     * full in-query training lifecycle (sample-bounded Lloyd rounds =
     * dozens of tiny driver-orchestrated jobs), which is NOT what a
-    * deployed index pays per serving run; this twin serves from the
-    * cached frozen model ([[frozenOpqModels]]) so the benched work is
-    * exactly the production path: one corpus rotate (broadcast row) +
-    * residual encode + the `OverCodes` cell-join ADC search. Results
-    * are bit-identical to q184 (same training on the same corpus),
-    * so the same oracle replays it. */
+    * deployed index pays per serving run; this twin serves the cached
+    * frozen index over its stored code relation ([[frozenIndexes]]),
+    * never re-encoding the corpus, so the benched work is exactly the
+    * production path: the query-side rotate + per-(q, cell) lookup
+    * tables and the cell-join ADC search over the loaded codes.
+    * Results are bit-identical to q184 (same training on the same
+    * corpus), so the same oracle replays it. */
   private val q193 = QuerySpec(
     "q193_ann_opq_frozen_serve",
     (s, dir) => {
-      import graft.operators.ProductQuant
       val emb = Tables.embeddings(s, dir)
-      val model = frozenOpqModels.computeIfAbsent(dir, _ => {
-        val rotated = ProductQuant.rotate(emb, "vec_id", "embedding", 64,
-          rot182)
-        val trained = ProductQuant.OpqResidualTwoLevelModel(rot182,
-          ProductQuant.trainResidualTwoLevel(rotated, "vec_id", "__rv",
-            dim = 64, m = 2, k = 4, iters = 2, nCells = 4, cellIters = 2,
-            superProbe = 2))
+      val (index, codes) = frozenIndexes.computeIfAbsent(dir, _ => {
         val tmp = java.nio.file.Files
           .createTempDirectory("graft-opq-frozen-")
-        // model-sized artifacts, but a long-lived JVM (bench rounds,
-        // test suites) must not accumulate them: sweep at exit
+        // model-sized artifact plus one code row per vector, but a
+        // long-lived JVM (bench rounds, test suites) must not
+        // accumulate them: sweep at exit
         Runtime.getRuntime.addShutdownHook(new Thread(() =>
           try {
             java.nio.file.Files.walk(tmp).sorted(
                 java.util.Comparator.reverseOrder[java.nio.file.Path]())
               .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
           } catch { case scala.util.control.NonFatal(_) => }))
-        graft.io.VectorIndexArtifacts.saveOpqResidualTwoLevel(s,
-          tmp.toString, trained)
-        graft.io.VectorIndexArtifacts.loadOpqResidualTwoLevel(s,
-          tmp.toString)
+        val trained = trainRot182ResidualTwoLevel(emb)
+        graft.io.VectorIndexArtifacts.save(s, tmp.toString, trained)
+        graft.io.ParquetSink(s"$tmp/codes").write(corpusCodes(s, trained, emb))
+        (graft.io.VectorIndexArtifacts.load(s, tmp.toString),
+          s.read.parquet(s"$tmp/codes"))
       })
-      val codes = ProductQuant.encodeOpqResidualTwoLevel(emb, "vec_id",
-          "embedding", 64, model)
-        .repartition(s.sparkContext.defaultParallelism)
-      ProductQuant.opqResidualTopKTwoLevelOverCodes(codes,
-          emb.filter(col("vec_id") <= 20), "vec_id", "embedding",
-          dim = 64, model, k = 3, nProbe = 2, superProbe = 2)
+      ProductQuant.search(index, codes, emb.filter(col("vec_id") <= 20),
+          "vec_id", "embedding", dim = 64, k = 3, nProbe = 2,
+          superProbe = 2)
         .orderBy(col("q_id"), col("rank"))
     },
     oracle = Some(
@@ -1805,17 +1803,15 @@ object Advanced {
   private val q185 = QuerySpec(
     "q185_opq_drift_alarm",
     (s, dir) => {
-      import graft.operators.ProductQuant
       val emb = Tables.embeddings(s, dir)
-      def rot(df: org.apache.spark.sql.DataFrame) =
-        ProductQuant.rotate(df, "vec_id", "embedding", 64, rot182)
-      val model = ProductQuant.trainResidual(rot(emb), "vec_id", "__rv",
-        dim = 64, m = 2, k = 4, iters = 2, nCells = 8, cellIters = 2)
+      val index = ProductQuant.train(emb, "vec_id", "embedding", dim = 64,
+        m = 2, k = 4, iters = 2, nCells = 8, cellIters = 2, superProbe = 0,
+        rotation = Some(rot182))
       val shifted = emb.withColumn("embedding",
         transform(col("embedding"), x => x.cast("double") + lit(0.25)))
       def rep(appended: org.apache.spark.sql.DataFrame, name: String) =
-        ProductQuant.residualDriftReport(model, rot(emb), rot(appended),
-            "vec_id", "__rv", dim = 64)
+        ProductQuant.driftReport(index, emb, appended, "vec_id",
+            "embedding", dim = 64)
           .withColumn("scenario", lit(name))
       rep(emb, "same").unionByName(rep(shifted, "shifted"))
         .select(col("scenario"), col("n_base"), col("n_new"),

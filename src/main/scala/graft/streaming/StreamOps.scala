@@ -329,50 +329,29 @@ object StreamOps {
     }
 
   /** Per-micro-batch assign-only vector-index APPEND: each arriving
-    * embedding batch is encoded against a FROZEN residual two-level
-    * index ([[graft.operators.ProductQuant.encodeResidualTwoLevel]] —
-    * nearest frozen cell + residual PQ codes, NO retrain) and `sink`
-    * receives the (c_id, cell, codes) rows to append to the stored
-    * index relation. Because encode is a pure per-row function of the
-    * frozen model, append-then-search ≡ batch-rebuild-search
-    * (spec-proven) — the streaming index stays byte-consistent with a
-    * batch rebuild at every point. Stateless (batch-local narrow
-    * pass + a broadcast model join); pair with
-    * [[graft.operators.ProductQuant.residualDriftReportTwoLevel]] on
-    * the appended batches to decide when the frozen centroids have
-    * drifted enough to retrain (q181's alarm, live). */
+    * embedding batch is encoded against a FROZEN index
+    * ([[graft.operators.ProductQuant.encode]] — rotation, nearest
+    * frozen cell and residual PQ codes as the index has them, NO
+    * retrain) and `sink` receives the (c_id, [cell,] codes) rows to
+    * append to the stored index relation. Because encode is a pure
+    * per-row function of the frozen index, append-then-search ≡
+    * batch-rebuild-search (spec-proven for the residual two-level and
+    * the rotated forms) — the streaming index stays byte-consistent
+    * with a batch rebuild at every point. Stateless (batch-local narrow
+    * pass + broadcast model joins); pair with
+    * [[graft.operators.ProductQuant.driftReport]] on the appended
+    * batches to decide when the frozen centroids have drifted enough
+    * to retrain (q181's alarm, live). */
   def indexAppendEachBatch(vecs: DataFrame,
-                           model: graft.operators.ProductQuant.ResidualTwoLevelModel,
+                           index: graft.operators.ProductQuant.Index,
                            idCol: String = "vec_id",
                            vecCol: String = "embedding",
                            dim: Int = 64, superProbe: Int = 2)(
       sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     vecs.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      sink(graft.operators.ProductQuant.encodeResidualTwoLevel(
-        batch, idCol, vecCol, dim, model, superProbe), id)
-    }
-
-  /** [[indexAppendEachBatch]] for the composed OPQ index: each batch
-    * rotates (one broadcast row, batch-local and stateless) and
-    * encodes against the FROZEN rotated-domain index
-    * ([[graft.operators.ProductQuant.encodeOpqResidualTwoLevel]]);
-    * `sink` appends the (c_id, cell, codes) rows. The same
-    * append ≡ rebuild identity holds — rotate and encode are pure
-    * per-row functions of the frozen model (spec-proven mid-stream:
-    * stored ∪ appended searched by
-    * [[graft.operators.ProductQuant.opqResidualTopKTwoLevelOverCodes]]
-    * equals the batch rebuild). */
-  def opqIndexAppendEachBatch(vecs: DataFrame,
-                              model: graft.operators.ProductQuant.OpqResidualTwoLevelModel,
-                              idCol: String = "vec_id",
-                              vecCol: String = "embedding",
-                              dim: Int = 64, superProbe: Int = 2)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      sink(graft.operators.ProductQuant.encodeOpqResidualTwoLevel(
-        batch, idCol, vecCol, dim, model, superProbe), id)
+      sink(graft.operators.ProductQuant.encode(index, batch, idCol, vecCol,
+        dim, superProbe), id)
     }
 
   /** Declarative gap-based session aggregation (session_window): sessions

@@ -1,7 +1,8 @@
 package graft.io
 
 import graft.SparkSpec
-import graft.operators.{KMeans, ProductQuant}
+import graft.operators.{KMeans, ProductQuant, Similarity}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** [[VectorIndexArtifacts]] — a saved index must serve byte-identical
@@ -12,41 +13,87 @@ class VectorIndexArtifactsSpec extends SparkSpec {
   private lazy val emb = graft.Tables.embeddings(spark, sfDir)
   private lazy val queries = emb.filter(col("vec_id") <= 10)
 
-  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+  private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  test("PQ model round-trips exactly; ADC and IVF-PQ search are byte-identical") {
-    val model = ProductQuant.train(emb, "vec_id", "embedding",
-      dim = 64, m = 2, k = 4, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("pq").toString + "/idx"
-    VectorIndexArtifacts.savePq(spark, dir, model)
-    val loaded = VectorIndexArtifacts.loadPq(spark, dir)
-    loaded.slices shouldBe model.slices
-    loaded.books shouldBe model.books
-    rowsOf(ProductQuant.adcTopK(emb, queries, "vec_id", "embedding",
-      dim = 64, loaded, k = 3)) shouldBe
-      rowsOf(ProductQuant.adcTopK(emb, queries, "vec_id", "embedding",
-        dim = 64, model, k = 3))
-    rowsOf(ProductQuant.ivfAdcTopKTwoLevel(emb, queries, "vec_id",
-      "embedding", dim = 64, loaded, k = 3, nCells = 4)) shouldBe
-      rowsOf(ProductQuant.ivfAdcTopKTwoLevel(emb, queries, "vec_id",
-        "embedding", dim = 64, model, k = 3, nCells = 4))
+  private def train(nCells: Int = 0, superProbe: Int = 2,
+                    opqIters: Int = 0): ProductQuant.Index =
+    ProductQuant.train(emb, "vec_id", "embedding", dim = 64, m = 2, k = 4,
+      iters = 2, nCells = nCells, superProbe = superProbe,
+      opqIters = opqIters)
+
+  /** Codebooks for the cases that round-trip one stage. */
+  private lazy val pq = train().pq
+
+  private def saved(index: ProductQuant.Index): String = {
+    val dir = tempDir("pq").toString + "/idx"
+    VectorIndexArtifacts.save(spark, dir, index)
+    dir
+  }
+
+  private def encode(index: ProductQuant.Index): DataFrame =
+    ProductQuant.encode(index, emb, "vec_id", "embedding", 64)
+
+  /** Save → load must return every stage as trained (the two-level sub
+    * relation row for row), and the loaded index must serve
+    * byte-identically: over a stored parquet code relation vs the
+    * in-memory encode, with search-time cells when it has none of its
+    * own, and with the drift alarm calibrated when it has. */
+  private def roundTrip(index: ProductQuant.Index): Unit = {
+    val loaded = VectorIndexArtifacts.load(spark, saved(index))
+    loaded.rotation shouldBe index.rotation
+    loaded.pq shouldBe index.pq
+    (loaded.cells, index.cells) match {
+      case (Some(Right(l)), Some(Right(t))) =>
+        l.superModel shouldBe t.superModel
+        l.nSub shouldBe t.nSub
+        rowsOf(l.sub) shouldBe rowsOf(t.sub)
+      case (l, t) => l shouldBe t
+    }
+    def serve(i: ProductQuant.Index, codes: DataFrame,
+              cells: Option[DataFrame] = None) =
+      rowsOf(ProductQuant.search(i, codes, queries, "vec_id", "embedding",
+        64, k = 3, cells = cells))
+    val stored = tempDir("pqcodes").toString + "/codes"
+    ParquetSink(stored).write(encode(loaded))
+    serve(loaded, spark.read.parquet(stored)) shouldBe serve(index, encode(index))
+    if (index.cells.isEmpty) {
+      val cells = Some(Similarity.ivfCellsTwoLevel(emb, "vec_id",
+        "embedding", nCells = 4).localCheckpoint())
+      serve(loaded, encode(loaded), cells) shouldBe
+        serve(index, encode(index), cells)
+    } else {
+      val rep = ProductQuant.driftReport(loaded, emb, emb, "vec_id",
+        "embedding", 64).collect().head
+      rep.getAs[Long]("drift_bp") shouldBe 10000L
+      rep.getAs[Boolean]("retrain") shouldBe false
+    }
+  }
+
+  Seq(
+    "PQ model round-trips exactly; ADC and IVF-PQ search are byte-identical" ->
+      Seq(() => train()),
+    "residual and residual∘two-level indexes round-trip: frozen search is byte-identical" ->
+      Seq(() => train(nCells = 8, superProbe = 0), () => train(nCells = 4)),
+    "OPQ and OPQ∘residual∘two-level indexes round-trip: frozen rotated search is byte-identical" ->
+      Seq(() => train(opqIters = 2), () => train(nCells = 4, opqIters = 2))
+  ).foreach { case (name, forms) =>
+    test(name) { forms.foreach(form => roundTrip(form())) }
   }
 
   test("k-means model round-trips exactly, cid order preserved") {
     val model = KMeans.fit(emb, "vec_id", "embedding", k = 5, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("km").toString + "/idx"
-    VectorIndexArtifacts.saveKMeans(spark, dir, model)
-    VectorIndexArtifacts.loadKMeans(spark, dir) shouldBe model
+    VectorIndexArtifacts.load(spark,
+      saved(ProductQuant.Index(None, Some(Left(model)), pq)))
+      .cells shouldBe Some(Left(model))
   }
 
   test("two-level model round-trips: saved index assigns byte-identically") {
-    import graft.operators.Similarity
     val model = Similarity.trainTwoLevelCells(emb, "vec_id", "embedding",
       nCells = 9, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("tl").toString + "/idx"
-    VectorIndexArtifacts.saveTwoLevel(spark, dir, model)
-    val loaded = VectorIndexArtifacts.loadTwoLevel(spark, dir)
+    val loaded = VectorIndexArtifacts.load(spark,
+        saved(ProductQuant.Index(None, Some(Right(model)), pq)))
+      .cells.get.toOption.get
     loaded.superModel shouldBe model.superModel
     loaded.nSub shouldBe model.nSub
     rowsOf(loaded.sub) shouldBe rowsOf(model.sub)
@@ -61,107 +108,60 @@ class VectorIndexArtifactsSpec extends SparkSpec {
         nCells = 9, nProbe = 2, superProbe = 2, iters = 2))
   }
 
-  test("residual and residual∘two-level indexes round-trip: frozen search is byte-identical") {
-    import graft.operators.ProductQuant
-    val rm = ProductQuant.trainResidual(emb, "vec_id", "embedding",
-      dim = 64, m = 2, k = 4, iters = 2, nCells = 8)
-    val d1 = java.nio.file.Files.createTempDirectory("res").toString + "/idx"
-    VectorIndexArtifacts.saveResidual(spark, d1, rm)
-    val rmL = VectorIndexArtifacts.loadResidual(spark, d1)
-    rmL.cells shouldBe rm.cells
-    rmL.pq shouldBe rm.pq
-    rowsOf(ProductQuant.ivfAdcResidualTopK(emb, queries, "vec_id",
-      "embedding", dim = 64, rmL, k = 3)) shouldBe
-      rowsOf(ProductQuant.ivfAdcResidualTopK(emb, queries, "vec_id",
-        "embedding", dim = 64, rm, k = 3))
-    val tm = ProductQuant.trainResidualTwoLevel(emb, "vec_id", "embedding",
-      dim = 64, m = 2, k = 4, iters = 2, nCells = 4)
-    val d2 = java.nio.file.Files.createTempDirectory("rtl").toString + "/idx"
-    VectorIndexArtifacts.saveResidualTwoLevel(spark, d2, tm)
-    val tmL = VectorIndexArtifacts.loadResidualTwoLevel(spark, d2)
-    rowsOf(ProductQuant.ivfAdcResidualTopKTwoLevel(emb, queries, "vec_id",
-      "embedding", dim = 64, tmL, k = 3)) shouldBe
-      rowsOf(ProductQuant.ivfAdcResidualTopKTwoLevel(emb, queries, "vec_id",
-        "embedding", dim = 64, tm, k = 3))
+  test("older layouts load: codebooks at the artifact root, composed index stages under inner/") {
+    import java.nio.file.{Files, Paths}
+    val flat = ProductQuant.Index(None, None, pq)
+    val d1 = saved(flat)
+    Files.move(Paths.get(s"$d1/pq/slices"), Paths.get(s"$d1/slices"))
+    Files.move(Paths.get(s"$d1/pq/books"), Paths.get(s"$d1/books"))
+    VectorIndexArtifacts.load(spark, d1) shouldBe flat
+    val composed = ProductQuant.Index(
+      Some(ProductQuant.identityRotation(64)),
+      Some(Left(KMeans.fit(emb, "vec_id", "embedding", k = 3, iters = 1))),
+      pq)
+    val d2 = saved(composed)
+    Files.createDirectories(Paths.get(s"$d2/inner"))
+    Files.move(Paths.get(s"$d2/cells"), Paths.get(s"$d2/inner/cells"))
+    Files.move(Paths.get(s"$d2/pq"), Paths.get(s"$d2/inner/pq"))
+    VectorIndexArtifacts.load(spark, d2) shouldBe composed
   }
 
-  test("OPQ and OPQ∘residual∘two-level indexes round-trip: frozen rotated search is byte-identical") {
-    val opq = ProductQuant.trainOpq(emb, "vec_id", "embedding",
-      dim = 64, m = 2, k = 4, iters = 2, opqIters = 2)
-    val d1 = java.nio.file.Files.createTempDirectory("opq").toString + "/idx"
-    VectorIndexArtifacts.saveOpq(spark, d1, opq)
-    val opqL = VectorIndexArtifacts.loadOpq(spark, d1)
-    opqL.rotation shouldBe opq.rotation
-    opqL.pq shouldBe opq.pq
-    rowsOf(ProductQuant.opqAdcTopK(emb, queries, "vec_id", "embedding",
-      dim = 64, opqL, k = 3)) shouldBe
-      rowsOf(ProductQuant.opqAdcTopK(emb, queries, "vec_id", "embedding",
-        dim = 64, opq, k = 3))
-    // the composed production index: save/load the full model, write
-    // the stored code relation to parquet, and serve FROZEN — loaded
-    // model over loaded codes must equal the in-memory fused search
-    val cm = ProductQuant.trainOpqResidualTwoLevel(emb, "vec_id",
-      "embedding", dim = 64, m = 2, k = 4, iters = 2, nCells = 4,
-      opqIters = 2)
-    val d2 = java.nio.file.Files.createTempDirectory("opqr").toString + "/idx"
-    VectorIndexArtifacts.saveOpqResidualTwoLevel(spark, d2, cm)
-    val cmL = VectorIndexArtifacts.loadOpqResidualTwoLevel(spark, d2)
-    cmL.rotation shouldBe cm.rotation
-    cmL.inner.pq shouldBe cm.inner.pq
-    val codesDir = java.nio.file.Files.createTempDirectory("opqc").toString
-    ParquetSink(codesDir + "/codes").write(
-      ProductQuant.encodeOpqResidualTwoLevel(emb, "vec_id", "embedding",
-        64, cm))
-    val stored = spark.read.parquet(codesDir + "/codes")
-    rowsOf(ProductQuant.opqResidualTopKTwoLevelOverCodes(stored, queries,
-      "vec_id", "embedding", 64, cmL, k = 3)) shouldBe
-      rowsOf(ProductQuant.opqResidualTopKTwoLevel(emb, queries,
-        "vec_id", "embedding", 64, cm, k = 3))
-    // and the rotated-domain drift alarm runs off the loaded model
-    val rep = ProductQuant.opqResidualDriftReportTwoLevel(cmL, emb, emb,
-      "vec_id", "embedding", 64).collect().head
-    rep.getAs[Long]("drift_bp") shouldBe 10000L
-    rep.getAs[Boolean]("retrain") shouldBe false
+  /** A copy of the saved index at `dir` whose `part` is `replacement`. */
+  private def corrupted(dir: String, part: String,
+                        replacement: DataFrame): String = {
+    val moved = tempDir("pqbad").toString + "/idx"
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir),
+      new java.io.File(moved))
+    ParquetSink(s"$moved/$part", coalesceTo = Some(1)).write(replacement)
+    moved
   }
 
   test("corrupted rotation artifacts fail loudly: missing row and ragged row both reject") {
     val rot = ProductQuant.identityRotation(4)
-    val dir = java.nio.file.Files.createTempDirectory("rot").toString + "/idx"
-    VectorIndexArtifacts.saveRotation(spark, dir, rot)
-    VectorIndexArtifacts.loadRotation(spark, dir) shouldBe rot
+    val dir = saved(ProductQuant.Index(Some(rot), None, pq))
+    VectorIndexArtifacts.load(spark, dir).rotation shouldBe Some(rot)
     // drop row i=2: contiguity check must reject
     val pruned = spark.read.parquet(s"$dir/rotation").filter(col("i") =!= 2)
-    val moved = java.nio.file.Files.createTempDirectory("rotbad").toString + "/idx"
-    new java.io.File(moved).mkdirs()
-    ParquetSink(s"$moved/rotation", coalesceTo = Some(1)).write(pruned)
-    an[IllegalArgumentException] should be thrownBy
-      VectorIndexArtifacts.loadRotation(spark, moved)
+    (the[IllegalArgumentException] thrownBy VectorIndexArtifacts.load(spark,
+      corrupted(dir, "rotation", pruned))).getMessage should include(
+      "rotation rows must be contiguous")
     // truncate row 2's vector: squareness check must reject
     val ragged = spark.read.parquet(s"$dir/rotation")
       .withColumn("rvec", when(col("i") === 2,
         slice(col("rvec"), 1, 3)).otherwise(col("rvec")))
-    val moved2 = java.nio.file.Files.createTempDirectory("rotbad2").toString + "/idx"
-    new java.io.File(moved2).mkdirs()
-    ParquetSink(s"$moved2/rotation", coalesceTo = Some(1)).write(ragged)
-    an[IllegalArgumentException] should be thrownBy
-      VectorIndexArtifacts.loadRotation(spark, moved2)
+    (the[IllegalArgumentException] thrownBy VectorIndexArtifacts.load(spark,
+      corrupted(dir, "rotation", ragged))).getMessage should include(
+      "rotation must be square")
   }
 
   test("corrupted artifacts fail loudly instead of serving a wrong index") {
     val model = KMeans.fit(emb, "vec_id", "embedding", k = 3, iters = 1)
-    val dir = java.nio.file.Files.createTempDirectory("bad").toString + "/idx"
-    VectorIndexArtifacts.saveKMeans(spark, dir, model)
+    val dir = saved(ProductQuant.Index(None, Some(Left(model)), pq))
     // drop a centroid row: contiguity check must reject the load
-    val pruned = spark.read.parquet(s"$dir/centroids")
+    val pruned = spark.read.parquet(s"$dir/cells/centroids")
       .filter(col("cid") =!= 2)
-    ParquetSink(s"$dir/centroids2", coalesceTo = Some(1)).write(pruned)
-    val moved = dir + "2"
-    new java.io.File(s"$moved").mkdirs()
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$dir/centroids2"),
-      java.nio.file.Paths.get(s"$moved/centroids"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    an[IllegalArgumentException] should be thrownBy
-      VectorIndexArtifacts.loadKMeans(spark, moved)
+    (the[IllegalArgumentException] thrownBy VectorIndexArtifacts.load(spark,
+      corrupted(dir, "cells/centroids", pruned))).getMessage should include(
+      "centroid cids must be contiguous")
   }
 }

@@ -25,8 +25,24 @@ class ProductQuantSpec extends SparkSpec {
 
   private def df = fixture.toDF("id", "vec")
 
-  private lazy val model =
+  private lazy val index =
     ProductQuant.train(df, "id", "vec", dim = 4, m = 2, k = 2, iters = 1)
+  private def model = index.pq
+
+  private def encode(in: org.apache.spark.sql.DataFrame) =
+    ProductQuant.encode(index, in, "id", "vec", dim = 4)
+
+  /** ADC top-k of `queries` over the encoded `corpus`, optionally
+    * pruned by search-time cells. */
+  private def adc(corpus: org.apache.spark.sql.DataFrame,
+                  queries: org.apache.spark.sql.DataFrame, k: Int,
+                  cells: Option[org.apache.spark.sql.DataFrame] = None) =
+    ProductQuant.search(index, encode(corpus), queries, "id", "vec",
+      dim = 4, k = k, cells = cells)
+
+  /** Search-time flat IVF cells over the fixture (the q143 pruning). */
+  private def ivfCells(nProbe: Int) = Some(Similarity.ivfCellsTrained(df,
+    "id", "vec", nCells = 2, nProbe = nProbe, iters = 2))
 
   /** Driver-side reference: micro sub-vectors of a fixture row. */
   private def microSub(v: Seq[Float], start: Int, len: Int): Seq[Long] =
@@ -61,8 +77,7 @@ class ProductQuantSpec extends SparkSpec {
   }
 
   test("encode matches the driver-side BigInt replay for every row") {
-    val got = ProductQuant.encode(df, "id", "vec", dim = 4, model)
-      .orderBy("id").as[(Long, Seq[Int])].collect()
+    val got = encode(df).orderBy("c_id").as[(Long, Seq[Int])].collect()
     got.map(_._1) shouldBe (1L to 6L)
     got.foreach { case (id, codes) =>
       codes shouldBe refCodes(fixture(id.toInt - 1)._2)
@@ -70,8 +85,7 @@ class ProductQuantSpec extends SparkSpec {
   }
 
   test("codes separate well-separated clusters") {
-    val codes = ProductQuant.encode(df, "id", "vec", dim = 4, model)
-      .as[(Long, Seq[Int])].collect().toMap
+    val codes = encode(df).as[(Long, Seq[Int])].collect().toMap
     val low = Seq(1L, 2L, 3L).map(codes)
     val high = Seq(4L, 5L, 6L).map(codes)
     // all low-cluster rows share one code word, all high another
@@ -81,7 +95,7 @@ class ProductQuantSpec extends SparkSpec {
   }
 
   test("adcTopK matches the driver-side replay: dist asc, ties by c_id asc") {
-    val got = ProductQuant.adcTopK(df, df, "id", "vec", dim = 4, model, k = 3)
+    val got = adc(df, df, k = 3)
       .orderBy("q_id", "rank")
       .as[(Long, Int, Long, Long)].collect()
     val codes = fixture.map { case (id, v) => id -> refCodes(v) }.toMap
@@ -95,7 +109,7 @@ class ProductQuantSpec extends SparkSpec {
   }
 
   test("ADC neighbors of a clustered point come from its own cluster") {
-    val nn = ProductQuant.adcTopK(df, df, "id", "vec", dim = 4, model, k = 2)
+    val nn = adc(df, df, k = 2)
       .as[(Long, Int, Long, Long)].collect()
     nn.filter(_._1 <= 3).map(_._3).toSet should contain only (1L, 2L, 3L)
     nn.filter(_._1 >= 4).map(_._3).toSet should contain only (4L, 5L, 6L)
@@ -107,7 +121,7 @@ class ProductQuantSpec extends SparkSpec {
         round(col("sim"), 9).as("sim"))
       .orderBy("q_id", "rank").collect().toSeq
     val reranked = ProductQuant
-      .adcRerank(df, "id", "vec", dim = 4, model, k = 2, candK = 5)
+      .adcRerank(index, df, "id", "vec", dim = 4, k = 2, candK = 5)
       .select(col("q_id"), col("rank"), col("c_id"),
         round(col("sim"), 9).as("sim"))
       .orderBy("q_id", "rank").collect().toSeq
@@ -115,16 +129,12 @@ class ProductQuantSpec extends SparkSpec {
   }
 
   test("encode and adcTopK are partitioning-independent") {
-    val a = ProductQuant.encode(df.repartition(7), "id", "vec", dim = 4, model)
-      .orderBy("id").collect().toSeq
-    val b = ProductQuant.encode(df.coalesce(1), "id", "vec", dim = 4, model)
-      .orderBy("id").collect().toSeq
+    val a = encode(df.repartition(7)).orderBy("c_id").collect().toSeq
+    val b = encode(df.coalesce(1)).orderBy("c_id").collect().toSeq
     a shouldBe b
-    val ta = ProductQuant
-      .adcTopK(df.repartition(5), df, "id", "vec", dim = 4, model, k = 3)
+    val ta = adc(df.repartition(5), df, k = 3)
       .orderBy("q_id", "rank").collect().toSeq
-    val tb = ProductQuant
-      .adcTopK(df.coalesce(1), df, "id", "vec", dim = 4, model, k = 3)
+    val tb = adc(df.coalesce(1), df, k = 3)
       .orderBy("q_id", "rank").collect().toSeq
     ta shouldBe tb
   }
@@ -136,10 +146,9 @@ class ProductQuantSpec extends SparkSpec {
         .toDF("id", "vec").select(col("id"), col("vec").cast("array<float>")))
       .union(Seq((9L, Seq(1.0f, 2.0f))).toDF("id", "vec"))
     val all = df.union(bad)
-    val codes = ProductQuant.encode(all, "id", "vec", dim = 4, model)
-      .as[(Long, Seq[Int])].collect()
+    val codes = encode(all).as[(Long, Seq[Int])].collect()
     codes.map(_._1).sorted shouldBe (1L to 6L)
-    val nn = ProductQuant.adcTopK(all, all, "id", "vec", dim = 4, model, k = 5)
+    val nn = adc(all, all, k = 5)
     nn.filter(col("q_id") > 6 || col("c_id") > 6).count() shouldBe 0L
   }
 
@@ -147,32 +156,30 @@ class ProductQuantSpec extends SparkSpec {
     // nProbe >= nCells: every pair shares a probed cell, so the IVF
     // candidate pruning admits everything and the composition must
     // reproduce plain ADC exactly
-    val full = ProductQuant.adcTopK(df, df, "id", "vec", dim = 4, model, 3)
+    val full = adc(df, df, 3)
       .orderBy("q_id", "rank").collect().toSeq
-    val ivf = ProductQuant.ivfAdcTopK(df, df, "id", "vec", dim = 4, model,
-        k = 3, nCells = 2, nProbe = 2, ivfIters = 2)
+    val ivf = adc(df, df, k = 3, cells = ivfCells(nProbe = 2))
       .orderBy("q_id", "rank").collect().toSeq
     ivf shouldBe full
   }
 
   test("ivfAdcTopK prunes across clusters at nProbe=1 but keeps own-cluster hits") {
-    val nn = ProductQuant.ivfAdcTopK(df, df, "id", "vec", dim = 4, model,
-        k = 2, nCells = 2, nProbe = 1, ivfIters = 2)
-      .as[(Long, Int, Long, Long)].collect()
+    val nn = adc(df, df, k = 2, cells = ivfCells(nProbe = 1))
+      .orderBy("q_id", "rank").as[(Long, Int, Long, Long)].collect()
     // the two fixture clusters are far apart: a trained 2-cell coarse
     // quantizer separates them, so every candidate is own-cluster
     nn.filter(_._1 <= 3).map(_._3).toSet should contain only (1L, 2L, 3L)
     nn.filter(_._1 >= 4).map(_._3).toSet should contain only (4L, 5L, 6L)
     // and within a cluster the ADC ranking matches the unpruned one
-    val full = ProductQuant.adcTopK(df, df, "id", "vec", dim = 4, model, 2)
-      .as[(Long, Int, Long, Long)].collect()
+    val full = adc(df, df, 2)
+      .orderBy("q_id", "rank").as[(Long, Int, Long, Long)].collect()
       .filter(r => (r._1 <= 3) == (r._3 <= 3)).toSeq
     nn.toSeq shouldBe full
   }
 
   test("ivfAdcTopK restricts to the query subset") {
-    val nn = ProductQuant.ivfAdcTopK(df, df.filter(col("id") <= 2),
-        "id", "vec", dim = 4, model, k = 3, nCells = 2, nProbe = 2)
+    val nn = adc(df, df.filter(col("id") <= 2), k = 3,
+        cells = ivfCells(nProbe = 2))
       .as[(Long, Int, Long, Long)].collect()
     nn.map(_._1).toSet shouldBe Set(1L, 2L)
     nn.foreach(r => r._1 should not be r._3)
@@ -184,10 +191,10 @@ class ProductQuantSpec extends SparkSpec {
       m = 8, k = 16, iters = 2)
     val truth = Similarity.bruteForceTopK(emb, emb, "vec_id", "embedding", 3)
       .select(col("q_id"), col("c_id")).as[(Long, Long)].collect().toSet
-    val adc = ProductQuant
-      .adcRerank(emb, "vec_id", "embedding", dim = 64, m, k = 3, candK = 50)
+    val reranked = ProductQuant
+      .adcRerank(m, emb, "vec_id", "embedding", dim = 64, k = 3, candK = 50)
       .select(col("q_id"), col("c_id")).as[(Long, Long)].collect().toSet
-    val recall = truth.intersect(adc).size.toDouble / truth.size
+    val recall = truth.intersect(reranked).size.toDouble / truth.size
     // measured 0.743 at (m=8, k=16, candK=50) on the sf0.001 fixture
     // (near-random vectors — PQ's hardest case); the floor leaves
     // headroom for cosine-ulp jitter across encoder versions
@@ -203,12 +210,10 @@ class ProductQuantSpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") <= 50)
     val truth = exactL2Top3(emb, queries)
     def recallAt(m: Int, k: Int): Double = {
-      val model = ProductQuant.trainOpqResidualTwoLevel(emb, "vec_id",
+      val model = ProductQuant.train(emb, "vec_id",
         "embedding", dim = 64, m = m, k = k, iters = 2, nCells = 4,
         cellIters = 2, opqIters = 2)
-      val got = ProductQuant.opqResidualTopKTwoLevel(emb, queries,
-          "vec_id", "embedding", 64, model, k = 3, nProbe = 4,
-          superProbe = 2)
+      val got = searchEncoded(model, emb, queries, nProbe = 4)
         .select(col("q_id"), col("c_id")).as[(Long, Long)].collect().toSet
       truth.intersect(got).size.toDouble / truth.size
     }
@@ -225,6 +230,18 @@ class ProductQuantSpec extends SparkSpec {
       prod should be >= 0.30
     }
   }
+
+  /** Search `queries` over the `vec_id`/`embedding` corpus encoded by
+    * `index` (superProbe: the two-level beam, encode and search). */
+  private def searchEncoded(index: ProductQuant.Index,
+                            corpus: org.apache.spark.sql.DataFrame,
+                            queries: org.apache.spark.sql.DataFrame,
+                            dim: Int = 64, k: Int = 3, nProbe: Int = 2,
+                            superProbe: Int = 2) =
+    ProductQuant.search(index,
+      ProductQuant.encode(index, corpus, "vec_id", "embedding", dim,
+        superProbe),
+      queries, "vec_id", "embedding", dim, k, nProbe, superProbe)
 
   /** Exact integer-L2 top-3 per query (self-match excluded) — the
     * truth set for the recall pins. */
@@ -265,16 +282,14 @@ class ProductQuantSpec extends SparkSpec {
     def recallOf(nn: Array[(Long, Long)]): Double =
       truth.intersect(nn.toSet).size.toDouble / truth.size
     val queries = emb.filter(col("vec_id") <= 20)
-    val rm = ProductQuant.trainResidual(emb, "vec_id", "embedding",
-      dim = 64, m = 8, k = 16, iters = 2, nCells = 8)
+    val rm = ProductQuant.train(emb, "vec_id", "embedding",
+      dim = 64, m = 8, k = 16, iters = 2, nCells = 8, superProbe = 0)
     // exhaustive probing isolates QUANTIZATION fidelity (no cell miss)
-    val residual = ProductQuant.ivfAdcResidualTopK(emb, queries,
-        "vec_id", "embedding", dim = 64, rm, k = 3, nProbe = 8)
+    val residual = searchEncoded(rm, emb, queries, nProbe = 8)
       .select(col("q_id"), col("c_id")).as[(Long, Long)].collect()
     val raw = ProductQuant.train(emb, "vec_id", "embedding",
       dim = 64, m = 8, k = 16, iters = 2)
-    val plain = ProductQuant.adcTopK(emb, queries, "vec_id", "embedding",
-        dim = 64, raw, k = 3)
+    val plain = searchEncoded(raw, emb, queries)
       .select(col("q_id"), col("c_id")).as[(Long, Long)].collect()
     val (rRes, rRaw) = (recallOf(residual), recallOf(plain))
     info(s"recall@3 vs exact L2: residual $rRes, raw $rRaw")
@@ -313,15 +328,13 @@ class ProductQuantSpec extends SparkSpec {
     def recallOf(nn: Array[(Long, Long)]): Double =
       truth.intersect(nn.toSet).size.toDouble / truth.size
     val queries = df.filter(col("vec_id") <= 20)
-    val rm = ProductQuant.trainResidual(df, "vec_id", "embedding",
-      dim = dim, m = 8, k = 8, iters = 2, nCells = 32)
-    val residual = ProductQuant.ivfAdcResidualTopK(df, queries,
-        "vec_id", "embedding", dim = dim, rm, k = 3, nProbe = 32)
+    val rm = ProductQuant.train(df, "vec_id", "embedding",
+      dim = dim, m = 8, k = 8, iters = 2, nCells = 32, superProbe = 0)
+    val residual = searchEncoded(rm, df, queries, dim, nProbe = 32)
       .select(col("q_id"), col("c_id")).as[(Long, Long)].collect()
     val raw = ProductQuant.train(df, "vec_id", "embedding",
       dim = dim, m = 8, k = 8, iters = 2)
-    val plain = ProductQuant.adcTopK(df, queries, "vec_id", "embedding",
-        dim = dim, raw, k = 3)
+    val plain = searchEncoded(raw, df, queries, dim)
       .select(col("q_id"), col("c_id")).as[(Long, Long)].collect()
     val (rRes, rRaw) = (recallOf(residual), recallOf(plain))
     info(s"clustered recall@3: residual $rRes, raw $rRaw")
@@ -332,12 +345,11 @@ class ProductQuantSpec extends SparkSpec {
     // the residual ∘ two-level composition must keep the win: same
     // residual encoding, no-K-literal quantizer (exhaustive beam so
     // cell-miss noise is excluded here too)
-    val rtl = ProductQuant.trainResidualTwoLevel(df, "vec_id", "embedding",
+    val rtl = ProductQuant.train(df, "vec_id", "embedding",
       dim = dim, m = 8, k = 8, iters = 2, nCells = 32, cellIters = 2,
       superProbe = 6)
-    val composed = ProductQuant.ivfAdcResidualTopKTwoLevel(df, queries,
-        "vec_id", "embedding", dim = dim, rtl, k = 3,
-        nProbe = 36, superProbe = 6)
+    val composed = searchEncoded(rtl, df, queries, dim, nProbe = 36,
+        superProbe = 6)
       .select(col("q_id"), col("c_id")).as[(Long, Long)].collect()
     val rTl = recallOf(composed)
     info(s"clustered recall@3: residual∘two-level $rTl")
@@ -385,13 +397,11 @@ class ProductQuantSpec extends SparkSpec {
     val queries = df.filter(col("vec_id") <= 20)
     val raw = ProductQuant.train(df, "vec_id", "embedding",
       dim = dim, m = 2, k = 8, iters = 3)
-    val rRaw = recallOf(ProductQuant.adcTopK(df, queries, "vec_id",
-        "embedding", dim = dim, raw, k = 3)
+    val rRaw = recallOf(searchEncoded(raw, df, queries, dim)
       .select(col("q_id"), col("c_id")).as[(Long, Long)].collect())
-    val opq = ProductQuant.trainOpq(df, "vec_id", "embedding",
+    val opq = ProductQuant.train(df, "vec_id", "embedding",
       dim = dim, m = 2, k = 8, iters = 3, opqIters = 6)
-    val rOpq = recallOf(ProductQuant.opqAdcTopK(df, queries, "vec_id",
-        "embedding", dim = dim, opq, k = 3)
+    val rOpq = recallOf(searchEncoded(opq, df, queries, dim)
       .select(col("q_id"), col("c_id")).as[(Long, Long)].collect())
     info(s"scrambled-grid recall@3: opq $rOpq, raw $rRaw")
     // measured: opq 0.333 vs raw 0.067 — a 5x separation; the floor
@@ -406,7 +416,7 @@ class ProductQuantSpec extends SparkSpec {
     // quantization) — the fixed-point property the alternation
     // relies on. Exercised through the public API by planting a
     // rotation-invariant fixture is impossible, so this drives the
-    // private step via trainOpq on data whose PQ reconstruction IS
+    // private step via an OPQ train on data whose PQ reconstruction IS
     // near-exact: k=8 codes for 8 distinct patterns.
     val dim = 4
     def proto(p: Int, j: Int): Double = ((p * 13 + j * 7) % 9 - 4) / 4.0
@@ -415,13 +425,13 @@ class ProductQuantSpec extends SparkSpec {
       (id, (0 until dim).map(j => proto(p, j).toFloat))
     }
     val df = data.toDF("vec_id", "embedding")
-    val opq = ProductQuant.trainOpq(df, "vec_id", "embedding",
+    val opq = ProductQuant.train(df, "vec_id", "embedding",
       dim = dim, m = 2, k = 8, iters = 3, opqIters = 3)
     // 8 protos, k=8 codes per half: reconstruction is exact, so the
     // Procrustes optimum is the identity — the learned rotation must
     // stay at (micro) identity instead of drifting
     val idm = ProductQuant.identityRotation(dim)
-    val maxDev = opq.rotation.zip(idm).flatMap { case (r, e) =>
+    val maxDev = opq.rotation.get.zip(idm).flatMap { case (r, e) =>
       r.zip(e).map { case (a, b) => math.abs(a - b) }
     }.max
     info(s"max |R - I| micro deviation: $maxDev")
@@ -454,21 +464,17 @@ class ProductQuantSpec extends SparkSpec {
     def recallOf(nn: Array[(Long, Long)]): Double =
       truth.intersect(nn.toSet).size.toDouble / truth.size
     val queries = df.filter(col("vec_id") <= 20)
-    val rm = ProductQuant.trainResidual(df, "vec_id", "embedding",
-      dim = dim, m = 8, k = 8, iters = 2, nCells = 32)
-    val rRes = recallOf(ProductQuant.ivfAdcResidualTopK(df, queries,
-        "vec_id", "embedding", dim = dim, rm, k = 3, nProbe = 32)
+    val rm = ProductQuant.train(df, "vec_id", "embedding",
+      dim = dim, m = 8, k = 8, iters = 2, nCells = 32, superProbe = 0)
+    val rRes = recallOf(searchEncoded(rm, df, queries, dim, nProbe = 32)
       .select(col("q_id"), col("c_id")).as[(Long, Long)].collect())
-    val opq = ProductQuant.trainOpq(df, "vec_id", "embedding",
+    val opq = ProductQuant.train(df, "vec_id", "embedding",
       dim = dim, m = 8, k = 8, iters = 2, opqIters = 2)
-    val rotDf = ProductQuant.rotate(df, "vec_id", "embedding", dim,
-      opq.rotation)
-    val rotQ = ProductQuant.rotate(queries, "vec_id", "embedding", dim,
-      opq.rotation)
-    val rrm = ProductQuant.trainResidual(rotDf, "vec_id", "__rv",
-      dim = dim, m = 8, k = 8, iters = 2, nCells = 32)
-    val rRot = recallOf(ProductQuant.ivfAdcResidualTopK(rotDf, rotQ,
-        "vec_id", "__rv", dim = dim, rrm, k = 3, nProbe = 32)
+    // the learned rotation in front of a flat residual index
+    val rrm = ProductQuant.train(df, "vec_id", "embedding",
+      dim = dim, m = 8, k = 8, iters = 2, nCells = 32, superProbe = 0,
+      rotation = opq.rotation)
+    val rRot = recallOf(searchEncoded(rrm, df, queries, dim, nProbe = 32)
       .select(col("q_id"), col("c_id")).as[(Long, Long)].collect())
     info(s"clustered recall@3: opq∘residual $rRot, residual $rRes")
     // measured: 0.850 vs 0.767 — the rotation WINS here too; the
@@ -478,86 +484,39 @@ class ProductQuantSpec extends SparkSpec {
     rRot should be >= rRes - 0.05
   }
 
-  test("assign-only append ≡ batch rebuild: frozen-model encode composes by union") {
-    // the incremental-maintenance contract: encoding an appended batch
-    // with the FROZEN model and unioning onto the stored code relation
-    // is byte-identical to re-encoding old ∪ new — and search over the
-    // appended index equals the one-shot search
-    val emb = graft.Tables.embeddings(spark, sfDir)
-    val old = emb.filter(col("vec_id") > 100)
-    val fresh = emb.filter(col("vec_id") <= 100)
-    val m = ProductQuant.trainResidualTwoLevel(old, "vec_id", "embedding",
-      dim = 64, m = 2, k = 4, iters = 2, nCells = 4)
-    val appended = ProductQuant
-      .encodeResidualTwoLevel(old, "vec_id", "embedding", 64, m)
-      .unionByName(ProductQuant
-        .encodeResidualTwoLevel(fresh, "vec_id", "embedding", 64, m))
-    val rebuilt = ProductQuant
-      .encodeResidualTwoLevel(emb, "vec_id", "embedding", 64, m)
-    appended.except(rebuilt).count() shouldBe 0L
-    rebuilt.except(appended).count() shouldBe 0L
-    val queries = emb.filter(col("vec_id") <= 20)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("q_id", "rank", "c_id", "adc_dist")
-        .as[(Long, Int, Long, Long)].collect().sortBy(r => (r._1, r._2))
-    val viaAppend = rows(ProductQuant.ivfAdcResidualTopKTwoLevelOverCodes(
-      appended, queries, "vec_id", "embedding", 64, m, k = 3))
-    val oneShot = rows(ProductQuant.ivfAdcResidualTopKTwoLevel(
-      emb, queries, "vec_id", "embedding", 64, m, k = 3))
-    viaAppend shouldBe oneShot
-  }
-
-  test("flat residual index serves over a loaded code relation: OverCodes ≡ fused, append ≡ rebuild") {
-    // the API symmetry rule: a loaded FLAT ResidualModel's stored
-    // codes must be searchable without re-encoding the corpus, exactly
-    // as the two-level form already is
-    val emb = graft.Tables.embeddings(spark, sfDir)
-    val old = emb.filter(col("vec_id") > 100)
-    val fresh = emb.filter(col("vec_id") <= 100)
-    val m = ProductQuant.trainResidual(old, "vec_id", "embedding",
-      dim = 64, m = 2, k = 4, iters = 2, nCells = 8)
-    val queries = emb.filter(col("vec_id") <= 20)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("q_id", "rank", "c_id", "adc_dist")
-        .as[(Long, Int, Long, Long)].collect().sortBy(r => (r._1, r._2))
-    val codes = ProductQuant.encodeResidual(emb, "vec_id", "embedding",
-      64, m)
-    rows(ProductQuant.ivfAdcResidualTopKOverCodes(codes, queries,
-      "vec_id", "embedding", 64, m, k = 3)) shouldBe
-      rows(ProductQuant.ivfAdcResidualTopK(emb, queries, "vec_id",
-        "embedding", 64, m, k = 3))
-    // assign-only append: frozen-model encodes union to the rebuild
-    val appended = ProductQuant
-      .encodeResidual(old, "vec_id", "embedding", 64, m)
-      .unionByName(ProductQuant
-        .encodeResidual(fresh, "vec_id", "embedding", 64, m))
-    appended.except(codes).count() shouldBe 0L
-    codes.except(appended).count() shouldBe 0L
-  }
-
-  test("composed OPQ∘residual∘two-level: rotated append ≡ rebuild, OverCodes ≡ fused") {
-    val emb = graft.Tables.embeddings(spark, sfDir)
-    val old = emb.filter(col("vec_id") > 100)
-    val fresh = emb.filter(col("vec_id") <= 100)
-    val m = ProductQuant.trainOpqResidualTwoLevel(old, "vec_id",
-      "embedding", dim = 64, m = 2, k = 4, iters = 2, nCells = 4,
-      opqIters = 2)
-    val appended = ProductQuant
-      .encodeOpqResidualTwoLevel(old, "vec_id", "embedding", 64, m)
-      .unionByName(ProductQuant
-        .encodeOpqResidualTwoLevel(fresh, "vec_id", "embedding", 64, m))
-    val rebuilt = ProductQuant
-      .encodeOpqResidualTwoLevel(emb, "vec_id", "embedding", 64, m)
-    appended.except(rebuilt).count() shouldBe 0L
-    rebuilt.except(appended).count() shouldBe 0L
-    val queries = emb.filter(col("vec_id") <= 20)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("q_id", "rank", "c_id", "adc_dist")
-        .as[(Long, Int, Long, Long)].collect().sortBy(r => (r._1, r._2))
-    rows(ProductQuant.opqResidualTopKTwoLevelOverCodes(appended, queries,
-      "vec_id", "embedding", 64, m, k = 3)) shouldBe
-      rows(ProductQuant.opqResidualTopKTwoLevel(emb, queries, "vec_id",
-        "embedding", 64, m, k = 3))
+  // the incremental-maintenance contract, per index form: encoding an
+  // appended batch with the FROZEN index and unioning onto the stored
+  // code relation is byte-identical to re-encoding old ∪ new — and
+  // search over the appended relation equals search over the rebuild
+  Seq(
+    ("assign-only append ≡ batch rebuild: frozen-model encode composes by union",
+      4, 2, 0),
+    ("flat residual index serves over a loaded code relation: OverCodes ≡ fused, append ≡ rebuild",
+      8, 0, 0),
+    ("composed OPQ∘residual∘two-level: rotated append ≡ rebuild, OverCodes ≡ fused",
+      4, 2, 2)
+  ).foreach { case (name, nCells, superProbe, opqIters) =>
+    test(name) {
+      val emb = graft.Tables.embeddings(spark, sfDir)
+      val old = emb.filter(col("vec_id") > 100)
+      val fresh = emb.filter(col("vec_id") <= 100)
+      val index = ProductQuant.train(old, "vec_id", "embedding", dim = 64,
+        m = 2, k = 4, iters = 2, nCells = nCells, superProbe = superProbe,
+        opqIters = opqIters)
+      def encode(df: org.apache.spark.sql.DataFrame) =
+        ProductQuant.encode(index, df, "vec_id", "embedding", 64)
+      val appended = encode(old).unionByName(encode(fresh))
+      val rebuilt = encode(emb)
+      appended.except(rebuilt).count() shouldBe 0L
+      rebuilt.except(appended).count() shouldBe 0L
+      val queries = emb.filter(col("vec_id") <= 20)
+      def rows(codes: org.apache.spark.sql.DataFrame) =
+        ProductQuant.search(index, codes, queries, "vec_id", "embedding",
+            64, k = 3)
+          .select("q_id", "rank", "c_id", "adc_dist")
+          .as[(Long, Int, Long, Long)].collect().sortBy(r => (r._1, r._2))
+      rows(appended) shouldBe rows(rebuilt)
+    }
   }
 
   test("production lifecycle: trainOpqResidualTwoLevel → save → load → serve ≡ in-memory serve") {
@@ -565,26 +524,20 @@ class ProductQuantSpec extends SparkSpec {
     // (not a fixed rotation), the artifact round-trip, and serving
     // from the loaded model — all three joints must be loss-free
     val emb = graft.Tables.embeddings(spark, sfDir)
-    val trained = ProductQuant.trainOpqResidualTwoLevel(emb, "vec_id",
+    val trained = ProductQuant.train(emb, "vec_id",
       "embedding", dim = 64, m = 2, k = 4, iters = 2, nCells = 4,
       opqIters = 2)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_opq_lifecycle").toString
-    graft.io.VectorIndexArtifacts.saveOpqResidualTwoLevel(spark, dir,
-      trained)
-    val loaded = graft.io.VectorIndexArtifacts
-      .loadOpqResidualTwoLevel(spark, dir)
+    val dir = tempDir("graft_opq_lifecycle").toString
+    graft.io.VectorIndexArtifacts.save(spark, dir, trained)
+    val loaded = graft.io.VectorIndexArtifacts.load(spark, dir)
     // rotation and codebooks round-trip byte-identically; cell SEQ
     // order may differ (cells are id-keyed — serving equality below
     // is the binding contract)
     loaded.rotation shouldBe trained.rotation
-    loaded.inner.pq shouldBe trained.inner.pq
+    loaded.pq shouldBe trained.pq
     val queries = emb.filter(col("vec_id") <= 20)
-    def serve(m: ProductQuant.OpqResidualTwoLevelModel) =
-      ProductQuant.opqResidualTopKTwoLevelOverCodes(
-          ProductQuant.encodeOpqResidualTwoLevel(emb, "vec_id",
-            "embedding", 64, m),
-          queries, "vec_id", "embedding", 64, m, k = 3)
+    def serve(m: ProductQuant.Index) =
+      searchEncoded(m, emb, queries)
         .select("q_id", "rank", "c_id", "adc_dist")
         .as[(Long, Int, Long, Long)].collect().sortBy(r => (r._1, r._2))
     val served = serve(loaded)
@@ -598,12 +551,12 @@ class ProductQuantSpec extends SparkSpec {
     // exact — msr is per-row-equal so the expected value is known
     val cells: KMeans.Model = Seq((1, Seq.fill(64)(0L)))
     val book: KMeans.Model = Seq((1, Seq.fill(32)(0L)))
-    val model = ProductQuant.ResidualModel(cells,
+    val model = ProductQuant.Index(None, Some(Left(cells)),
       ProductQuant.Model(Seq((1, 32), (33, 32)), Seq(book, book)))
     val big = spark.range(0, 2000)
       .select(col("id").as("vec_id"),
         array(Seq.fill(64)(lit(10.0f)): _*).as("embedding"))
-    val rep = ProductQuant.residualDriftReport(model, big, big,
+    val rep = ProductQuant.driftReport(model, big, big,
       "vec_id", "embedding", 64).collect().head
     // per dim: (10·10⁶)² = 10¹⁴; × 64 dims = 6.4e15
     rep.getAs[Long]("base_msr") shouldBe 64L * 100000000000000L
@@ -614,36 +567,36 @@ class ProductQuantSpec extends SparkSpec {
 
   test("drift alarm (two-level): identical batch is 10000bp quiet; shifted data trips retrain") {
     val emb = graft.Tables.embeddings(spark, sfDir)
-    val m = ProductQuant.trainResidualTwoLevel(emb, "vec_id", "embedding",
+    val m = ProductQuant.train(emb, "vec_id", "embedding",
       dim = 64, m = 2, k = 4, iters = 2, nCells = 4)
-    val same = ProductQuant.residualDriftReportTwoLevel(m, emb, emb,
+    val same = ProductQuant.driftReport(m, emb, emb,
       "vec_id", "embedding", 64).collect().head
     same.getAs[Long]("drift_bp") shouldBe 10000L
     same.getAs[Boolean]("retrain") shouldBe false
     val shifted = emb.withColumn("embedding",
       transform(col("embedding"), x => x.cast("double") + lit(0.25)))
-    val drift = ProductQuant.residualDriftReportTwoLevel(m, emb, shifted,
+    val drift = ProductQuant.driftReport(m, emb, shifted,
       "vec_id", "embedding", 64).collect().head
     drift.getAs[Long]("drift_bp") should be > 12500L
     drift.getAs[Boolean]("retrain") shouldBe true
     // empty probe: no evidence, no page
-    val empty = ProductQuant.residualDriftReportTwoLevel(m, emb,
+    val empty = ProductQuant.driftReport(m, emb,
       emb.filter(col("vec_id") < 0), "vec_id", "embedding", 64)
       .collect().head
     empty.getAs[Boolean]("retrain") shouldBe false
   }
 
   test("train: overlapped per-subspace fits == the serial form, bit for bit") {
-    // train() submits its m independent per-subspace Lloyd chains to a
-    // shared pool (guide-§2.6 job overlap); this pin is the contract
-    // that the overlap is pure scheduling — the model must equal the
-    // one produced by fitting the same slices one at a time from one
-    // thread over the same deterministic md5-rank sample. m = 4 so the
-    // pool actually runs fits concurrently (pool size 4).
+    // train() runs its m independent per-subspace Lloyd chains on one
+    // thread each (graft.JobOverlap, guide-§2.6 job overlap); this pin
+    // is the contract that the overlap is pure scheduling — the
+    // codebooks must equal the ones produced by fitting the same
+    // slices one at a time from one thread over the same
+    // deterministic md5-rank sample. m = 4 fits run concurrently.
     val emb = graft.Tables.embeddings(spark, sfDir)
     val dim = 64; val m = 4; val k = 4; val iters = 2
     val parallel = ProductQuant.train(emb, "vec_id", "embedding",
-      dim, m, k, iters)
+      dim, m, k, iters).pq
     val n = math.min(65536, math.max(4096, 64 * k))
     val sample = emb
       .filter(col("embedding").isNotNull &&

@@ -338,10 +338,10 @@ class PlanAuditSpec extends SparkSpec {
     // the pass that shrinks a 10^10-vector index 32-fold must never
     // shuffle the corpus — codebooks are literals in the projection
     val e = graft.Tables.embeddings(spark, sfDir)
-    val model = graft.operators.ProductQuant.train(e, "vec_id",
+    val index = graft.operators.ProductQuant.train(e, "vec_id",
       "embedding", dim = 64, m = 2, k = 4, iters = 1)
     val plan = graft.operators.ProductQuant
-      .encode(e, "vec_id", "embedding", dim = 64, model)
+      .encode(index, e, "vec_id", "embedding", dim = 64)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
     assert(!plan.contains("Join"), plan)
@@ -392,12 +392,15 @@ class PlanAuditSpec extends SparkSpec {
         })
       }.flatten.foldLeft(0)(math.max)
     val e = graft.Tables.embeddings(spark, sfDir)
-    val model = graft.operators.ProductQuant.train(e, "vec_id",
+    val queries = e.filter(org.apache.spark.sql.functions.col("vec_id") <= 5)
+    val index = graft.operators.ProductQuant.train(e, "vec_id",
       "embedding", dim = 64, m = 2, k = 4, iters = 1)
-    val twoLevel = graft.operators.ProductQuant.ivfAdcTopKTwoLevel(
-      e, e.filter(org.apache.spark.sql.functions.col("vec_id") <= 5),
-      "vec_id", "embedding", dim = 64, model, k = 3, nCells = 64,
-      nProbe = 2, superProbe = 2, ivfIters = 1)
+    val twoLevel = graft.operators.ProductQuant.search(index,
+      graft.operators.ProductQuant.encode(index, e, "vec_id", "embedding", 64),
+      queries, "vec_id", "embedding", dim = 64, k = 3,
+      cells = Some(graft.operators.Similarity.ivfCellsTwoLevel(e, "vec_id",
+        "embedding", nCells = 64, nProbe = 2, superProbe = 2, iters = 1)
+        .localCheckpoint()))
     // largest model literal: max(super model 8, PQ codebook k=4) = 8
     maxOuterArrayLit(twoLevel) should be <= 8
     // the flat trained quantizer's assignment used to plant a
@@ -417,12 +420,12 @@ class PlanAuditSpec extends SparkSpec {
     // the residual ∘ two-level composition (q178) holds the same bound:
     // residuals come from a broadcast JOIN on the cell id, never an
     // element_at over a K-sized literal
-    val rtl = graft.operators.ProductQuant.trainResidualTwoLevel(
+    val rtl = graft.operators.ProductQuant.train(
       e, "vec_id", "embedding", dim = 64, m = 2, k = 4, iters = 1,
       nCells = 64, cellIters = 1)
-    val rPlan = graft.operators.ProductQuant.ivfAdcResidualTopKTwoLevel(
-      e, e.filter(org.apache.spark.sql.functions.col("vec_id") <= 5),
-      "vec_id", "embedding", dim = 64, rtl, k = 3)
+    val rPlan = graft.operators.ProductQuant.search(rtl,
+      graft.operators.ProductQuant.encode(rtl, e, "vec_id", "embedding", 64),
+      queries, "vec_id", "embedding", dim = 64, k = 3)
     maxOuterArrayLit(rPlan) should be <= 8
   }
 
@@ -721,7 +724,7 @@ class PlanAuditSpec extends SparkSpec {
       .toDF("rec_id", "kind", "url", "text", "payload")
       .withColumn("mtime", lit("2026-01-02 03:04:05").cast("timestamp"))
       .localCheckpoint(true)
-    val dir = java.nio.file.Files.createTempDirectory("plan_q212")
+    val dir = tempDir("plan_q212")
     val (hb, hs) = graft.operators.TextIndex.buildIndex(
       Seq((100L, "completely unrelated archival seed material about " +
         "ancient trade routes crossing the mountain passes in winter"))

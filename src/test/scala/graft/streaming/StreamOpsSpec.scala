@@ -5,7 +5,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 class StreamOpsSpec extends SparkSpec {
@@ -17,7 +16,7 @@ class StreamOpsSpec extends SparkSpec {
     df.writeStream
       .format("memory").queryName(name).outputMode(mode)
       .option("checkpointLocation",
-        Files.createTempDirectory(s"ckpt_$name").toString)
+        tempDir(s"ckpt_$name").toString)
       .start()
 
   test("tumbling agg (update mode): revenue/visitors/purchases/aov per window") {
@@ -121,7 +120,7 @@ class StreamOpsSpec extends SparkSpec {
 
   test("dedup-on-ingest drops docs already fingerprinted in the static index") {
     implicit val ctx = spark.sqlContext
-    val indexDir = Files.createTempDirectory("corpus_index").toString
+    val indexDir = tempDir("corpus_index").toString
     // static corpus index: fingerprints of two known docs (one stored
     // with different whitespace/case — fingerprint normalizes)
     Seq("known doc one", "KNOWN   doc two")
@@ -291,7 +290,7 @@ class StreamOpsSpec extends SparkSpec {
     val emb = graft.Tables.embeddings(spark, sfDir)
     // the frozen index: trained on the "historical" corpus only
     val old = emb.filter(col("vec_id") > 100)
-    val model = ProductQuant.trainResidualTwoLevel(old, "vec_id",
+    val model = ProductQuant.train(old, "vec_id",
       "embedding", dim = 64, m = 2, k = 4, iters = 2, nCells = 4)
     val arriving = emb.filter(col("vec_id") <= 100)
       .select(col("vec_id"), col("embedding"))
@@ -306,7 +305,7 @@ class StreamOpsSpec extends SparkSpec {
           .as[(Long, Int, Seq[Int])].collect()
       }
       .option("checkpointLocation",
-        Files.createTempDirectory("ckpt_idx_append").toString)
+        tempDir("ckpt_idx_append").toString)
       .start()
     try {
       in.addData(batch1.toSeq); q.processAllAvailable()
@@ -319,16 +318,16 @@ class StreamOpsSpec extends SparkSpec {
     val streamed = appendedBatches.flatten.toSeq
       .toDF("c_id", "cell", "codes")
     val accumulated = ProductQuant
-      .encodeResidualTwoLevel(old, "vec_id", "embedding", 64, model)
+      .encode(model, old, "vec_id", "embedding", 64)
       .unionByName(streamed)
     val queries = emb.filter(col("vec_id") <= 20)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("q_id", "rank", "c_id", "adc_dist")
+    def rows(codes: org.apache.spark.sql.DataFrame) =
+      ProductQuant.search(model, codes, queries, "vec_id", "embedding", 64,
+          k = 3)
+        .select("q_id", "rank", "c_id", "adc_dist")
         .as[(Long, Int, Long, Long)].collect().sortBy(r => (r._1, r._2))
-    rows(ProductQuant.ivfAdcResidualTopKTwoLevelOverCodes(accumulated,
-      queries, "vec_id", "embedding", 64, model, k = 3)) shouldBe
-      rows(ProductQuant.ivfAdcResidualTopKTwoLevel(emb, queries,
-        "vec_id", "embedding", 64, model, k = 3))
+    rows(accumulated) shouldBe
+      rows(ProductQuant.encode(model, emb, "vec_id", "embedding", 64))
   }
 
   test("mid-stream index append in the ROTATED domain: OPQ∘residual∘two-level stays ≡ batch rebuild") {
@@ -340,7 +339,7 @@ class StreamOpsSpec extends SparkSpec {
     implicit val ctx = spark.sqlContext
     val emb = graft.Tables.embeddings(spark, sfDir)
     val old = emb.filter(col("vec_id") > 100)
-    val model = ProductQuant.trainOpqResidualTwoLevel(old, "vec_id",
+    val model = ProductQuant.train(old, "vec_id",
       "embedding", dim = 64, m = 2, k = 4, iters = 2, nCells = 4,
       opqIters = 2)
     val arriving = emb.filter(col("vec_id") <= 100)
@@ -350,13 +349,13 @@ class StreamOpsSpec extends SparkSpec {
     val in = MemoryStream[(Long, Seq[Float])]
     val appendedBatches = scala.collection.mutable.ArrayBuffer
       .empty[Array[(Long, Int, Seq[Int])]]
-    val q = StreamOps.opqIndexAppendEachBatch(
+    val q = StreamOps.indexAppendEachBatch(
         in.toDF().toDF("vec_id", "embedding"), model) { (codes, _) =>
         appendedBatches += codes.select("c_id", "cell", "codes")
           .as[(Long, Int, Seq[Int])].collect()
       }
       .option("checkpointLocation",
-        Files.createTempDirectory("ckpt_opq_append").toString)
+        tempDir("ckpt_opq_append").toString)
       .start()
     try {
       in.addData(batch1.toSeq); q.processAllAvailable()
@@ -366,19 +365,19 @@ class StreamOpsSpec extends SparkSpec {
     val streamed = appendedBatches.flatten.toSeq
       .toDF("c_id", "cell", "codes")
     val accumulated = ProductQuant
-      .encodeOpqResidualTwoLevel(old, "vec_id", "embedding", 64, model)
+      .encode(model, old, "vec_id", "embedding", 64)
       .unionByName(streamed)
     val queries = emb.filter(col("vec_id") <= 20)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("q_id", "rank", "c_id", "adc_dist")
+    def rows(codes: org.apache.spark.sql.DataFrame) =
+      ProductQuant.search(model, codes, queries, "vec_id", "embedding", 64,
+          k = 3)
+        .select("q_id", "rank", "c_id", "adc_dist")
         .as[(Long, Int, Long, Long)].collect().sortBy(r => (r._1, r._2))
-    rows(ProductQuant.opqResidualTopKTwoLevelOverCodes(accumulated,
-      queries, "vec_id", "embedding", 64, model, k = 3)) shouldBe
-      rows(ProductQuant.opqResidualTopKTwoLevel(emb, queries,
-        "vec_id", "embedding", 64, model, k = 3))
+    rows(accumulated) shouldBe
+      rows(ProductQuant.encode(model, emb, "vec_id", "embedding", 64))
     // the live drift alarm on the arriving data: same-distribution
     // batches stay quiet in the rotated domain too
-    val rep = ProductQuant.opqResidualDriftReportTwoLevel(model, old,
+    val rep = ProductQuant.driftReport(model, old,
       emb.filter(col("vec_id") <= 100), "vec_id", "embedding", 64)
       .collect().head
     rep.getAs[Boolean]("retrain") shouldBe false
